@@ -1,7 +1,7 @@
 package graft.images
 
 import graft.io.Sinks
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end image pipelines (reference entry points A and B, SURVEY.md §3):
@@ -11,9 +11,11 @@ import org.apache.spark.sql.functions._
   * Spark-first shape: one `binaryFile` scan per pipeline; dims come from a
   * header-only UDF (no pixel decode until a kernel needs pixels); grid
   * geometry is pure column arithmetic (Geometry); only cropEncode touches
-  * pixels. Filters route rows to multiple outputs from one cached lineage —
-  * the reference's `shutil.move` mutation becomes side-effect-free writes
-  * (`/root/reference/modules/filter_crop.py:49-63` → two filtered writes).
+  * pixels. Each pipeline is ONE write pass: every output file of a row
+  * (tile + caption sidecar, cropped image + advice) is a row of one frame
+  * that a single sink call writes and counts — the reference's
+  * `shutil.move` mutation becomes side-effect-free writes
+  * (`modules/filter_crop.py:49-63`).
   */
 object Tiling {
 
@@ -100,7 +102,9 @@ object Tiling {
       .withColumn("caption", lit(p.caption))
   }
 
-  /** K1/K2 write action: tiles + caption sidecars into an empty folder.
+  /** K1/K2 write action: tiles + caption sidecars into an empty folder,
+    * one sink pass; returns the number of tiles written. A sidecar is
+    * written next to every written tile when the caption is not blank.
     * Runs under a cancellable job group (C1): `graft.Jobs.cancel(spark,
     * jobGroup)` from any thread aborts the in-flight tiling — the
     * reference's stop_process() for its flagship long-running job
@@ -114,18 +118,16 @@ object Tiling {
       if (jobGroup.nonEmpty) jobGroup else graft.Jobs.uniqueGroup("graft-tiling"),
       s"tile $inDir -> $outDir") {
       Sinks.requireEmptyDir(outDir)
-      val t = tiles(scanImages(spark, inDir), p).cache()
-      try {
-        val ok = t.filter(col("data").isNotNull)
-        val n = ok.count()
-        Sinks.writeFilePerRow(ok, outDir)
-        if (p.caption.trim.nonEmpty)
-          Sinks.writeTextPerRow(
-            ok.withColumn("sidecar",
-              regexp_replace(col("file_name"), "\\.[^.]+$", ".txt")),
-            outDir, fileCol = "sidecar", textCol = "caption")
-        n
-      } finally { t.unpersist(); () }
+      val t = tiles(scanImages(spark, inDir), p)
+      if (p.caption.trim.isEmpty) Sinks.writeFilePerRow(t, outDir)
+      else {
+        val caption = lit(p.caption.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val sidecar = struct(
+          regexp_replace(col("file_name"), "\\.[^.]+$", ".txt").as("file_name"),
+          when(col("data").isNotNull, caption).as("data"))
+        Sinks.writeFilePerRow(t.select(inline(array(
+          struct(col("file_name"), col("data")), sidecar))), outDir) / 2
+      }
     }
 
   /** F2 + M3: split one scan into compatible / incompatible, with
@@ -144,57 +146,45 @@ object Tiling {
         lit("\nCrop from the center to keep the subject.\nThen re-run the compatibility filter.")))
   }
 
-  /** Entry point B as one job: compatible rows pass through untouched,
-    * incompatible rows are center-cropped to the recommended dims (M2) and
-    * written next to their advice files. */
+  /** Entry point B as one write pass: compatible rows pass through
+    * untouched, incompatible rows are center-cropped to the recommended
+    * dims (M2) and written next to their advice files. The crop runs only
+    * on incompatible rows (the `when` branch). Returns the (compatible,
+    * incompatible) counts of the decodable images, observed on the
+    * header-only dims during the same pass. */
   def prepareImages(spark: SparkSession, inDir: String, outDir: String,
                     tile: Int, overlap: Double, fmt: String = "png"): (Long, Long) = {
     Sinks.requireEmptyDir(outDir)
-    val c = compatibility(scanImages(spark, inDir), tile, overlap).cache()
-    try {
-      val good = c.filter(!col("incompatible"))
-        .select(regexp_extract(col("path"), "([^/]+)$", 1).as("file_name"), col("content").as("data"))
-      val cropped = c.filter(col("incompatible"))
-        .withColumn("crop_left", ((col("width") - col("rec_w")) / 2).cast("int"))
-        .withColumn("crop_top", ((col("height") - col("rec_h")) / 2).cast("int"))
-        .select(
-          format_string("%s_cropped." + fmt, stem(col("path"))).as("file_name"),
-          ImageCodec.cropEncode(col("content"),
-            col("crop_left"), col("crop_top"),
-            (col("crop_left") + col("rec_w")).cast("int"),
-            (col("crop_top") + col("rec_h")).cast("int"),
-            col("rec_w").cast("int"), lit("none"), lit(fmt), lit(85)).as("data"))
-      val advice = c.filter(col("incompatible"))
-        .select(format_string("%s.txt", stem(col("path"))).as("file_name"),
-          col("advice").as("text"))
-      Sinks.writeFilePerRow(good, outDir)
-      Sinks.writeFilePerRow(cropped, outDir)
-      Sinks.writeTextPerRow(advice, outDir, fileCol = "file_name", textCol = "text")
-      (c.filter(!col("incompatible")).count(), c.filter(col("incompatible")).count())
-    } finally { c.unpersist(); () }
+    val counts = Observation()
+    val c = compatibility(scanImages(spark, inDir), tile, overlap)
+      .observe(counts, count_if(!col("incompatible")).as("good"),
+        count_if(col("incompatible")).as("bad"))
+    val cropLeft = ((col("width") - col("rec_w")) / 2).cast("int")
+    val cropTop = ((col("height") - col("rec_h")) / 2).cast("int")
+    val good = struct(
+      regexp_extract(col("path"), "([^/]+)$", 1).as("file_name"), col("content").as("data"))
+    val cropped = struct(
+      format_string("%s_cropped." + fmt, stem(col("path"))).as("file_name"),
+      ImageCodec.cropEncode(col("content"), cropLeft, cropTop,
+        (cropLeft + col("rec_w")).cast("int"), (cropTop + col("rec_h")).cast("int"),
+        col("rec_w").cast("int"), lit("none"), lit(fmt), lit(85)).as("data"))
+    val advice = struct(
+      format_string("%s.txt", stem(col("path"))).as("file_name"),
+      encode(col("advice"), "UTF-8").as("data"))
+    Sinks.writeFilePerRow(c.select(inline(
+      when(col("incompatible"), array(cropped, advice)).otherwise(array(good)))), outDir)
+    val m = counts.get
+    (m("good").asInstanceOf[Long], m("bad").asInstanceOf[Long])
   }
 
-  /** M1: batch format conversion (reference other_tasks.py:28-67). */
+  /** M1: batch format conversion (reference other_tasks.py:28-67), one
+    * write pass; returns the number of images decoded and written. */
   def convertImages(spark: SparkSession, inDir: String, outDir: String,
                     toFmt: String, quality: Int = 85): Long = {
     Sinks.requireEmptyDir(outDir)
     val ext = toFmt.toLowerCase(java.util.Locale.ROOT)
-    val out = scanImages(spark, inDir)
+    Sinks.writeFilePerRow(scanImages(spark, inDir)
       .select(format_string("%s." + ext, stem(col("path"))).as("file_name"),
-        ImageCodec.transcode(col("content"), lit(ext), lit(quality)).as("data"))
-      .cache()
-    try {
-      Sinks.writeFilePerRow(out, outDir)
-      out.filter(col("data").isNotNull).count()
-    } finally { out.unpersist(); () }
-  }
-
-  /** Caption attach by filename stem (the reference's only join, §1.2):
-    * tiny caption table broadcast against the tile stream. */
-  def attachCaptions(tilesDf: DataFrame, captions: DataFrame): DataFrame = {
-    val keyed = captions.select(col("stem").as("cap_stem"), col("caption"))
-    tilesDf.withColumn("stem", stem(col("file_name")))
-      .join(broadcast(keyed), col("stem") === col("cap_stem"), "left")
-      .drop("cap_stem")
+        ImageCodec.transcode(col("content"), lit(ext), lit(quality)).as("data")), outDir)
   }
 }

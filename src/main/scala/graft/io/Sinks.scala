@@ -1,9 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.functions._
 
 import java.io.IOException
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import scala.jdk.CollectionConverters._
@@ -12,8 +12,8 @@ import scala.jdk.CollectionConverters._
   *
   * Spark's writers emit part-files; the reference emits ONE file per row
   * (tile images + caption sidecars, `/root/reference/modules/tiling.py:64-75`).
-  * `writeFilePerRow` does that with a foreachPartition action — executors
-  * write concurrently, nothing funnels through the driver. Destinations are
+  * `writeFilePerRow` does that with one mapPartitions action — executors
+  * write concurrently and return only their file counts. Destinations are
   * computed per-row upstream, so routing (e.g. compatible vs incompatible
   * folders, `filter_crop.py:49-63`) is a column, not a mutation of inputs.
   */
@@ -32,14 +32,17 @@ object Sinks {
   }
 
   /** One file per row: df must have (fileName STRING, data BINARY) columns.
-    * Rows with null data (decode failures upstream) are skipped — the
-    * reference's per-file try/except-continue. */
+    * Rows with a null name or null data (decode failures upstream) are
+    * skipped — the reference's per-file try/except-continue. Returns the
+    * number of files written, counted by the same job that writes them:
+    * each partition yields its count, summed after `collect`. */
   def writeFilePerRow(df: DataFrame, outDir: String,
-                      fileCol: String = "file_name", dataCol: String = "data"): Unit = {
+                      fileCol: String = "file_name", dataCol: String = "data"): Long = {
     val out = outDir // avoid capturing `this`
-    df.select(fileCol, dataCol).foreachPartition { (rows: Iterator[Row]) =>
+    df.select(fileCol, dataCol).mapPartitions { (rows: Iterator[Row]) =>
       val base = Paths.get(out)
       Files.createDirectories(base)
+      var written = 0L
       rows.foreach { r =>
         val name = r.getString(0)
         val data = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
@@ -47,31 +50,24 @@ object Sinks {
           val target = base.resolve(name).normalize()
           require(target.startsWith(base), s"path escape: $name")
           Files.write(target, data)
+          written += 1
         }
       }
-    }
+      Iterator.single(written)
+    }(Encoders.scalaLong).collect().sum
   }
 
-  /** Sidecar text files: (fileName STRING, text STRING); blank text rows are
-    * skipped (reference writes captions only when non-empty,
-    * `tiling.py:71-75`). */
+  /** Java `String.trim` non-emptiness as a column: some char above U+0020. */
+  private def nonBlank(text: Column): Column =
+    length(regexp_replace(text, "[\\x00-\\x20]", "")) > 0
+
+  /** Sidecar text files: (fileName STRING, text STRING) written as UTF-8;
+    * blank text rows are skipped (reference writes captions only when
+    * non-empty, `tiling.py:71-75`). Returns the number of files written. */
   def writeTextPerRow(df: DataFrame, outDir: String,
-                      fileCol: String = "file_name", textCol: String = "text"): Unit = {
-    val out = outDir
-    df.select(fileCol, textCol).foreachPartition { (rows: Iterator[Row]) =>
-      val base = Paths.get(out)
-      Files.createDirectories(base)
-      rows.foreach { r =>
-        val name = r.getString(0)
-        val text = if (r.isNullAt(1)) null else r.getString(1)
-        if (name != null && text != null && text.trim.nonEmpty) {
-          val target = base.resolve(name).normalize()
-          require(target.startsWith(base), s"path escape: $name")
-          Files.write(target, text.getBytes(StandardCharsets.UTF_8))
-        }
-      }
-    }
-  }
+                      fileCol: String = "file_name", textCol: String = "text"): Long =
+    writeFilePerRow(df.select(col(fileCol).as("file_name"),
+      when(nonBlank(col(textCol)), encode(col(textCol), "UTF-8")).as("data")), outDir)
 
   /** Reference K5 ZIP sink (`tiling.py:96-108`): zip every file in a folder,
     * flattened arcnames, excluding the zip itself. Driver-side packaging of
@@ -116,7 +112,6 @@ object Sinks {
     * the text sink add the terminating newline. */
   def writeChunkedText(df: DataFrame, outDir: String,
                        chunkCol: String = "chunk", textCol: String = "value"): Unit = {
-    import org.apache.spark.sql.functions.{col, concat, lit}
     df.select(col(chunkCol), concat(col(textCol), lit("\n")).as(textCol))
       .write.mode("errorifexists").partitionBy(chunkCol).text(outDir)
   }
@@ -147,7 +142,6 @@ object Sinks {
     * shards are dropped under writeTextPerRow's non-blank guard, same
     * accounting rule as [[writePackedShards]]. */
   def writeTrainingShards(ordered: DataFrame, outDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val shards = ordered
       .groupBy(col("shard_id"))
       .agg(count(lit(1)).as("n_docs"),
@@ -158,18 +152,15 @@ object Sinks {
           "\n\n").as("shard_text"))
       .withColumn("shard_file",
         concat(lit("train_shard"), col("shard_id"), lit(".txt")))
-      .filter(length(regexp_replace(col("shard_text"), "[\\x00-\\x20]", "")) > 0)
+      .filter(nonBlank(col("shard_text")))
       .localCheckpoint(true)
-    writeTextPerRow(
-      shards.select(col("shard_file"), col("shard_text")),
-      outDir, fileCol = "shard_file", textCol = "shard_text")
+    writeTextPerRow(shards, outDir, fileCol = "shard_file", textCol = "shard_text")
     shards.select(col("shard_id"), col("shard_file"), col("n_docs"), col("first_doc"))
       .orderBy(col("shard_id"))
   }
 
   def writePackedShards(docs: DataFrame, outDir: String,
                         tokensPerShard: Long): DataFrame = {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
     val toks = graft.text.TextOps.tokens(col("text"))
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
@@ -195,14 +186,10 @@ object Sinks {
       // still appearing in the manifest: a manifest row pointing at a file
       // that does not exist. Such shards carry zero tokens, so dropping
       // them keeps the manifest's token accounting exact AND every listed
-      // file real (spec asserts both). The predicate must match the
-      // guard's JAVA trim (all chars ≤ U+0020, not Spark trim's spaces):
-      // "contains any char above U+0020".
-      .filter(length(regexp_replace(col("shard_text"), "[\\x00-\\x20]", "")) > 0)
+      // file real (spec asserts both). Same predicate as the guard.
+      .filter(nonBlank(col("shard_text")))
       .localCheckpoint(true)
-    writeTextPerRow(
-      shards.select(col("shard_file"), col("shard_text")),
-      outDir, fileCol = "shard_file", textCol = "shard_text")
+    writeTextPerRow(shards, outDir, fileCol = "shard_file", textCol = "shard_text")
     shards.select(col("source"), col("bin_id"), col("shard_file"),
         col("n_docs"), col("n_tokens"), col("first_doc"), col("last_doc"))
       .orderBy(col("source"), col("bin_id"))

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.io.Sinks
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -19,13 +20,31 @@ import org.apache.spark.sql.functions._
   * everywhere. Inputs are assumed newline-terminated (POSIX text files) —
   * the reference's own outputs always are.
   *
-  * Scale shape: all three run as distributed plans until the final
+  * Scale shape: merge and dedup run as distributed plans until the final
   * single-file materialization, which is inherent to the reference's
   * one-file output contract (`writeFilePerRow` writes from executors;
   * per-file payloads are bounded by the merge guard's reasoning —
-  * see TextOps.requireBoundedGroups).
+  * see TextOps.requireBoundedGroups). Split reads ONE file as one
+  * wholetext row and cuts it where it lies, so it is one task and one job.
   */
 object FileWorkflows {
+
+  /** The one-file contract of dedup and split: their line ids and chunk
+    * numbers are ordinals within ONE file, so a directory or a glob
+    * matching several files would collide them. Returns that file's
+    * status; fails naming the path otherwise. */
+  private def requireOneFile(spark: SparkSession, path: String): FileStatus = {
+    val p = new Path(path)
+    val matches = Option(p.getFileSystem(spark.sparkContext.hadoopConfiguration).globStatus(p))
+      .getOrElse(Array.empty[FileStatus])
+    matches match {
+      case Array(one) if one.isFile => one
+      case Array(_) => throw new IllegalArgumentException(
+        s"$path is a directory; expected exactly one regular file")
+      case _ => throw new IllegalArgumentException(
+        s"$path matches ${matches.length} paths; expected exactly one regular file")
+    }
+  }
 
   /** `input_file_name()` is a percent-ENCODED URI — sorting it directly
     * would order `a b.txt` after `a!b.txt` (%20 > !). Decode to the real
@@ -61,7 +80,7 @@ object FileWorkflows {
     // Like any listing-based bound, files appended between this check
     // and the merge read escape it — same TOCTOU window the reference's
     // sequential loop has.
-    val globPath = new org.apache.hadoop.fs.Path(glob)
+    val globPath = new Path(glob)
     val fs = globPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val statuses = Option(fs.globStatus(globPath)).getOrElse(Array.empty)
     // Names HIDDEN to Spark's file reader are skipped even when the glob
@@ -75,7 +94,7 @@ object FileWorkflows {
     // exempts `_metadata*`, but such files are still excluded as DATA, so
     // they must not count toward the bound (a spec plants one and proves
     // the reader skips it); `_`-names containing '=' ARE data and count.
-    def hidden(p: org.apache.hadoop.fs.Path): Boolean = {
+    def hidden(p: Path): Boolean = {
       val n = p.getName
       (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
     }
@@ -102,8 +121,9 @@ object FileWorkflows {
 
   /** First-occurrence line dedup of one text file into
     * `outDir/{name}_purged{ext}` — the reference's `seen`-set loop as a
-    * hash aggregate + order restore. */
+    * hash aggregate + order restore. `inFile` must be exactly one file. */
   def removeDuplicatesFile(spark: SparkSession, inFile: String, outDir: String): String = {
+    requireOneFile(spark, inFile)
     Sinks.requireEmptyDir(outDir)
     val base = new java.io.File(inFile).getName
     val dot = base.lastIndexOf('.')
@@ -126,43 +146,36 @@ object FileWorkflows {
   /** Split one text file into `outDir/split_{k}.txt` chunks: the
     * reference counts +2 per record (record + blank line) and rolls the
     * file at `linesPerFile`, i.e. ceil(linesPerFile/2) records per chunk;
-    * every record is written as `line + "\n\n"`. Distributed row
-    * numbering via Dist.globalRowNumber — no single-partition sort.
+    * every record is written as `line + "\n\n"`. The file is one
+    * wholetext row, so chunk k is the slice of its line array starting at
+    * line k·perChunk — one pass, no numbering shuffle. Returns the number
+    * of files written.
     *
     * Exact-fill quirk, matched byte-for-byte: when the last record
     * exactly fills a chunk (or the input is empty), the reference's
     * rollover has already opened the NEXT file, so an empty
     * `split_{k+1}.txt` exists on disk and is counted in the result
     * (`other_tasks.py:88-95`: the counter resets, `file_count` is
-    * incremented and the file is opened before the loop ends). */
+    * incremented and the file is opened before the loop ends). Hence
+    * n div perChunk + 1 chunks for n lines, the last one possibly empty. */
   def splitTextFile(spark: SparkSession, inFile: String, outDir: String,
                     linesPerFile: Int): Long = {
+    val file = requireOneFile(spark, inFile)
     Sinks.requireEmptyDir(outDir)
     val perChunk = math.max(1, math.ceil(linesPerFile / 2.0).toInt)
-    val lines = TextOps.linesWithIds(spark, inFile)
-    // chunk count from one cheap line count — NOT chunks.count(), which
-    // would re-execute the whole numbering/grouping pipeline post-write
-    val nLines = lines.count()
-    val fileCount =
-      if (nLines % perChunk == 0) nLines / perChunk + 1 // incl. empty input
-      else (nLines + perChunk - 1) / perChunk
-    val numbered = graft.Dist.globalRowNumber(lines, col("line_id"))
-    val chunks = numbered
-      .withColumn("chunk", expr(s"(rn - 1) div $perChunk"))
-      .groupBy(col("chunk"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("rn"), col("value")))),
-          x => concat(x.getField("value"), lit("\n\n"))),
-        "").as("body"))
-      .select(format_string("split_%d.txt", col("chunk") + 1).as("file_name"),
-        encode(col("body"), "UTF-8").as("data"))
-    val withTrailing =
-      if (nLines % perChunk == 0)
-        chunks.union(spark.range(1).select(
-          lit(s"split_$fileCount.txt").as("file_name"),
-          lit(Array.empty[Byte]).as("data")))
-      else chunks
-    Sinks.writeFilePerRow(withTrailing, outDir)
-    fileCount
+    val chunks =
+      if (file.getLen == 0) // Spark's file sources skip an empty file
+        spark.range(1).select(lit("split_1.txt").as("file_name"),
+          lit(Array.emptyByteArray).as("data"))
+      else spark.read.option("wholetext", "true").text(inFile)
+        .select(TextOps.fileLines(col("value")).as("lines"))
+        .select(col("lines"),
+          explode(sequence(lit(0), expr(s"size(lines) div $perChunk").cast("int"))).as("chunk"))
+        .select(format_string("split_%d.txt", col("chunk") + 1).as("file_name"),
+          // records + one empty string: "a\n\nb\n\n" for [a, b], "" for []
+          encode(array_join(concat(
+            slice(col("lines"), col("chunk") * perChunk + 1, lit(perChunk)),
+            array(lit(""))), "\n\n"), "UTF-8").as("data"))
+    Sinks.writeFilePerRow(chunks, outDir)
   }
 }

@@ -29,19 +29,22 @@ object TextOps {
   def tokens(c: Column): Column =
     filter(split(c, "\\s+"), t => t =!= lit(""))
 
+  /** A wholetext file's lines: one trailing newline is stripped (a final
+    * "\n" does not open an empty last line, matching line-iterator
+    * semantics) and the rest is split on "\n". */
+  private[text] def fileLines(text: Column): Column =
+    split(regexp_replace(text, "\n$", ""), "\n", -1)
+
   /** Raw text files → (file, line_id, value) with DETERMINISTIC line ids.
     * `spark.read.text` + a partition-unordered window would number lines
     * nondeterministically when a file splits across partitions; reading
-    * wholetext and exploding keeps exact in-file order. One trailing
-    * newline is stripped (a final "\n" does not open an empty last line,
-    * matching line-iterator semantics). Memory is bounded per FILE — for
-    * multi-GB single files switch to an offset-carrying datasource; for
-    * the reference's folder-of-small-files model this is the right
-    * trade. */
+    * wholetext and exploding keeps exact in-file order (see [[fileLines]]).
+    * Memory is bounded per FILE — for multi-GB single files switch to an
+    * offset-carrying datasource; for the reference's folder-of-small-files
+    * model this is the right trade. */
   def linesWithIds(spark: SparkSession, globPath: String): DataFrame =
     spark.read.option("wholetext", "true").text(globPath)
-      .select(input_file_name().as("file"),
-        posexplode(split(regexp_replace(col("value"), "\n$", ""), "\n", -1)))
+      .select(input_file_name().as("file"), posexplode(fileLines(col("value"))))
       .select(col("file"), col("pos").cast("long").as("line_id"),
         col("col").as("value"))
 

@@ -18,17 +18,19 @@ class SessionMemoSpec extends AnyFunSuite {
   }
 
   test("named memos report build seconds; cached hits and unnamed memos do not") {
-    SessionMemos.drainBuildSecs() // isolate from other suites' builds
+    // other suites may record their own memos concurrently: assert on this
+    // spec's key only, never on the global key set
     val named = new SessionMemo[String, Int]("spec_probe")
     val anon = new SessionMemo[String, Int]
     named.getOrCompute("a")(_ => 1)
-    named.getOrCompute("a")(_ => 1) // cached: must not re-record
     named.getOrCompute("b")(_ => 2) // second key: accumulates on the same name
     anon.getOrCompute("a")(_ => 1)
     val secs = SessionMemos.drainBuildSecs()
-    assert(secs.keySet == Set("spec_probe"), s"unexpected entries: $secs")
-    assert(secs("spec_probe") >= 0.0)
-    assert(SessionMemos.drainBuildSecs().isEmpty, "drain must clear")
+    assert(secs.get("spec_probe").exists(_ >= 0.0), s"spec_probe missing: $secs")
+    assert(!secs.contains(""), s"the unnamed memo recorded: $secs")
+    named.getOrCompute("a")(_ => 1) // cached: must not re-record
+    assert(!SessionMemos.drainBuildSecs().contains("spec_probe"),
+      "the drain did not clear, or a cached hit recorded")
   }
 
   test("key growth is bounded: the cap clears, old keys rebuild, size stays <= cap") {

@@ -13,22 +13,7 @@ import scala.jdk.CollectionConverters._
 /** End-to-end pixel pipeline on synthetic PNGs (FIXTURES.md §B1): gradient
   * images make every crop/pad decision visible in the output pixels. */
 class TilingSpec extends SparkSpec {
-
-  /** Deterministic gradient: pixel(x,y) = rgb(x%256, y%256, (x+y)%256). */
-  private def gradientPng(w: Int, h: Int): Array[Byte] = {
-    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w)
-      img.setRGB(x, y, ((x % 256) << 16) | ((y % 256) << 8) | ((x + y) % 256))
-    val out = new ByteArrayOutputStream()
-    ImageIO.write(img, "png", out)
-    out.toByteArray
-  }
-
-  private def tmpDirWith(files: (String, Array[Byte])*): Path = {
-    val dir = Files.createTempDirectory("graft-img")
-    files.foreach { case (n, b) => Files.write(dir.resolve(n), b) }
-    dir
-  }
+  import TilingSpec._
 
   private def px(img: BufferedImage, x: Int, y: Int): (Int, Int, Int) = {
     val rgb = img.getRGB(x, y)
@@ -104,6 +89,12 @@ class TilingSpec extends SparkSpec {
     assert(names == Set("w_tile_0_0.png", "w_tile_1_0.png",
       "w_tile_0_0.txt", "w_tile_1_0.txt"))
     assert(Files.readString(out.resolve("w_tile_0_0.txt")) == "a test caption")
+    // a blank caption writes no sidecars, and the count is still of tiles
+    val bare = Files.createTempDirectory("graft-out-bare")
+    assert(Tiling.writeTiles(spark, in.toString, bare.toString,
+      Tiling.TileParams(tileSize = 64, caption = " \t")) == 2)
+    assert(Files.list(bare).iterator().asScala.map(_.getFileName.toString).toSet ==
+      Set("w_tile_0_0.png", "w_tile_1_0.png"))
     // K6: second run into the now-non-empty folder must refuse
     intercept[java.io.IOException] {
       Tiling.writeTiles(spark, in.toString, out.toString, Tiling.TileParams(tileSize = 64))
@@ -118,8 +109,10 @@ class TilingSpec extends SparkSpec {
   test("prepareImages routes compatible/incompatible and center-crops") {
     // tile=64 overlap=0.25 → step=48: 160x112 compatible ((96)%48==0 && (48)%48==0);
     // 150x100 incompatible → recommended 112x64? ((150-64)//48)*48+64=112, ((100-64)//48)*48+64=64
+    // a PNG cut inside its header has no dims: counted nowhere, written nowhere
     val in = tmpDirWith("good.png" -> gradientPng(160, 112),
-                        "bad.png" -> gradientPng(150, 100))
+                        "bad.png" -> gradientPng(150, 100),
+                        "trunc.png" -> gradientPng(150, 100).take(20))
     val out = Files.createTempDirectory("graft-prep")
     val (nGood, nBad) = Tiling.prepareImages(spark, in.toString, out.toString, 64, 0.25)
     assert((nGood, nBad) == (1L, 1L))
@@ -130,13 +123,18 @@ class TilingSpec extends SparkSpec {
     assert(cropped.getWidth == 112 && cropped.getHeight == 64)
     // center crop: left = (150-112)/2 = 19, top = (100-64)/2 = 18
     assert(px(cropped, 0, 0) == (19, 18, 37))
+    // an empty folder still reports its (zero) counts
+    assert(Tiling.prepareImages(spark, tmpDirWith().toString,
+      Files.createTempDirectory("graft-prep-empty").resolve("out").toString, 64, 0.25) == ((0L, 0L)))
   }
 
   test("convertImages transcodes png -> jpg, decodable with same dims") {
-    val in = tmpDirWith("c.png" -> gradientPng(80, 60))
+    // an undecodable file is skipped: neither written nor counted
+    val in = tmpDirWith("c.png" -> gradientPng(80, 60), "junk.png" -> "not an image".getBytes)
     val out = Files.createTempDirectory("graft-conv")
     val n = Tiling.convertImages(spark, in.toString, out.toString, "jpg", quality = 95)
     assert(n == 1)
+    assert(Files.list(out).iterator().asScala.map(_.getFileName.toString).toSet == Set("c.jpg"))
     val img = ImageIO.read(out.resolve("c.jpg").toFile)
     assert(img.getWidth == 80 && img.getHeight == 60)
   }
@@ -206,5 +204,24 @@ class TilingSpec extends SparkSpec {
     val first = t.orderBy("file_name").collect().head
     val img = ImageIO.read(new java.io.ByteArrayInputStream(first.getAs[Array[Byte]]("data")))
     assert(img.getWidth == 60 && img.getHeight == 60)
+  }
+}
+
+object TilingSpec {
+
+  /** Deterministic gradient: pixel(x,y) = rgb(x%256, y%256, (x+y)%256). */
+  def gradientPng(w: Int, h: Int): Array[Byte] = {
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until h; x <- 0 until w)
+      img.setRGB(x, y, ((x % 256) << 16) | ((y % 256) << 8) | ((x + y) % 256))
+    val out = new ByteArrayOutputStream()
+    ImageIO.write(img, "png", out)
+    out.toByteArray
+  }
+
+  def tmpDirWith(files: (String, Array[Byte])*): Path = {
+    val dir = Files.createTempDirectory("graft-img")
+    files.foreach { case (n, b) => Files.write(dir.resolve(n), b) }
+    dir
   }
 }

@@ -4,6 +4,7 @@ import graft.SparkSpec
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 
 /** Byte-exact parity with the reference's file workflows: each test
   * reimplements the Python loop inline (the model) and compares output
@@ -157,5 +158,40 @@ class FileWorkflowsSpec extends SparkSpec {
       FileWorkflows.mergeTextFolder(spark, in.toString, outDir.toString, maxBytes = 1024L)
     }
     assert(e.getMessage.contains(in.toString), s"folder not named in: ${e.getMessage}")
+  }
+
+  test("removeDuplicatesFile refuses a directory or a multi-file glob (one-file contract)") {
+    val dir = tmp("fw-dedup-many")
+    Seq("a.txt", "b.txt").foreach(n => Files.write(dir.resolve(n), "x\ny\n".getBytes(UTF_8)))
+    for (in <- Seq(dir.toString, s"$dir/*.txt")) {
+      val e = intercept[IllegalArgumentException] {
+        FileWorkflows.removeDuplicatesFile(spark, in, tmp("fw-dedup-many-out").resolve("out").toString)
+      }
+      assert(e.getMessage.contains(in) && e.getMessage.contains("exactly one regular file"),
+        e.getMessage)
+    }
+  }
+
+  test("splitTextFile refuses a directory or a multi-file glob (one-file contract)") {
+    val dir = tmp("fw-split-many")
+    Seq("a.txt", "b.txt").foreach(n => Files.write(dir.resolve(n), "x\ny\n".getBytes(UTF_8)))
+    for (in <- Seq(dir.toString, s"$dir/*.txt", s"$dir/missing.txt")) {
+      val out = tmp("fw-split-many-out").resolve("out")
+      val e = intercept[IllegalArgumentException] {
+        FileWorkflows.splitTextFile(spark, in, out.toString, linesPerFile = 4)
+      }
+      assert(e.getMessage.contains(in) && e.getMessage.contains("exactly one regular file"),
+        e.getMessage)
+      assert(!Files.exists(out), "nothing may be written for a refused input")
+    }
+  }
+
+  test("splitTextFile of an empty file writes one empty split_1.txt (reference rollover)") {
+    val in = tmp("fw-split-empty-in").resolve("input.txt")
+    Files.write(in, Array.emptyByteArray)
+    val outDir = tmp("fw-split-empty-out").resolve("out")
+    assert(FileWorkflows.splitTextFile(spark, in.toString, outDir.toString, linesPerFile = 4) == 1)
+    assert(Files.list(outDir).iterator().asScala.map(_.getFileName.toString).toSeq == Seq("split_1.txt"))
+    assert(bytes(outDir.resolve("split_1.txt")).isEmpty)
   }
 }

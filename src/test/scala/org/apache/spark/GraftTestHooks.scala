@@ -11,4 +11,8 @@ package org.apache.spark
   */
 object GraftTestHooks {
   def clearCheckpointDir(sc: SparkContext): Unit = sc.checkpointDir = None
+
+  /** Block until every event posted so far has reached the listeners, so
+    * a spec's SparkListener has seen all jobs of the call it measured. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
