@@ -1,17 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCores(default = 4)
+    val spark = GraftSession.local(cpus)
     // Global JVM warmup (untimed): ONE full sweep of every registered query
     // at the TIMED scale factor, so parquet readers, codegen/JIT, broadcast
     // and shuffle machinery are warm for ALL queries equally — no query's
@@ -150,7 +142,7 @@ object Bench {
       // 8-core mins (or vice versa) would mass-(non-)adjudicate. A record
       // without a cpus field predates this rule — treat as comparable.
       val sameCpus = """"cpus":(\d+)""".r.findFirstMatchIn(txt)
-        .forall(_.group(1) == cpus)
+        .forall(_.group(1).toInt == cpus)
       if (!sameSf || !sameCpus) Map.empty
       else {
         val qsec = """"queries":\{([^}]*)\}""".r
@@ -267,7 +259,7 @@ object Bench {
         val txt = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(outDefault)), "UTF-8")
         """"cpus":(\d+)""".r.findFirstMatchIn(txt)
-          .exists(_.group(1) != cpus)
+          .exists(_.group(1).toInt != cpus)
       } catch { case _: Exception => false }
       if (clobberOtherCpus) s"BENCH_LOCAL_c$cpus.json" else outDefault
     })

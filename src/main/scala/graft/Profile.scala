@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev diagnostic (guide §1/§7 empirical loop): run ONE registered query
   * through the noop sink — same action as Bench — and print per-stage task
@@ -17,19 +16,12 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: Profile <query> [sfDir] [cpus] [reps]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = args.lift(2).getOrElse("32")
+    val cpus = args.lift(2).map(_.toInt).getOrElse(32)
     val reps = args.lift(3).map(_.toInt).getOrElse(2)
     val extra = args.drop(4).map { kv =>
       val Array(k, v) = kv.split("=", 2); (k, v)
     }
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, extra.toSeq)
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
 
     case class St(id: Int, nTasks: Int, sumMs: Long, gcMs: Long,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Empirical scaling curves for the dedup/ANN tier (SCALING.md): build
   * deterministic 1×/3×/10× corpora from a base SF via
@@ -17,15 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object ScalingBench {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCores(default = 4))
 
     val work = java.nio.file.Files.createTempDirectory("graft_scaling").toString
     val factors = Seq(1, 3, 10)

@@ -105,28 +105,10 @@ object Perceptual {
     baos.toByteArray
   }
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Write the 24-image fixture folder once per (application, dir) — the
-    * q88 memo discipline (computeIfAbsent blocks concurrent callers until
-    * the corpus is fully written). */
-  def dhashFolder(spark: SparkSession, dir: String): String = {
-    val suffix = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val p = new org.apache.hadoop.fs.Path(wh, s"graft_dhash_fixtures_$suffix")
-    val key = spark.sparkContext.applicationId + ":" + p.toString
-    built.computeIfAbsent(key, { _ =>
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      fs.mkdirs(p)
-      (0 until NumImages).foreach { i =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(p, f"img$i%02d.png"), true)
-        try out.write(imageBytes(i)) finally out.close()
-      }
-      p.toString
-    })
-  }
+  /** The 24-image fixture folder, landed once per (application, dir). */
+  def dhashFolder(spark: SparkSession, dir: String): String =
+    graft.io.Layout.landFiles(spark, "dhash_fixtures", dir)(
+      (0 until NumImages).map(i => f"img$i%02d.png" -> imageBytes(i)))
 
   // ----------------------------------------------------------------- dHash
 
@@ -444,24 +426,10 @@ object Perceptual {
     * 28/29 byte twins of bases 6/7 (expected exact dup). */
   val ProbeIds: Range = 24 until 30
 
-  /** Write the probe batch folder once per (application, dir). */
-  def probeFolder(spark: SparkSession, dir: String): String = {
-    val suffix = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir + "#probe").toLong & 0xffffffffL)
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val p = new org.apache.hadoop.fs.Path(wh, s"graft_dhash_probe_$suffix")
-    val key = spark.sparkContext.applicationId + ":" + p.toString
-    built.computeIfAbsent(key, { _ =>
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      fs.mkdirs(p)
-      ProbeIds.foreach { i =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(p, f"img$i%02d.png"), true)
-        try out.write(imageBytes(i)) finally out.close()
-      }
-      p.toString
-    })
-  }
+  /** The probe batch folder, landed once per (application, dir). */
+  def probeFolder(spark: SparkSession, dir: String): String =
+    graft.io.Layout.landFiles(spark, "dhash_probe", dir)(
+      ProbeIds.map(i => f"img$i%02d.png" -> imageBytes(i)))
 
   /** q152: incremental perceptual ingest — a later-arriving image batch
     * probed against the LANDED corpus, never corpus-vs-corpus (the q68

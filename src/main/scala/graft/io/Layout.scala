@@ -34,14 +34,50 @@ object Layout {
     *    wrong data, but the churn is a full corpus rewrite per collision;
     *  - canonical path, not absolute — `getAbsolutePath` leaves `.`/`..`/
     *    symlink spellings distinct, so two names for one dir would land
-    *    two full copies. Fixture-scale memos keyed per-JVM are exempt
-    *    (dir-independent deterministic content; a collision rewrites
-    *    identical bytes). */
+    *    two full copies.
+    * Every warehouse folder landed through [[landOnce]] is named with it. */
   def dirSuffix(dir: String): String = {
     val canon = new java.io.File(dir).getCanonicalPath
     java.security.MessageDigest.getInstance("MD5")
       .digest(canon.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
+
+  private val landedFolders =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+
+  /** Land `<warehouse>/graft_<name>_<dirSuffix(dir)>` once per
+    * application and return its path. The first call deletes a folder
+    * left by an earlier run, then runs `write` on the path; later calls
+    * reuse it. Reuse is per application, never across runs, because the
+    * source parquet may have been regenerated at the same path. A
+    * concurrent second caller blocks in `computeIfAbsent` until the
+    * write is done, so it never reads a half-written folder. A write
+    * that throws records nothing, and the next call retries it. */
+  def landOnce(spark: SparkSession, name: String, dir: String)(
+      write: org.apache.hadoop.fs.Path => Unit): String = {
+    val p = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), s"graft_${name}_${dirSuffix(dir)}")
+    landedFolders.computeIfAbsent((spark.sparkContext.applicationId, p.toString), { _ =>
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) fs.delete(p, true)
+      write(p)
+      p.toString
+    })
+  }
+
+  /** [[landOnce]] for small byte fixtures, written driver-side: one file
+    * per (file name, bytes). `files` is evaluated only when the folder
+    * is written. */
+  def landFiles(spark: SparkSession, name: String, dir: String)(
+      files: => Seq[(String, Array[Byte])]): String =
+    landOnce(spark, name, dir) { p =>
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(p)
+      files.foreach { case (file, bytes) =>
+        val out = fs.create(new org.apache.hadoop.fs.Path(p, file), true)
+        try out.write(bytes) finally out.close()
+      }
+    }
 
   /** Write `df` Hive-partitioned by `cols`, one shuffle to co-locate rows
     * of a partition (maxes file size, avoids task×partition file blowup). */
@@ -51,11 +87,6 @@ object Layout {
     df.repartition(cols.map(col): _*)
       .write.mode(mode).partitionBy(cols: _*).parquet(outDir)
   }
-
-  /** Read a partitioned layout back; predicates on the partition columns
-    * prune directories at planning time (visible as PartitionFilters). */
-  def readPartitioned(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
 
   /** Small-file COMPACTION: rewrite a landing directory's many small
     * parquet files as ⌈totalBytes / targetBytes⌉ files of ~targetBytes
@@ -263,7 +294,7 @@ object Layout {
     * data skipping that, at 100 TB, decides whether a year-scoped query
     * reads 1/7th of the table or all of it. A date-partitioned twin of
     * `orders` (partitioned by order year — low cardinality, the §header
-    * guidance) is materialized once per (session, sfDir); the query
+    * guidance) is landed once per (application, sfDir); the query
     * filters one year, which the scan resolves as a PartitionFilter:
     * pruned directories are never listed, never opened (LayoutSpec
     * asserts the filter is a partition filter and the scan reads fewer
@@ -279,33 +310,15 @@ object Layout {
       .orderBy(col("o_orderpriority"))
   }
 
-  /** Application-scoped memo of materialized partitioned twins — reuse
-    * WITHIN a session, rebuild across sessions. A cross-session _SUCCESS
-    * check would serve stale data if the harness regenerates the source
-    * parquet at the same path between rounds (the exact trap the bucketed
-    * tables hit with leftover warehouse directories); one Overwrite per
-    * application is the q56 invalidation rule, path-flavored. */
-  private val builtPartitioned =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Materialize (once per application+dir) the year-partitioned orders
-    * twin; returns its path. The one-time write is the "land your fact
-    * table partitioned" deployment step, not part of the measured query.
-    * `computeIfAbsent` (not a set-add) so a concurrent second caller
-    * blocks until the write completes instead of reading a half-written
-    * layout. */
-  def partitionedOrdersPath(spark: SparkSession, dir: String): String = {
-    val suffix = dirSuffix(dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val p = new org.apache.hadoop.fs.Path(wh, s"graft_orders_bydate_$suffix")
-    val key = spark.sparkContext.applicationId + ":" + p.toString
-    builtPartitioned.computeIfAbsent(key, { _ =>
+  /** The year-partitioned orders twin, landed once per application; the
+    * one-time write is the "land your fact table partitioned" deployment
+    * step, not part of the measured query. */
+  def partitionedOrdersPath(spark: SparkSession, dir: String): String =
+    landOnce(spark, "orders_bydate", dir) { p =>
       writePartitioned(
         Tables.orders(spark, dir).withColumn("o_year", year(col("o_orderdate"))),
-        p.toString, Seq("o_year"), SaveMode.Overwrite)
-      p.toString
-    })
-  }
+        p.toString, Seq("o_year"))
+    }
 
   val partitionPrunedRevenueSql: String =
     """SELECT o_orderpriority, COUNT(*) AS n_orders,
@@ -318,8 +331,8 @@ object Layout {
   /** q123: SCHEMA-EVOLUTION scan — a real landing zone accumulates files
     * written under successive schema generations (early files lack the
     * columns added later), and a 100 TB pipeline must read the union
-    * without rewriting history. Fixture (landed once per application+dir,
-    * same policy as q72): documents with `doc_id % 5 == 0` are written as
+    * without rewriting history. Fixture (landed once per application by
+    * [[landOnce]]): documents with `doc_id % 5 == 0` are written as
     * GEN-1 files carrying only (doc_id, text, n_chars); the rest as GEN-2
     * with the full schema. The query reads the folder with
     * `mergeSchema=true` — Spark unions the footer schemas and null-fills
@@ -341,23 +354,15 @@ object Layout {
       .orderBy(col("source"))
   }
 
-  private def evolvedDocsPath(spark: SparkSession, dir: String): String = {
-    val suffix = dirSuffix(dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val p = new org.apache.hadoop.fs.Path(wh, s"graft_docs_evolved_$suffix")
-    val key = spark.sparkContext.applicationId + ":" + p.toString
-    builtPartitioned.computeIfAbsent(key, { _ =>
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+  private def evolvedDocsPath(spark: SparkSession, dir: String): String =
+    landOnce(spark, "docs_evolved", dir) { p =>
       val docs = Tables.documents(spark, dir)
       val legacy = col("doc_id") % 5 === 0
       docs.filter(legacy).select("doc_id", "text", "n_chars")
         .write.parquet(p.toString + "/gen1")
       docs.filter(!legacy)
         .write.parquet(p.toString + "/gen2")
-      p.toString
-    })
-  }
+    }
 
   val schemaEvolvedCensusSql: String =
     """SELECT CASE WHEN doc_id % 5 = 0 THEN '__legacy__' ELSE source END AS source,

@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   * regression (wrong duration math, broken frame walk, lost quarantine)
   * now breaks the correctness gate, not just a spec.
   *
-  * The folder is written once per (application, dir) — the same memo
-  * discipline as `io.Layout.partitionedOrdersPath` — and the fixtures are
-  * deliberately tiny: the query measures parser correctness, not I/O.
+  * The folder is landed once per (application, dir) by
+  * `io.Layout.landFiles`, and the fixtures are deliberately tiny: the
+  * query measures parser correctness, not I/O.
   */
 object Fixtures {
 
@@ -351,33 +351,11 @@ object Fixtures {
     // no parser recognizes it → quarantine row (all-null metadata)
     "junk_g.bin" -> "definitely not a media container, kept for quarantine".getBytes)
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Write the fixture folder once per (application, dir); returns its
+  /** The fixture folder, landed once per (application, dir); returns its
     * path. Files are KBs and written driver-side — this is test-corpus
-    * landing, not a data path. `computeIfAbsent` (not a set-add) so a
-    * concurrent second caller BLOCKS until the files are fully written —
-    * with the old check-then-build memo it returned immediately and a
-    * parallel q88 could scan a partially-deleted or half-written
-    * corpus. */
-  def mediaFolder(spark: SparkSession, dir: String): String = {
-    val suffix = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val p = new org.apache.hadoop.fs.Path(wh, s"graft_media_fixtures_$suffix")
-    val key = spark.sparkContext.applicationId + ":" + p.toString
-    built.computeIfAbsent(key, { _ =>
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      fs.mkdirs(p)
-      fixtureFiles().foreach { case (name, bytes) =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(p, name), true)
-        try out.write(bytes) finally out.close()
-      }
-      p.toString
-    })
-  }
+    * landing, not a data path. */
+  def mediaFolder(spark: SparkSession, dir: String): String =
+    graft.io.Layout.landFiles(spark, "media_fixtures", dir)(fixtureFiles())
 
   // ------------------------------------------------------------- q88
 
@@ -632,30 +610,14 @@ object Fixtures {
       .orderBy(col("file"))
   }
 
-  private def exifFolder(spark: SparkSession, dir: String): String = {
-    val suffix = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir + "#exif").toLong & 0xffffffffL)
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val p = new org.apache.hadoop.fs.Path(wh, s"graft_exif_fixtures_$suffix")
-    val key = spark.sparkContext.applicationId + ":" + p.toString
-    built.computeIfAbsent(key, { _ =>
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      fs.mkdirs(p)
-      val files: Seq[(String, Array[Byte])] = Seq(
-        "cam_a_top.jpg" -> jpegWithExif(40, 30, 0x336699, 1),
-        "cam_b_rot180.jpg" -> jpegWithExif(40, 30, 0x996633, 3),
-        "cam_c_rot90cw.jpg" -> jpegWithExif(40, 30, 0x663399, 6),
-        "cam_d_rot90ccw.jpg" -> jpegWithExif(40, 30, 0x399663, 8),
-        "scan_e_untagged.jpg" -> jpegBytes(64, 48, 0x224488),
-        "junk_f.bin" -> "not an image at all".getBytes)
-      files.foreach { case (name, bytes) =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(p, name), true)
-        try out.write(bytes) finally out.close()
-      }
-      p.toString
-    })
-  }
+  private def exifFolder(spark: SparkSession, dir: String): String =
+    graft.io.Layout.landFiles(spark, "exif_fixtures", dir)(Seq(
+      "cam_a_top.jpg" -> jpegWithExif(40, 30, 0x336699, 1),
+      "cam_b_rot180.jpg" -> jpegWithExif(40, 30, 0x996633, 3),
+      "cam_c_rot90cw.jpg" -> jpegWithExif(40, 30, 0x663399, 6),
+      "cam_d_rot90ccw.jpg" -> jpegWithExif(40, 30, 0x399663, 8),
+      "scan_e_untagged.jpg" -> jpegBytes(64, 48, 0x224488),
+      "junk_f.bin" -> "not an image at all".getBytes))
 
   val exifOrientationAuditSql: String =
     """SELECT * FROM (VALUES

@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   * (naming, separators, trailing newlines, the split's empty-trailing-file
   * quirk), not just a row count.
   *
-  * The fixture + workflow runs land once per (application, dir) — the
-  * same land-once policy as q56/q72's layout twins: the queries measure
-  * reading the produced files, and re-running a file workflow over a
-  * non-empty output dir is an error by contract (reference K6).
+  * The fixture + workflow runs land once per (application, dir) through
+  * `io.Layout.landOnce`: the queries measure reading the produced files,
+  * and re-running a file workflow over a non-empty output dir is an error
+  * by contract (reference K6).
   *
   * Frame-combining note: the one-row stats frames attach via
   * `crossJoin(broadcast(...))` — the whitelisted scalar-subquery shape
@@ -48,22 +48,12 @@ object FileWorkflowStats {
           x => x.getField("clean")), sep).as("j"))
       .select(encode(concat(col("j"), lit(trailing)), "UTF-8").as("data"))
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build the fixtures and run all three workflows once per
-    * (application, dir); returns the root directory. A leftover root from
-    * a previous JVM is deleted first (requireEmptyDir would otherwise
-    * refuse the re-run — same stale-location rule as io.Layout). */
-  private def ensureRuns(spark: SparkSession, dir: String): String = {
-    val suffix = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(
-        spark.sparkContext.applicationId + ":" + dir).toLong & 0xffffffffL)
-    val root = s"${sys.props("java.io.tmpdir")}/graft_fw_$suffix"
-    built.computeIfAbsent(root, { _ =>
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    * (application, dir); returns the landed folder. The workflows write
+    * through `java.nio`, so they get the folder's local path, not a URI. */
+  private def ensureRuns(spark: SparkSession, dir: String): String =
+    graft.io.Layout.landOnce(spark, "fw", dir) { p =>
+      val root = p.toUri.getPath
       // merge fixture: one zero-padded file per doc (lexical order ==
       // doc_id order — the merge sorts by decoded filename)
       Sinks.writeFilePerRow(
@@ -95,9 +85,7 @@ object FileWorkflowStats {
       // exercises the reference's empty-trailing-file quirk (split_11)
       FileWorkflows.splitTextFile(
         spark, s"$root/split_in/input.txt", s"$root/split_out", linesPerFile = 20)
-      root
-    })
-  }
+    }
 
   /** Attach a one-row aggregate to a one-row frame (scalar-subquery
     * shape; both sides bounded). */

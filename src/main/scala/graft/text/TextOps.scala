@@ -31,9 +31,11 @@ object TextOps {
 
   /** A wholetext file's lines: one trailing newline is stripped (a final
     * "\n" does not open an empty last line, matching line-iterator
-    * semantics) and the rest is split on "\n". */
+    * semantics) and the rest is split on "\n", so "a\n\n" is ["a", ""].
+    * The strip anchors on `\z`: Java's `$` also matches before a final
+    * line terminator and would drop that blank last line too. */
   private[text] def fileLines(text: Column): Column =
-    split(regexp_replace(text, "\n$", ""), "\n", -1)
+    split(regexp_replace(text, "\n\\z", ""), "\n", -1)
 
   /** Raw text files → (file, line_id, value) with DETERMINISTIC line ids.
     * `spark.read.text` + a partition-unordered window would number lines

@@ -35,27 +35,10 @@ object PdfExtract {
     try in.readAllBytes() finally in.close()
   }
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Write-once PDF fixture folder (q206 discipline, own suffix). */
-  def pdfFolder(spark: SparkSession, dir: String): String = {
-    val suffix = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir + ":pdf").toLong & 0xffffffffL)
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val p = new org.apache.hadoop.fs.Path(wh, s"graft_pdf_fixtures_$suffix")
-    val key = spark.sparkContext.applicationId + ":" + p.toString
-    built.computeIfAbsent(key, { _ =>
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      fs.mkdirs(p)
-      FixtureNames.foreach { name =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(p, name), true)
-        try out.write(resourceBytes(s"/pdf/$name")) finally out.close()
-      }
-      p.toString
-    })
-  }
+  /** The PDF fixture folder, landed once per (application, dir). */
+  def pdfFolder(spark: SparkSession, dir: String): String =
+    graft.io.Layout.landFiles(spark, "pdf_fixtures", dir)(
+      FixtureNames.map(name => name -> resourceBytes(s"/pdf/$name")))
 
   private val extractPages = udf { (bytes: Array[Byte]) =>
     Pdf.extract(bytes).map { case (page, text) => (page, text.orNull) }

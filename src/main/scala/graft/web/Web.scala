@@ -144,28 +144,9 @@ object Web {
       Array[Byte](0x1f.toByte, 0x8b.toByte, 0x08, 0x1f, 0x55, 0x11, 0x22, 0x33)),
     "junk_w.warc" -> "this is not a warc file".getBytes(Iso))
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Write-once fixture folder (same blocking memo discipline as
-    * multimodal.Fixtures.mediaFolder). */
-  def warcFolder(spark: SparkSession, dir: String): String = {
-    val suffix = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val p = new org.apache.hadoop.fs.Path(wh, s"graft_warc_fixtures_$suffix")
-    val key = spark.sparkContext.applicationId + ":" + p.toString
-    built.computeIfAbsent(key, { _ =>
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      fs.mkdirs(p)
-      fixtureFiles().foreach { case (name, bytes) =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(p, name), true)
-        try out.write(bytes) finally out.close()
-      }
-      p.toString
-    })
-  }
+  /** The WARC fixture folder, landed once per (application, dir). */
+  def warcFolder(spark: SparkSession, dir: String): String =
+    graft.io.Layout.landFiles(spark, "warc_fixtures", dir)(fixtureFiles())
 
   // ------------------------------------------------------------ kernels
 
@@ -548,24 +529,9 @@ object Web {
         w1252("<html><body><p>a’b…c</p></body></html>"))))
   }
 
-  /** Write-once charset fixture folder (q206 discipline, own suffix). */
-  def charsetFolder(spark: SparkSession, dir: String): String = {
-    val suffix = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir + ":charset").toLong & 0xffffffffL)
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val p = new org.apache.hadoop.fs.Path(wh, s"graft_warc_charset_$suffix")
-    val key = spark.sparkContext.applicationId + ":" + p.toString
-    built.computeIfAbsent(key, { _ =>
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      fs.mkdirs(p)
-      charsetFixtureFiles().foreach { case (name, bytes) =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(p, name), true)
-        try out.write(bytes) finally out.close()
-      }
-      p.toString
-    })
-  }
+  /** The charset fixture folder, landed once per (application, dir). */
+  def charsetFolder(spark: SparkSession, dir: String): String =
+    graft.io.Layout.landFiles(spark, "warc_charset", dir)(charsetFixtureFiles())
 
   /** Charset-aware decode → extract; emits the charset actually used. */
   private val decodeExtract = udf { (httpCharset: String, payload: Array[Byte]) =>
@@ -622,27 +588,13 @@ object Web {
     "<html><body><p>See <a href=\"/a/b\"><b>bold</b> link &amp; more</a> here.</p>" +
       "<a href='p3'>quoted single</a></body></html>"
 
-  /** Write-once link-graph fixture folder (own suffix; q206's record
-    * census stays untouched). */
-  def linksFolder(spark: SparkSession, dir: String): String = {
-    val suffix = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir + ":links").toLong & 0xffffffffL)
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val p = new org.apache.hadoop.fs.Path(wh, s"graft_warc_links_$suffix")
-    val key = spark.sparkContext.applicationId + ":" + p.toString
-    built.computeIfAbsent(key, { _ =>
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      fs.mkdirs(p)
-      Seq("links_a.warc.gz" -> gzMembers(response(LinksP1, 200, "OK", "text/html", PageL1)),
-          "links_b.warc" -> response(LinksP2, 200, "OK", "text/html", PageL2))
-        .foreach { case (name, bytes) =>
-          val out = fs.create(new org.apache.hadoop.fs.Path(p, name), true)
-          try out.write(bytes) finally out.close()
-        }
-      p.toString
-    })
-  }
+  /** The link-graph fixture folder, landed once per (application, dir).
+    * It is kept apart from q206's folder, so q206's record census stays
+    * untouched. */
+  def linksFolder(spark: SparkSession, dir: String): String =
+    graft.io.Layout.landFiles(spark, "warc_links", dir)(Seq(
+      "links_a.warc.gz" -> gzMembers(response(LinksP1, 200, "OK", "text/html", PageL1)),
+      "links_b.warc" -> response(LinksP2, 200, "OK", "text/html", PageL2)))
 
   /** Anchors → RFC 3986 resolution against the page URI → canonical
     * target. Non-fetch schemes (mailto:, javascript:) drop — a link
@@ -728,24 +680,9 @@ object Web {
       "junk_sm.xml" -> u8("this is not xml at all"))
   }
 
-  /** Write-once sitemap fixture folder (own suffix). */
-  def sitemapFolder(spark: SparkSession, dir: String): String = {
-    val suffix = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir + ":sitemap").toLong & 0xffffffffL)
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val p = new org.apache.hadoop.fs.Path(wh, s"graft_sitemap_$suffix")
-    val key = spark.sparkContext.applicationId + ":" + p.toString
-    built.computeIfAbsent(key, { _ =>
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      fs.mkdirs(p)
-      sitemapFixtureFiles().foreach { case (name, bytes) =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(p, name), true)
-        try out.write(bytes) finally out.close()
-      }
-      p.toString
-    })
-  }
+  /** The sitemap fixture folder, landed once per (application, dir). */
+  def sitemapFolder(spark: SparkSession, dir: String): String =
+    graft.io.Layout.landFiles(spark, "sitemap", dir)(sitemapFixtureFiles())
 
   private val parseSitemap = udf { (bytes: Array[Byte]) =>
     Sitemap.parse(bytes).zipWithIndex.map { case (e, i) =>

@@ -12,7 +12,7 @@ class LayoutSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, sfDir)
     Layout.writePartitioned(docs, out, Seq("lang"))
 
-    val back = Layout.readPartitioned(spark, out)
+    val back = spark.read.parquet(out)
     assert(back.count() == docs.count())
 
     val filtered = back.filter(col("lang") === "en")
@@ -29,6 +29,64 @@ class LayoutSpec extends SparkSpec {
     val allFiles = scan.relation.location.inputFiles.length
     val langs = docs.select("lang").distinct().count()
     assert(langs > 1, "fixture needs multiple lang partitions")
+  }
+
+  private def localPath(landed: String): java.nio.file.Path =
+    java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(landed).toUri.getPath)
+
+  test("landOnce runs write once per (application, dir) and returns one path") {
+    val dir = Files.createTempDirectory("graft-land-once").toString
+    val writes = new java.util.concurrent.atomic.AtomicInteger()
+    def land() = Layout.landFiles(spark, "spec_once", dir) {
+      writes.incrementAndGet()
+      Seq("f.txt" -> "x".getBytes("UTF-8"))
+    }
+    val first = land()
+    assert(land() == first)
+    assert(writes.get == 1)
+    assert(new String(Files.readAllBytes(localPath(first).resolve("f.txt")), "UTF-8") == "x")
+  }
+
+  test("landOnce deletes a folder left by an earlier run before writing") {
+    val dir = Files.createTempDirectory("graft-land-stale").toString
+    val wh = spark.conf.get("spark.sql.warehouse.dir")
+    val target = localPath(new org.apache.hadoop.fs.Path(
+      wh, s"graft_spec_stale_${Layout.dirSuffix(dir)}").toString)
+    Files.createDirectories(target)
+    Files.write(target.resolve("stale.txt"), "old".getBytes("UTF-8"))
+    val landed = Layout.landFiles(spark, "spec_stale", dir)(Seq("new.txt" -> Array[Byte](1)))
+    assert(localPath(landed) == target)
+    assert(!Files.exists(target.resolve("stale.txt")), "stale file survived the landing")
+    assert(Files.exists(target.resolve("new.txt")))
+  }
+
+  test("landOnce blocks a concurrent second caller until the write is done") {
+    val dir = Files.createTempDirectory("graft-land-race").toString
+    val writes = new java.util.concurrent.atomic.AtomicInteger()
+    val started = new java.util.concurrent.CountDownLatch(1)
+    def land() = Layout.landOnce(spark, "spec_race", dir) { p =>
+      writes.incrementAndGet()
+      started.countDown()
+      Thread.sleep(500)
+      val out = localPath(p.toString)
+      Files.createDirectories(out)
+      Files.write(out.resolve("done.txt"), Array[Byte](1))
+    }
+    val first = new java.util.concurrent.FutureTask[String](() => land())
+    new Thread(first).start()
+    started.await()
+    val second = land()
+    assert(Files.exists(localPath(second).resolve("done.txt")),
+      "second caller returned before the first caller's write finished")
+    assert(first.get() == second)
+    assert(writes.get == 1)
+  }
+
+  test("landOnce lands a separate folder per dir") {
+    val dirs = Seq.fill(2)(Files.createTempDirectory("graft-land-dirs").toString)
+    val landed = dirs.map(d => Layout.landFiles(spark, "spec_dirs", d)(Seq("f" -> Array[Byte](1))))
+    assert(landed.distinct.size == 2)
+    landed.foreach(l => assert(Files.exists(localPath(l).resolve("f"))))
   }
 
   test("bucketed tables join and aggregate WITHOUT a shuffle on the bucket key") {

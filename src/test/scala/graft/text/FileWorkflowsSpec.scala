@@ -46,6 +46,12 @@ class FileWorkflowsSpec extends SparkSpec {
     lines.foreach(seen.add)
     val model = seen.toSeq.mkString("\n") + "\n"
     assert(bytes(java.nio.file.Paths.get(outFile)) == model.getBytes(UTF_8).toSeq)
+    // a blank LAST line is a record too (readlines gives ["a\n", "\n"])
+    val blankIn = tmp("fw-dedup-blank-in").resolve("input.txt")
+    Files.write(blankIn, "a\n\n".getBytes(UTF_8))
+    val blankOut = FileWorkflows.removeDuplicatesFile(
+      spark, blankIn.toString, tmp("fw-dedup-blank-out").resolve("out").toString)
+    assert(bytes(java.nio.file.Paths.get(blankOut)) == "a\n\n".getBytes(UTF_8).toSeq)
   }
 
   test("splitTextFile == reference split_jsonl (ceil(N/2) records, blank-line records)") {
@@ -68,6 +74,15 @@ class FileWorkflowsSpec extends SparkSpec {
         .split("\n\n").filter(_.nonEmpty).toSeq
     }
     assert(back.sorted == lines.sorted)
+    // a blank LAST line is a record too: records ["a", ""] fill the first
+    // 2-record chunk exactly, so an empty split_2.txt follows
+    val blankIn = tmp("fw-split-blank-in").resolve("input.txt")
+    Files.write(blankIn, "a\n\n".getBytes(UTF_8))
+    val blankOut = tmp("fw-split-blank-out").resolve("out")
+    assert(FileWorkflows.splitTextFile(
+      spark, blankIn.toString, blankOut.toString, linesPerFile = 4) == 2)
+    assert(bytes(blankOut.resolve("split_1.txt")) == "a\n\n\n\n".getBytes(UTF_8).toSeq)
+    assert(bytes(blankOut.resolve("split_2.txt")).isEmpty)
   }
 
   test("splitTextFile exact fill leaves a counted trailing empty file (reference rollover)") {

@@ -75,12 +75,14 @@ class TextOpsSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-lines")
     Files.write(dir.resolve("a.txt"), "l1\n\nl3\n".getBytes(StandardCharsets.UTF_8))
     Files.write(dir.resolve("b.txt"), "x".getBytes(StandardCharsets.UTF_8)) // no trailing \n
+    Files.write(dir.resolve("c.txt"), "a\n\n".getBytes(StandardCharsets.UTF_8)) // blank last line
     val rows = TextOps.linesWithIds(spark, dir.toString + "/*.txt")
       .orderBy("file", "line_id").collect()
       .map(r => (r.getString(0).split('/').last, r.getLong(1), r.getString(2))).toSeq
     assert(rows == Seq(
       ("a.txt", 0L, "l1"), ("a.txt", 1L, ""), ("a.txt", 2L, "l3"),
-      ("b.txt", 0L, "x")))
+      ("b.txt", 0L, "x"),
+      ("c.txt", 0L, "a"), ("c.txt", 1L, "")))
   }
 
   test("merge guard fails fast naming the oversized source") {
