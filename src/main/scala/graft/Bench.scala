@@ -1,8 +1,58 @@
 package graft
+
+import java.nio.file.{Files, Path, Paths}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse}
+
 object Bench {
+  /** Seconds at 3 dp: `setScale` on the double's decimal form renders
+    * exactly what `f"%.3f"` does, the `-1.000` failure sentinel included. */
+  def secs(t: Double): JValue =
+    JDecimal(BigDecimal(t).setScale(3, BigDecimal.RoundingMode.HALF_UP))
+  private def secsList(ts: Seq[Double]): JValue = JArray(ts.map(secs).toList)
+
+  /** The path this run's record goes to, and the record already there
+    * (JNothing if none), read before the sweep as the adjudication
+    * baseline. An explicit `out` (SPARK_GRAFT_BENCH_OUT) is taken as given;
+    * else `default`, unless it holds a record at a DIFFERENT core count:
+    * then the cpus-keyed sibling `BENCH_LOCAL_c<cpus>.json`, so an 8-core
+    * sweep neither overwrites the 32-core record nor adjudicates against it. */
+  def recordPath(out: Option[String], cpus: Int, default: Path): (Path, JValue) = {
+    def load(p: Path): JValue =
+      try parse(Files.readString(p)) catch { case _: Exception => JNothing }
+    out.map(Paths.get(_)) match {
+      case Some(p) => (p, load(p))
+      case None =>
+        val rec = load(default)
+        rec \ "cpus" match {
+          case JInt(c) if c != cpus =>
+            val own = default.resolveSibling(s"BENCH_LOCAL_c$cpus.json")
+            (own, load(own))
+          case _ => (default, rec)
+        }
+    }
+  }
+
+  /** The one stdout line: the headline fields plus the 40 slowest queries
+    * at 2 dp, marked `"partial":true`. It stays under 1800 chars for any
+    * registered names (BenchSpec), so a log capture that keeps a line's
+    * last 2000 chars holds all of it; the record file holds the rest. */
+  def stdoutLine(total: Double, cpus: Int, sf: String,
+                 mins: Seq[(String, Double)]): String = {
+    val slowest = mins.sortBy(-_._2).take(40).map { case (k, t) =>
+      k -> JDecimal(BigDecimal(t).setScale(2, BigDecimal.RoundingMode.HALF_UP))
+    }
+    compact(JObject("metric" -> JString("total"), "value" -> JDouble(total),
+      "unit" -> JString("sec"), "queries" -> JObject(slowest.toList),
+      "partial" -> JBool(true), "cpus" -> JInt(cpus), "sf" -> JString(sf),
+      "total" -> JDouble(total)))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.envCores(default = 4)
+    val (out, baseline) = recordPath(sys.env.get("SPARK_GRAFT_BENCH_OUT"), cpus,
+      Paths.get("BENCH_LOCAL.json"))
     val spark = GraftSession.local(cpus)
     // Global JVM warmup (untimed): ONE full sweep of every registered query
     // at the TIMED scale factor, so parquet readers, codegen/JIT, broadcast
@@ -46,15 +96,12 @@ object Bench {
       graft.SessionMemos.drainBuildSecs()
         .map { case (n, s) => s"memo_$n" -> s }
     spark.catalog.clearCache()
-    // --- bench-box calibration probe (r11 judge task 2): the r11 host-
-    // degradation story (three sweeps of identical code 120.8 -> 138.7 ->
-    // 154.0 s) lived in README prose; the artifact now measures host
-    // health itself. One fixed cheap query — q96, the cheapest stable
-    // query in the suite (memoized front-end, ~fixed overhead, exactly
-    // what a scheduling/host probe wants) — is timed min-of-3 right
-    // after warmup and again after the sweep; both vectors land in the
-    // JSON and `host_drift` = end_min/start_min. A drift outside
-    // [1/1.3, 1.3] flags the artifact (`host_degraded`): the host
+    // --- host calibration probe: the artifact measures host health
+    // itself. One fixed cheap query — q96, the cheapest stable query in
+    // the suite (memoized front-end, ~fixed overhead, exactly what a
+    // scheduling/host probe wants) — is timed 3x right after warmup and
+    // again after the sweep; both vectors land in the record with
+    // `host_drift`. A drift above 1.3 flags `host_slowed`: the host
     // changed speed DURING the sweep, so the total is not comparable
     // run-to-run and per-query adjudication vectors are the evidence to
     // read instead. Skipped under SPARK_GRAFT_ONLY (targeted dev runs
@@ -126,31 +173,19 @@ object Bench {
     // Adjudication rule (also in README): a slowdown is real
     // only if the re-measure confirms it; the committed cost of an
     // adjudicated query is min(queries[q], min(adjudicated[q])).
-    // Comparable only when the committed record ran at the SAME scale
-    // factor — an sf1.0 sweep against sf0.1 mins would mass-adjudicate.
-    // The baseline is the file this run will OVERWRITE (read before the
-    // write): an sf1 sweep with SPARK_GRAFT_BENCH_OUT=BENCH_SF1.json
-    // self-adjudicates against the committed sf1 record, not sf0.1's.
-    val committed: Map[String, Double] = try {
-      val baseline = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(baseline)), "UTF-8")
-      val sameSf = """"sf":"([^"]*)"""".r.findFirstMatchIn(txt)
-        .exists(_.group(1) == sfDir)
-      // ... and at the same CORE COUNT (r13 verdict): the driver also runs
-      // an 8-core scaling sweep, and adjudicating a 32-core run against
-      // 8-core mins (or vice versa) would mass-(non-)adjudicate. A record
-      // without a cpus field predates this rule — treat as comparable.
-      val sameCpus = """"cpus":(\d+)""".r.findFirstMatchIn(txt)
-        .forall(_.group(1).toInt == cpus)
-      if (!sameSf || !sameCpus) Map.empty
-      else {
-        val qsec = """"queries":\{([^}]*)\}""".r
-          .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-        """"([^"]+)":(-?\d+(?:\.\d+)?)""".r.findAllMatchIn(qsec)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case _: Exception => Map.empty }
+    // The baseline is the record this run will overwrite (`recordPath`),
+    // comparable only at the SAME scale factor and core count (a record
+    // without a cpus field predates that rule and counts as comparable):
+    // against other mins a sweep would mass-(non-)adjudicate.
+    val comparable = (baseline \ "sf") == JString(sfDir) &&
+      (baseline \ "cpus" match { case JInt(c) => c == cpus; case _ => true })
+    val committed: Map[String, Double] = baseline \ "queries" match {
+      case JObject(qs) if comparable => qs.collect {
+        case (k, JDouble(t)) => k -> t
+        case (k, JInt(t)) => k -> t.toDouble
+      }.toMap
+      case _ => Map.empty
+    }
     val adjudicated = results.flatMap { case (name, dt, times) =>
       def over(factor: Double)(c: Double) =
         c > 0 && dt > factor * c && dt - c > 0.3
@@ -176,8 +211,7 @@ object Bench {
         }
     }
     val calEnd = if (only.isEmpty) calibrate() else Nil
-    val calJson = {
-      def v(ts: Seq[Double]) = ts.map(t => f"$t%.3f").mkString("[", ",", "]")
+    val calibration = {
       // drift = SUM of the 3 reps end/start, not min/min: q96's min is
       // 40–100 ms — inside pure scheduling jitter (committed clean-run
       // drifts read 0.827 and 1.022), so a min-based band flagged noise.
@@ -195,21 +229,10 @@ object Bench {
       // artifact carried host_degraded:true at drift 0.669 for a run
       // that got faster). Raw drift is always reported; readers decide.
       val slowed = !failed && drift > 1.3
-      s"""{"probe":"$calName","start":${v(calStart)},"end":${v(calEnd)},""" +
-        f""""host_drift":$drift%.3f,"probe_failed":$failed,"host_slowed":$slowed}"""
+      JObject("probe" -> JString(calName), "start" -> secsList(calStart),
+        "end" -> secsList(calEnd), "host_drift" -> secs(drift),
+        "probe_failed" -> JBool(failed), "host_slowed" -> JBool(slowed))
     }
-    val adjJson = adjudicated.map { case (k, ts) =>
-      s"\"" + k + "\":" + ts.map(t => f"$t%.3f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    // ALL rep times, not just the min: a per-query min cannot distinguish
-    // a host-load spike from a real regression after the fact (round 4's
-    // q43-q48 block was unadjudicable for exactly this reason) — the full
-    // rep vector makes every number in `queries` auditable post-hoc
-    val repsJson = results.map { case (k, _, ts) =>
-      s"\"" + k + "\":" + ts.map(t => f"$t%.3f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
     // failures carry a -1 sentinel; summing them would silently SHRINK
     // the headline total — exclude them (the per-query map still shows -1)
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -224,47 +247,28 @@ object Bench {
     val adjTotal = results
       .map { case (k, v, _) => math.min(v, adjMin.getOrElse(k, v)) }
       .filter(_ >= 0).sum
-    // "total" is repeated at the END of the line: the driver's log capture
-    // truncates the head of long lines, which made the r3/r4 totals
-    // unrecoverable from the record
-    val landJson = landings.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$repsJson,"adjudicated":$adjJson,"calibration":$calJson,"landings":$landJson,"adjusted_total":${f"$adjTotal%.3f"},"cpus":$cpus,"sf":"$sfDir","total":$total}"""
-    println(line)
-    // The full line above now exceeds the driver's log capture (~15 KB
-    // with 241 rep vectors) and has had its HEAD truncated in every
-    // driver record since r10 — PERF's per-query table, geomean and
-    // scaling block have all been empty because of it (r13 verdict
-    // task 1). So print a SECOND, compact line the capture can hold:
-    // min-only per-query map, no reps/adjudication/calibration (~7 KB).
-    // Parsers that take the last JSON line get this one; the full
-    // auditable record persists to the artifact file below either way.
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpus":$cpus,"sf":"$sfDir","total":$total}"""
-    println(compact)
-    // The driver's log capture ALSO truncates this line's head (r6 lost
-    // q01-q54 and q100+ per-query reps entirely), so persist the full
-    // record to a committed artifact — BENCH_LOCAL.json by default, next
-    // to the repo the driver commits at round end. Best-effort: a bench
-    // run must never fail on a read-only working directory.
-    // Overwrite rule (r13 verdict task 1: the driver's 8-core scaling run
-    // clobbered the committed 32-core record): when the DEFAULT output
-    // already holds a record taken at a DIFFERENT core count, divert this
-    // run's record to a cpus-keyed sibling instead of overwriting it. An
-    // explicit SPARK_GRAFT_BENCH_OUT is the caller's own choice — honored
-    // as given.
-    val outDefault = "BENCH_LOCAL.json"
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", {
-      val clobberOtherCpus = try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(outDefault)), "UTF-8")
-        """"cpus":(\d+)""".r.findFirstMatchIn(txt)
-          .exists(_.group(1).toInt != cpus)
-      } catch { case _: Exception => false }
-      if (clobberOtherCpus) s"BENCH_LOCAL_c$cpus.json" else outDefault
-    })
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (line + "\n").getBytes("UTF-8"))
+    // The full auditable record goes to the record file only (~15 KB with
+    // 241 rep vectors, too long for a log capture). `reps` holds ALL rep
+    // times, not just the min: a per-query min cannot distinguish a
+    // host-load spike from a real regression after the fact — the full
+    // rep vector makes every number in `queries` auditable post-hoc.
+    val record = JObject(
+      "metric" -> JString("total"),
+      "value" -> JDouble(total),
+      "unit" -> JString("sec"),
+      "queries" -> JObject(results.map { case (k, v, _) => k -> secs(v) }.toList),
+      "reps" -> JObject(results.map { case (k, _, ts) => k -> secsList(ts) }.toList),
+      "adjudicated" -> JObject(adjudicated.map { case (k, ts) => k -> secsList(ts) }.toList),
+      "calibration" -> calibration,
+      "landings" -> JObject(landings.toList.sortBy(_._1).map { case (k, v) => k -> secs(v) }),
+      "adjusted_total" -> secs(adjTotal),
+      "cpus" -> JInt(cpus),
+      "sf" -> JString(sfDir),
+      "total" -> JDouble(total))
+    println(stdoutLine(total, cpus, sfDir, results.map { case (k, v, _) => k -> v }))
+    // Best-effort: a bench run must never fail on a read-only working
+    // directory.
+    try Files.writeString(out, compact(record) + "\n")
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write $out: $e")
     }

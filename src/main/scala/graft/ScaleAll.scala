@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.jackson.JsonMethods.compact
 
 /** Materialize a factor-F twin of a full harness dataset — the input for
   * the WHOLE-SUITE scaling sweep (BENCH_SF1.json / SCALING.md): every
@@ -76,7 +78,7 @@ object ScaleAll {
       "documents")
     write(graft.llm.Scaling.scaleEmbeddings(Tables.embeddings(spark, base), factor),
       "embeddings")
-    println(s"""{"scaled": "$out", "factor": $factor}""")
+    println(compact(JObject("scaled" -> JString(out), "factor" -> JInt(factor))))
     spark.stop()
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.json4s._
+import org.json4s.jackson.JsonMethods.compact
 
 /** Empirical scaling curves for the dedup/ANN tier (SCALING.md): build
   * deterministic 1×/3×/10× corpora from a base SF via
@@ -55,9 +57,13 @@ object ScalingBench {
       println(f"| ${f}x | $c41 | $t41%.2f | $r94 | $t94%.2f | $k | $v118 | $t118%.2f | $c143 | $t143%.2f |")
     }
     val json = rows.map { case (f, c41, t41, r94, t94, k, v118, t118, c143, t143) =>
-      f"""{"scale":$f,"q41_cand":$c41,"q41_s":$t41%.3f,"q94_rows":$r94,"q94_s":$t94%.3f,"k":$k,"q118_vol":$v118,"q118_s":$t118%.3f,"q143_cand":$c143,"q143_s":$t143%.3f}"""
-    }.mkString("[", ",", "]")
-    println(s"""{"metric":"scaling","base":"$baseDir","rows":$json}""")
+      JObject("scale" -> JInt(f), "q41_cand" -> JLong(c41), "q41_s" -> Bench.secs(t41),
+        "q94_rows" -> JLong(r94), "q94_s" -> Bench.secs(t94), "k" -> JInt(k),
+        "q118_vol" -> JLong(v118), "q118_s" -> Bench.secs(t118),
+        "q143_cand" -> JLong(c143), "q143_s" -> Bench.secs(t143))
+    }
+    println(compact(JObject("metric" -> JString("scaling"),
+      "base" -> JString(baseDir), "rows" -> JArray(json.toList))))
     spark.stop()
   }
 }

@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.compact
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -16,7 +18,7 @@ object Verify {
     // then diagnosable against the exact boundaries this run sampled.
     sys.props("graft.dist.digest") = "true"
     val digestLines = scala.collection.mutable.LinkedHashMap[String, Seq[String]]()
-    val rowDigests = scala.collection.mutable.LinkedHashMap[String, String]()
+    val rowDigests = scala.collection.mutable.LinkedHashMap[String, JValue]()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -31,30 +33,19 @@ object Verify {
       val dg = Dist.drainDigests()
       if (dg.nonEmpty) digestLines(name) = dg
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val digestJson = digestLines
-      .map { case (k, vs) => s"${q(k)}: ${vs.map(q).mkString("[", ",", "]")}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/dist_digest.json"), digestJson)
-    val rowJson = rowDigests
-      .map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/row_digest.json"), rowJson)
+    def write(file: String, json: String): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"), json)
+    write("oracle_sql.json", oracleJson(SparkEntry.oracleSql))
+    write("dist_digest.json", compact(JObject(digestLines.toList.map {
+      case (k, vs) => k -> JArray(vs.map(JString(_)).toList) })))
+    write("row_digest.json", compact(JObject(rowDigests.toList)))
     spark.stop()
   }
+
+  /** `oracle_sql.json`: query name → DuckDB SQL, every control character
+    * escaped, so a strict reader (Python's `json.load`) accepts any SQL. */
+  def oracleJson(sql: Map[String, String]): String =
+    compact(JObject(sql.toList.map { case (k, v) => k -> JString(v) }))
 
   /** The red-row DIFF CHANNEL (VERDICT r5 #4): a driver hash mismatch used
     * to be unlocalizable — Spark output vs driver-DuckDB vs driver-hash
@@ -67,31 +58,24 @@ object Verify {
     * fully visible in the artifact and a red row becomes a one-look
     * diagnosis. Row cap 2M: every registered output is far below it; the
     * guard only exists so a future unbounded query cannot OOM the
-    * driver JVM. Returns a JSON object literal (keys pre-escaped). */
-  private def rowDigest(spark: SparkSession, path: String): String = {
+    * driver JVM. */
+  private def rowDigest(spark: SparkSession, path: String): JValue = {
     import org.apache.spark.sql.functions.{coalesce, col, concat_ws, lit}
     val df = spark.read.parquet(path)
     val cols = df.columns.sorted
     val n = df.count()
-    if (n > 2000000L) return s"""{"rows": $n, "sha256": "TOO_LARGE"}"""
+    if (n > 2000000L)
+      return JObject("rows" -> JLong(n), "sha256" -> JString("TOO_LARGE"))
     val rendered = df.select(concat_ws("\t",
         cols.toSeq.map(c => coalesce(col(c).cast("string"), lit("\\N"))): _*).as("r"))
       .collect().map(_.getString(0)).sorted
     val md = java.security.MessageDigest.getInstance("SHA-256")
     val sha = md.digest(rendered.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
-    def esc(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val sample =
-      if (n <= 100) s""", "cols": ${cols.map(esc).mkString("[", ",", "]")}, "rows_sorted": ${rendered.map(esc).mkString("[", ",", "]")}"""
-      else ""
-    s"""{"rows": $n, "sha256": "$sha"$sample}"""
+    def strings(ss: Array[String]): JValue = JArray(ss.map(JString(_)).toList)
+    val sample: List[JField] =
+      if (n <= 100) List("cols" -> strings(cols), "rows_sorted" -> strings(rendered))
+      else Nil
+    JObject(("rows" -> JLong(n)) :: ("sha256" -> JString(sha)) :: sample)
   }
 }

@@ -115,7 +115,7 @@ object Dist {
   import org.apache.spark.sql.expressions.Window
 
   /** Post-hoc diagnosability for the range-partitioned utilities: when
-    * enabled (`SPARK_GRAFT_DIST_DIGEST=1` or `-Dgraft.dist.digest=true`),
+    * enabled (the `graft.dist.digest=true` system property, which Verify sets),
     * every [[globalRowNumber]]/[[globalCumSum]] call records one line —
     * `tag pid:rows:minKey:maxKey|…` over the MATERIALIZED range
     * partitioning — into a bounded in-memory log that Verify drains per
@@ -126,9 +126,7 @@ object Dist {
     * extra numParts-row action per call (the checkpoint makes it cheap,
     * but bench runs must not pay it). */
   private val digests = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private def digestOn: Boolean =
-    sys.env.get("SPARK_GRAFT_DIST_DIGEST").contains("1") ||
-      sys.props.get("graft.dist.digest").contains("true")
+  private def digestOn: Boolean = sys.props.get("graft.dist.digest").contains("true")
   def drainDigests(): Seq[String] = {
     val b = Seq.newBuilder[String]
     var s = digests.poll()

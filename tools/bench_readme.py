@@ -1,13 +1,13 @@
 #!/usr/bin/env python3
-"""Regenerate README.md's bench paragraph from a Bench output file.
+"""Regenerate README.md's bench paragraph from a Bench record file.
 
-Usage: python3 tools/bench_readme.py <file-containing-bench-json-line>
+Usage: python3 tools/bench_readme.py <record file, e.g. BENCH_LOCAL.json>
 
 The single source of truth for the README's performance record is the
-bench JSON line ({"metric":"total",...}) the driver captures as
-BENCH_r{N}.json. This script rewrites everything between the
-BENCH:BEGIN/BENCH:END markers so the narrative can never drift from the
-measurement.
+full JSON record Bench writes (BENCH_LOCAL.json by default). Its stdout
+line lists only the slowest queries, so it is not read here. This script
+rewrites everything between the BENCH:BEGIN/BENCH:END markers so the
+narrative can never drift from the measurement.
 """
 import json
 import re
@@ -17,33 +17,8 @@ from pathlib import Path
 README = Path(__file__).resolve().parent.parent / "README.md"
 
 
-def extract_line(path: str) -> dict:
-    # Works on raw Bench stdout, sbt-prefixed logs, AND the driver's
-    # BENCH_r{N}.json, whose "tail" field escapes quotes and may truncate
-    # the head of the line. Strategy: unescape first, then recover the
-    # per-query map and sf directly — they survive any head truncation.
-    text = Path(path).read_text().replace('\\"', '"')
-    # LAST match: dev logs accumulate runs; the most recent one wins
-    maps = re.findall(r'"queries":\{([^}]*)\}', text)
-    if not maps:
-        raise SystemExit("no bench queries map found in " + path)
-    pairs = re.findall(r'"(\w+)":(-?[0-9.Ee+-]+)', maps[-1])
-    if not pairs:
-        raise SystemExit("empty bench queries map in " + path)
-    # LAST match, same as the queries map — pairing the newest timings
-    # with an older run's scale factor would mislabel the measurement.
-    # Bench prints a quoted dir path ("sf":"/root/testdata/sf0.1"); the
-    # driver's BENCH_r{N}.json stores a bare number ("sf": 0.1)
-    sf_all = re.findall(r'"sf":\s*(?:"([^"]*)"|([0-9.]+))', text)
-    sf = next((g for g in sf_all[-1] if g), "?") if sf_all else "?"
-    return {
-        "queries": {k: float(v) for k, v in pairs},
-        "sf": sf,
-    }
-
-
 def main() -> None:
-    b = extract_line(sys.argv[1])
+    b = json.loads(Path(sys.argv[1]).read_text())
     qs = b["queries"]
     failed = sorted(k for k, v in qs.items() if v < 0)
     ok = {k: v for k, v in qs.items() if v >= 0}
@@ -53,7 +28,7 @@ def main() -> None:
     # label from the measurement itself — a hardcoded label would
     # silently mislabel a paragraph generated from a run at another
     # scale factor. Accepts a dir path (…/sf0.1) or a bare number (0.1).
-    sf_label = b["sf"].rstrip("/").rsplit("/", 1)[-1] or "?"
+    sf_label = str(b.get("sf", "?")).rstrip("/").rsplit("/", 1)[-1] or "?"
     if not sf_label.startswith("sf") and sf_label != "?":
         sf_label = "sf" + sf_label
     para = (
