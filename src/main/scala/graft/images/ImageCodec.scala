@@ -1,6 +1,6 @@
 package graft.images
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions.udf
 
 import java.awt.image.BufferedImage
@@ -29,9 +29,13 @@ import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
   * (`batch_processor.py:12-22`).
   *
   * Scale: each UDF is a pure function of one row's bytes — embarrassingly
-  * parallel, no state, no shuffle. Decode failures return null (the
-  * reference's per-file try/except, `filter_crop.py:64-65`); callers filter
-  * nulls into a quarantine output instead of aborting the job.
+  * parallel, no state, no shuffle — and decodes that row's image at most
+  * once: tiling goes through [[cropEncodeAll]], which cuts every tile of an
+  * image from one decode; [[cropEncode]] is its one-box form, used by
+  * the center crop and by the spec that locks the tiles bit for bit.
+  * Decode failures return null (the reference's per-file try/except,
+  * `filter_crop.py:64-65`); callers filter nulls into a quarantine output
+  * instead of aborting the job.
   */
 object ImageCodec {
 
@@ -152,11 +156,16 @@ object ImageCodec {
 
   // ------------------------------------------------------------------- UDFs
 
+  // Marked nondeterministic only to pin it to ONE projection: Catalyst
+  // substitutes a deterministic alias into every filter it pushes below
+  // the projection (`isnotnull(dims)`, or the `size(boxes) > 0` an explode
+  // infers), which would parse the header once per use.
   private val dimsUdf = udf { (bytes: Array[Byte]) =>
     if (bytes == null) None else dimsOf(bytes)
-  }
+  }.withName("imageDims").asNondeterministic()
 
-  /** STRUCT<_1 width, _2 height> or null on decode failure. */
+  /** STRUCT<_1 width, _2 height> or null on decode failure; evaluated once
+    * per row wherever the plan filters on it. */
   def imageDims(content: Column): Column = dimsUdf(content)
 
   private val cropEncodeUdf = udf {
@@ -174,6 +183,29 @@ object ImageCodec {
                  lower: Column, tile: Column, padOption: Column,
                  fmt: Column, quality: Column): Column =
     cropEncodeUdf(content, left, upper, right, lower, tile, padOption, fmt, quality)
+
+  private val cropEncodeAllUdf = udf {
+    (bytes: Array[Byte], boxes: Seq[Row], tile: Int, padOption: String, fmt: String,
+     quality: Int) =>
+      if (bytes == null || boxes == null) None
+      else if (boxes.isEmpty) Some(Seq.empty[Array[Byte]])
+      else decode(bytes).map { img =>
+        boxes.map { b =>
+          def at(field: String) = b.getAs[Number](field).intValue
+          try encode(cropPad(img, at("left"), at("upper"), at("right"), at("lower"),
+            tile, padOption), fmt, quality).orNull
+          catch { case _: Exception => null }
+        }
+      }
+  }
+
+  /** [[cropEncode]] for every box of one image from ONE decode: `boxes` is
+    * an array of structs with `left`/`upper`/`right`/`lower` fields, and the
+    * result holds each box's bytes (null where its encode failed) in box
+    * order. The whole array is null when the image does not decode. */
+  def cropEncodeAll(content: Column, boxes: Column, tile: Column, padOption: Column,
+                    fmt: Column, quality: Column): Column =
+    cropEncodeAllUdf(content, boxes, tile, padOption, fmt, quality)
 
   private val transcodeUdf = udf { (bytes: Array[Byte], fmt: String, quality: Int) =>
     if (bytes == null) None

@@ -9,13 +9,14 @@ import org.apache.spark.sql.functions._
   * two-stage prep, and batch format conversion.
   *
   * Spark-first shape: one `binaryFile` scan per pipeline; dims come from a
-  * header-only UDF (no pixel decode until a kernel needs pixels); grid
-  * geometry is pure column arithmetic (Geometry); only cropEncode touches
-  * pixels. Each pipeline is ONE write pass: every output file of a row
-  * (tile + caption sidecar, cropped image + advice) is a row of one frame
-  * that a single sink call writes and counts — the reference's
-  * `shutil.move` mutation becomes side-effect-free writes
-  * (`modules/filter_crop.py:49-63`).
+  * header-only UDF, parsed once per image (no pixel decode until a kernel
+  * needs pixels); grid geometry is pure column arithmetic (Geometry); only
+  * the crop/encode kernels touch pixels, and each decodes an image once —
+  * tiling cuts all of an image's tiles from that one decode. Each pipeline
+  * is ONE write pass: every output file of a row (tile + caption sidecar,
+  * cropped image + advice) is a row of one frame that a single sink call
+  * writes and counts — the reference's `shutil.move` mutation becomes
+  * side-effect-free writes (`modules/filter_crop.py:49-63`).
   */
 object Tiling {
 
@@ -53,7 +54,8 @@ object Tiling {
     regexp_extract(path, "([^/]+)\\.[^.]+$", 1)
 
   /** F5: attach header-only dims; undecodable rows → quarantine (null dims
-    * filtered by callers via `decoded`). */
+    * filtered by callers via `decoded`). The header is parsed once per row,
+    * even where callers filter on `decoded` (see [[ImageCodec.imageDims]]). */
   def withDims(df: DataFrame): DataFrame =
     df.withColumn("dims", ImageCodec.imageDims(col("content")))
       .withColumn("width", col("dims._1"))
@@ -63,7 +65,12 @@ object Tiling {
 
   /** G1-G5: the tile generator as a DataFrame transform.
     * Input: scanImages output. Output: one row per tile with encoded bytes
-    * and the reference's `{stem}_tile_{i}_{j}.{ext}` name. */
+    * and the reference's `{stem}_tile_{i}_{j}.{ext}` name.
+    *
+    * The grid boxes are an array column, and one [[ImageCodec.cropEncodeAll]]
+    * call per image decodes it once and encodes every box, so before the
+    * explode one row holds all of one image's encoded tiles (memory per
+    * row is that image's tile bytes, not one tile's). */
   def tiles(images: DataFrame, p: TileParams): DataFrame = {
     // Reference format_mapping (`tiling.py:32-33`): JPG→JPEG encoder with a
     // .jpg extension; PNG, NONE, and ANY unrecognized format (even "JPEG",
@@ -83,22 +90,21 @@ object Tiling {
     val auto = p.padOption == "auto"
     base
       .withColumn("tile_size", tileC)
-      .withColumn("step", stepC)
-      .select(col("path"), col("width"), col("height"), col("content"),
-        col("tile_size"),
-        explode(Geometry.gridBoxesDyn(col("width"), col("height"),
-          col("tile_size"), col("step"), lit(p.padding), autoAdjust = auto)).as("b"))
+      .withColumn("boxes", Geometry.gridBoxesDyn(col("width"), col("height"),
+        col("tile_size"), stepC, lit(p.padding), autoAdjust = auto))
+      // computed below the explode, so once per image (a column beside the
+      // generator would be evaluated above it, once per tile)
+      .withColumn("datas", ImageCodec.cropEncodeAll(col("content"), col("boxes"),
+        col("tile_size").cast("int"), lit(p.padOption), lit(ext), lit(p.quality)))
+      .select(col("path"), col("width"), col("height"), col("datas"),
+        posexplode(col("boxes")).as(Seq("pos", "b")))
       .select(col("path"), col("width"), col("height"),
         col("b.i").as("i"), col("b.j").as("j"),
         col("b.left").as("left"), col("b.upper").as("upper"),
         col("b.right").as("right"), col("b.lower").as("lower"),
         format_string("%s_tile_%d_%d." + ext, stem(col("path")), col("b.i"), col("b.j"))
           .as("file_name"),
-        ImageCodec.cropEncode(col("content"),
-          col("b.left").cast("int"), col("b.upper").cast("int"),
-          col("b.right").cast("int"), col("b.lower").cast("int"),
-          col("tile_size").cast("int"), lit(p.padOption), lit(ext), lit(p.quality))
-          .as("data"))
+        element_at(col("datas"), col("pos") + 1).as("data"))
       .withColumn("caption", lit(p.caption))
   }
 

@@ -1,9 +1,11 @@
 package graft.text
 
 import graft.io.Sinks
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, GlobFilter, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** File-level twins of the reference's text entry points — the exact
   * folder-in/file-out workflows a user of the reference runs, built on
@@ -20,12 +22,13 @@ import org.apache.spark.sql.functions._
   * everywhere. Inputs are assumed newline-terminated (POSIX text files) —
   * the reference's own outputs always are.
   *
-  * Scale shape: merge and dedup run as distributed plans until the final
-  * single-file materialization, which is inherent to the reference's
-  * one-file output contract (`writeFilePerRow` writes from executors;
-  * per-file payloads are bounded by the merge guard's reasoning —
-  * see TextOps.requireBoundedGroups). Split reads ONE file as one
-  * wholetext row and cuts it where it lies, so it is one task and one job.
+  * Scale shape: each workflow is one task and one job, since each output
+  * file is one row and the reference's one-file contract puts the whole
+  * input behind it. Merge reads the folder's files as wholetext rows,
+  * lists them without a Spark job and aggregates them in one partition
+  * (the size guard bounds that partition, as TextOps.requireBoundedGroups
+  * does per source). Dedup and split read their ONE file as one
+  * wholetext row and work on its line array where it lies.
   */
 object FileWorkflows {
 
@@ -55,12 +58,18 @@ object FileWorkflows {
     path.substring(path.lastIndexOf('/') + 1)
   }
 
-  /** Concatenate every `*.txt` under `inDir` (sorted filename order) with
-    * a blank-line separator into `outDir/merged_output.txt`.
+  /** Concatenate the `*.txt` files of `inDir` (sorted filename order) with
+    * a blank-line separator into `outDir/merged_output.txt` (empty when
+    * there are none, as the reference's is).
     *
-    * The glob's character classes match any case of the extension
+    * The filter's character classes match any case of the extension
     * (`a.TXT`, `a.Txt`, …), mirroring the reference's
     * `fname.lower().endswith(".txt")` (`other_tasks.py:16`).
+    *
+    * Like the reference's `os.listdir`, only the folder's own files are
+    * read; other subdirectories are skipped. A subdirectory named `*.txt`
+    * is refused — the reference's `open` fails on it — and so is one named
+    * `k=v`, which would make Spark read the folder as a partitioned table.
     *
     * The whole folder becomes ONE output row, so the merge guard runs
     * first: a folder whose total payload exceeds `maxBytes` fails fast
@@ -69,24 +78,22 @@ object FileWorkflows {
   def mergeTextFolder(spark: SparkSession, inDir: String, outDir: String,
                       maxBytes: Long = 256L << 20): String = {
     Sinks.requireEmptyDir(outDir)
-    val glob = s"$inDir/*.[tT][xX][tT]"
-    // Size guard from file METADATA (globStatus), not a data pass: a
-    // wholetext row's octet_length equals the file's byte length, so
-    // summing FileStatus lengths is the same bound at listing cost —
-    // the payload is read exactly once (by the merge itself). A
-    // DIRECTORY matching the glob is expanded one level (that is what
-    // spark.read.text does with a directory input), so its contents
-    // count toward the bound rather than its ~0-byte metadata length.
-    // Like any listing-based bound, files appended between this check
-    // and the merge read escape it — same TOCTOU window the reference's
-    // sequential loop has.
-    val globPath = new Path(glob)
-    val fs = globPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statuses = Option(fs.globStatus(globPath)).getOrElse(Array.empty)
-    // Names HIDDEN to Spark's file reader are skipped even when the glob
-    // matches them directly — the guard must skip them at BOTH levels or
-    // a large _backup.txt would abort a merge whose actual read payload
-    // is tiny. The rule that decides what the reader treats as DATA is
+    val pattern = "*.[tT][xX][tT]"
+    // Size guard from file METADATA, not a data pass: a wholetext row's
+    // octet_length equals the file's byte length, so summing FileStatus
+    // lengths is the same bound at listing cost — the payload is read
+    // exactly once (by the merge itself). It sees the files the reader
+    // reads: the folder's top-level files that `pathGlobFilter` (a Hadoop
+    // GlobFilter) accepts. Like any listing-based bound, files appended
+    // between this check and the merge read escape it — same TOCTOU
+    // window the reference's sequential loop has.
+    val dir = new Path(inDir)
+    val statuses = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+    val txt = new GlobFilter(pattern)
+    // Names HIDDEN to Spark's file reader are skipped even when the
+    // filter matches them — the guard must skip them too or a large
+    // _backup.txt would abort a merge whose actual read payload is tiny.
+    // The rule that decides what the reader treats as DATA is
     // PartitioningAwareFileIndex.isDataPath (verified against the Spark
     // 4.1 bytecode, and empirically in the spec): hidden iff
     // (`_`-prefixed AND not containing '=') OR `.`-prefixed. Note this is
@@ -98,17 +105,25 @@ object FileWorkflows {
       val n = p.getName
       (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
     }
-    val totalBytes = statuses.filterNot(st => hidden(st.getPath)).flatMap { st =>
-      if (st.isDirectory)
-        fs.listStatus(st.getPath).filter(_.isFile).filterNot(f => hidden(f.getPath))
-      else Array(st)
-    }.map(_.getLen + 2L).sum
+    val visible = statuses.filterNot(st => hidden(st.getPath))
+    visible.find(st => st.isDirectory &&
+        (txt.accept(st.getPath) || st.getPath.getName.contains("=")))
+      .foreach(st => throw new IllegalStateException(
+        s"merge input $inDir has a subdirectory ${st.getPath.getName}; " +
+          "expected its *.txt entries to be files"))
+    val totalBytes =
+      visible.filter(st => st.isFile && txt.accept(st.getPath)).map(_.getLen + 2L).sum
     if (totalBytes > maxBytes)
       throw new IllegalStateException(
         s"merge groups exceed $maxBytes bytes: $inDir=${totalBytes}B — " +
           "split the source or raise the bound")
-    val joined = spark.read.option("wholetext", "true").text(glob)
+    // One root path, so Spark lists it in-process (a glob expanding to
+    // more than 32 paths is listed by a Spark job); coalesce(1) puts the
+    // rows where the global aggregate needs them, with no exchange.
+    val joined = spark.read.option("wholetext", "true").option("pathGlobFilter", pattern)
+      .text(inDir)
       .select(decodedName(input_file_name()).as("file"), col("value"))
+      .coalesce(1)
       .agg(array_join(
         transform(array_sort(collect_list(struct(col("file"), col("value")))),
           x => x.getField("value")),
@@ -120,25 +135,25 @@ object FileWorkflows {
   }
 
   /** First-occurrence line dedup of one text file into
-    * `outDir/{name}_purged{ext}` — the reference's `seen`-set loop as a
-    * hash aggregate + order restore. `inFile` must be exactly one file. */
+    * `outDir/{name}_purged{ext}` — the reference's `seen`-set loop is
+    * `array_distinct` over the file's lines, which keeps first occurrences
+    * in order. The file is one wholetext row, so this is one task and one
+    * job. `inFile` must be exactly one file. */
   def removeDuplicatesFile(spark: SparkSession, inFile: String, outDir: String): String = {
-    requireOneFile(spark, inFile)
+    val file = requireOneFile(spark, inFile)
     Sinks.requireEmptyDir(outDir)
     val base = new java.io.File(inFile).getName
     val dot = base.lastIndexOf('.')
     val outName =
       if (dot >= 0) base.substring(0, dot) + "_purged" + base.substring(dot)
       else base + "_purged"
-    val lines = TextOps.linesWithIds(spark, inFile)
-    val purged = lines
-      .groupBy(col("value")).agg(min(col("line_id")).as("line_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("line_id"), col("value")))),
-          x => x.getField("value")),
-        "\n").as("joined"))
-      .select(lit(outName).as("file_name"),
-        encode(concat(col("joined"), lit("\n")), "UTF-8").as("data"))
+    val purged =
+      if (file.getLen == 0) // Spark's file sources skip an empty file
+        spark.range(1).select(lit(outName).as("file_name"), lit("\n".getBytes(UTF_8)).as("data"))
+      else spark.read.option("wholetext", "true").text(inFile)
+        .select(lit(outName).as("file_name"),
+          encode(concat(array_join(array_distinct(TextOps.fileLines(col("value"))), "\n"),
+            lit("\n")), "UTF-8").as("data"))
     Sinks.writeFilePerRow(purged, outDir)
     s"$outDir/$outName"
   }

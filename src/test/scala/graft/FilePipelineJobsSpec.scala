@@ -5,6 +5,9 @@ import graft.images.TilingSpec.{gradientPng, tmpDirWith}
 import graft.text.FileWorkflows
 import org.apache.spark.{CheckpointDirTestAccess, GraftTestHooks}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.storage.StorageLevel
 
 import java.nio.charset.StandardCharsets.UTF_8
@@ -99,5 +102,36 @@ class FilePipelineJobsSpec extends SparkSpec {
     withCheckpointDir(Some(ckpt.toString))(split())
     val written = Files.walk(ckpt).filter(Files.isRegularFile(_)).count()
     assert(written == 0, s"splitTextFile wrote $written file(s) under the checkpoint dir")
+  }
+
+  test("mergeTextFolder and removeDuplicatesFile each run one job and persist nothing") {
+    // the listing of the merge folder counts: a Spark listing job would
+    // run under the same local property
+    val texts = Files.createTempDirectory("graft-jobs-texts")
+    (1 to 40).foreach(i => Files.write(texts.resolve(f"t$i%02d.txt"), s"text $i\n".getBytes(UTF_8)))
+    val merge = footprint(FileWorkflows.mergeTextFolder(spark, texts.toString, outDir()))
+    assert(merge.jobs == 1, s"mergeTextFolder ran ${merge.jobs} jobs")
+    assertNoPersistence(merge, "mergeTextFolder")
+    val lines = Files.createTempDirectory("graft-jobs-in").resolve("lines.txt")
+    Files.write(lines, (1 to 40).map(i => s"line ${i % 7}\n").mkString.getBytes(UTF_8))
+    val dedup = footprint(FileWorkflows.removeDuplicatesFile(spark, lines.toString, outDir()))
+    assert(dedup.jobs == 1, s"removeDuplicatesFile ran ${dedup.jobs} jobs")
+    assertNoPersistence(dedup, "removeDuplicatesFile")
+  }
+
+  test("the image header is parsed once per row in tiles and compatibility") {
+    // Catalyst would substitute the dims UDF into each filter it pushes
+    // below withDims' projection (isnotnull(dims), the explode's inferred
+    // size(boxes) > 0), parsing the header once per use
+    val scan = Tiling.scanImages(spark, images().toString)
+    def dimsCalls(df: DataFrame): Int =
+      (df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }).collect { case node => node.expressions.map(_.collect {
+        case u: ScalaUDF if u.udfName.contains("imageDims") => u
+      }.size).sum }.sum
+    assert(dimsCalls(Tiling.tiles(scan, Tiling.TileParams(tileSize = 64))) == 1)
+    assert(dimsCalls(Tiling.compatibility(scan, 64, 0.25)) == 1)
   }
 }

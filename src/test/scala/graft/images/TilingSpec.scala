@@ -2,7 +2,7 @@ package graft.images
 
 import graft.SparkSpec
 import graft.io.Sinks
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, expr, lit}
 
 import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
@@ -204,6 +204,38 @@ class TilingSpec extends SparkSpec {
     val first = t.orderBy("file_name").collect().head
     val img = ImageIO.read(new java.io.ByteArrayInputStream(first.getAs[Array[Byte]]("data")))
     assert(img.getWidth == 60 && img.getHeight == 60)
+  }
+
+  test("tiles == cropEncode on each row's box: every pad option, png and jpg, num_tiles") {
+    // one decode per image must give the bytes of one decode per tile;
+    // the PNG cut after its header has dims but no pixels, so its tiles
+    // keep null data
+    val dir = tmpDirWith("r.png" -> gradientPng(100, 64), "w.png" -> gradientPng(130, 90),
+      "trunc.png" -> gradientPng(150, 100).take(60))
+    val scan = Tiling.scanImages(spark, dir.toString)
+    val content = scan.select(col("path"), col("content"))
+    for (pad <- Seq("none", "extend", "square", "auto"); fmt <- Seq("None", "JPG");
+         numTiles <- Seq(0, 4)) {
+      val p = Tiling.TileParams(tileSize = 64, overlap = 0.5, numTiles = numTiles,
+        padOption = pad, format = fmt)
+      val ext = if (fmt == "JPG") "jpg" else "png"
+      val tile =
+        if (numTiles > 0) expr("least(width, height) div 2") else lit(64L)
+      val rows = Tiling.tiles(scan, p).join(content, "path")
+        .select(col("file_name"), col("data"),
+          ImageCodec.cropEncode(col("content"), col("left").cast("int"),
+            col("upper").cast("int"), col("right").cast("int"), col("lower").cast("int"),
+            tile.cast("int"), lit(pad), lit(ext), lit(p.quality)).as("ref"))
+        .collect()
+      val what = s"pad=$pad fmt=$fmt numTiles=$numTiles"
+      assert(rows.count(_.getString(0).startsWith("trunc_")) > 0, what)
+      rows.foreach { r =>
+        val name = r.getString(0)
+        if (name.startsWith("trunc_")) assert(r.isNullAt(1), s"$what $name")
+        else assert(!r.isNullAt(1) && java.util.Arrays.equals(
+          r.getAs[Array[Byte]](1), r.getAs[Array[Byte]](2)), s"$what $name")
+      }
+    }
   }
 }
 

@@ -209,4 +209,52 @@ class FileWorkflowsSpec extends SparkSpec {
     assert(Files.list(outDir).iterator().asScala.map(_.getFileName.toString).toSeq == Seq("split_1.txt"))
     assert(bytes(outDir.resolve("split_1.txt")).isEmpty)
   }
+
+  test("removeDuplicatesFile of an empty file writes a single newline") {
+    // Spark's reader skips an empty file; the output is what a global
+    // aggregate over zero lines gave: an empty join plus the final "\n"
+    val in = tmp("fw-dedup-empty-in").resolve("input.txt")
+    Files.write(in, Array.emptyByteArray)
+    val outDir = tmp("fw-dedup-empty-out").resolve("out")
+    val outFile = FileWorkflows.removeDuplicatesFile(spark, in.toString, outDir.toString)
+    assert(Files.list(outDir).iterator().asScala.map(_.getFileName.toString).toSeq ==
+      Seq("input_purged.txt"))
+    assert(bytes(java.nio.file.Paths.get(outFile)) == "\n".getBytes(UTF_8).toSeq)
+  }
+
+  test("mergeTextFolder of a folder with no *.txt file writes an empty merged file") {
+    // the reference opens its output file and writes nothing into it
+    val in = tmp("fw-none-in")
+    Files.write(in.resolve("notes.md"), "notes\n".getBytes(UTF_8))
+    val outFile = FileWorkflows.mergeTextFolder(spark, in.toString,
+      tmp("fw-none-out").resolve("out").toString)
+    assert(bytes(java.nio.file.Paths.get(outFile)).isEmpty)
+  }
+
+  test("mergeTextFolder reads the folder's own files: a *.txt or k=v subdirectory is refused") {
+    // the reference's os.listdir + open: other subdirectories are skipped,
+    // and open() fails on a directory named *.txt — refused here before
+    // any read, whatever it holds (notes.md included)
+    val in = tmp("fw-subdir-in")
+    Files.write(in.resolve("a.txt"), "top\n".getBytes(UTF_8))
+    val sub = Files.createDirectory(in.resolve("sub"))
+    Files.write(sub.resolve("s.txt"), ("s" * 4096 + "\n").getBytes(UTF_8))
+    // guard and reader both skip sub/: a bound its file would blow holds,
+    // and none of its bytes are merged
+    val outFile = FileWorkflows.mergeTextFolder(spark, in.toString,
+      tmp("fw-subdir-out").resolve("out").toString, maxBytes = 1024L)
+    assert(bytes(java.nio.file.Paths.get(outFile)) == "top\n".getBytes(UTF_8).toSeq)
+    for (name <- Seq("nested.txt", "k=1")) {
+      val dir = Files.createDirectory(in.resolve(name))
+      Files.write(dir.resolve("payload.txt"), "payload\n".getBytes(UTF_8))
+      Files.write(dir.resolve("notes.md"), "notes\n".getBytes(UTF_8))
+      val out = tmp("fw-subdir-out").resolve("out")
+      val e = intercept[IllegalStateException] {
+        FileWorkflows.mergeTextFolder(spark, in.toString, out.toString)
+      }
+      assert(e.getMessage.contains(in.toString) && e.getMessage.contains(name), e.getMessage)
+      assert(Files.list(out).count() == 0, s"$name: nothing may be written")
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+    }
+  }
 }
