@@ -3053,9 +3053,13 @@ object CorpusStats {
 
   private def spanLangCensusCore(docs: DataFrame, langs: Seq[String],
       profiles: Map[String, Map[String, Int]]): DataFrame = {
+    // Score on every core: the scan is one task, and the segment window
+    // and per-doc aggregates reuse this doc_id partitioning. AQE keeps an
+    // explicit partition count, so it cannot coalesce the scoring stage.
     val toks = docs
       .select(col("doc_id"), col("source"), col("lang"),
         TextOps.tokens(lower(col("text"))).as("toks"))
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
     val perDoc = langSegmentsScored(toks, langs, profiles, Seq("source", "lang"))
       .groupBy(col("doc_id"), col("source"), col("lang"), col("seg_id"),
         col("pred_lang"))

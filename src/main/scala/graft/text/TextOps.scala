@@ -18,9 +18,9 @@ import org.apache.spark.sql.expressions.Window
   *    (`other_tasks.py:69-98`).
   *
   * The row identity used for "original order" is `doc_id` (the harness
-  * tables have explicit keys). For raw text files the library derives ids
-  * from (input_file_name, per-file row_number) — see linesWithIds — never
-  * from monotonically_increasing_id, whose values depend on partition
+  * tables have explicit keys). Raw text files are read whole and split
+  * with [[fileLines]], so a line's position in its file is its identity —
+  * never monotonically_increasing_id, whose values depend on partition
   * layout and would make results non-deterministic across runs.
   */
 object TextOps {
@@ -36,19 +36,6 @@ object TextOps {
     * line terminator and would drop that blank last line too. */
   private[text] def fileLines(text: Column): Column =
     split(regexp_replace(text, "\n\\z", ""), "\n", -1)
-
-  /** Raw text files → (file, line_id, value) with DETERMINISTIC line ids.
-    * `spark.read.text` + a partition-unordered window would number lines
-    * nondeterministically when a file splits across partitions; reading
-    * wholetext and exploding keeps exact in-file order (see [[fileLines]]).
-    * Memory is bounded per FILE — for multi-GB single files switch to an
-    * offset-carrying datasource; for the reference's folder-of-small-files
-    * model this is the right trade. */
-  def linesWithIds(spark: SparkSession, globPath: String): DataFrame =
-    spark.read.option("wholetext", "true").text(globPath)
-      .select(input_file_name().as("file"), posexplode(fileLines(col("value"))))
-      .select(col("file"), col("pos").cast("long").as("line_id"),
-        col("col").as("value"))
 
   /** Order-preserving exact dedup (reference D1): first occurrence wins.
     * One hash-aggregate shuffle on the value — same cost shape as

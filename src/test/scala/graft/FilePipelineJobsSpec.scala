@@ -3,16 +3,12 @@ package graft
 import graft.images.Tiling
 import graft.images.TilingSpec.{gradientPng, tmpDirWith}
 import graft.text.FileWorkflows
-import org.apache.spark.{CheckpointDirTestAccess, GraftTestHooks}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.storage.StorageLevel
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Structural lock on the file pipelines: each call is one write pass.
   * Job counts and persisted RDDs are exact where wall-clock timings are
@@ -20,51 +16,11 @@ import java.util.concurrent.atomic.AtomicInteger
   * here even when a benchmark run cannot tell. */
 class FilePipelineJobsSpec extends SparkSpec {
 
-  /** What one call did to the engine: the jobs it started, how many of
-    * those jobs read or built a persisted RDD, and the persisted RDDs it
-    * left behind. Only jobs submitted under this call's own local property
-    * count, and RDDs other suites persisted in the shared session before
-    * the call are not its own. */
-  private case class Footprint(jobs: Int, persistedJobs: Int, leftPersisted: Set[Int])
+  private def footprint(body: => Any): CallFootprint = CallFootprint.of(spark)(body)
 
-  private def footprint(body: => Any): Footprint = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger
-    val persisted = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.spec.call") == tag)) {
-          jobs.incrementAndGet()
-          if (e.stageInfos.exists(_.rddInfos.exists(_.storageLevel != StorageLevel.NONE)))
-            persisted.incrementAndGet()
-        }
-    }
-    val before = sc.getPersistentRDDs.keySet
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.spec.call", tag)
-    try {
-      body
-      GraftTestHooks.drainListenerBus(sc)
-      Footprint(jobs.get, persisted.get, sc.getPersistentRDDs.keySet.toSet -- before)
-    } finally {
-      sc.setLocalProperty("graft.spec.call", null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
-  private def assertNoPersistence(f: Footprint, call: String): Unit =
+  private def assertNoPersistence(f: CallFootprint, call: String): Unit =
     assert(f.persistedJobs == 0 && f.leftPersisted.isEmpty,
       s"$call ran ${f.persistedJobs} job(s) over a persisted RDD, left ${f.leftPersisted}")
-
-  /** Runs `body` with the session's checkpoint dir set to `dir` (None:
-    * unset, so lineage cuts are local checkpoints), then restores it. */
-  private def withCheckpointDir[T](dir: Option[String])(body: => T): T = {
-    val sc = spark.sparkContext
-    val saved = CheckpointDirTestAccess.get(sc)
-    CheckpointDirTestAccess.set(sc, dir)
-    try body finally CheckpointDirTestAccess.set(sc, saved)
-  }
 
   private def images() = tmpDirWith(
     "good.png" -> gradientPng(160, 112), // compatible at tile 64, overlap 0.25
@@ -94,12 +50,12 @@ class FilePipelineJobsSpec extends SparkSpec {
     Files.write(in, (1 to 40).map(i => s"line $i\n").mkString.getBytes(UTF_8))
     def split() = FileWorkflows.splitTextFile(spark, in.toString, outDir(), 8)
     // without a checkpoint dir a lineage cut would persist an RDD ...
-    val local = withCheckpointDir(None)(footprint(split()))
+    val local = CallFootprint.withCheckpointDir(spark, None)(footprint(split()))
     assert(local.jobs == 1, s"splitTextFile ran ${local.jobs} jobs")
     assertNoPersistence(local, "splitTextFile")
     // ... and with one it would write there
     val ckpt = Files.createTempDirectory("graft-jobs-ckpt")
-    withCheckpointDir(Some(ckpt.toString))(split())
+    CallFootprint.withCheckpointDir(spark, Some(ckpt.toString))(split())
     val written = Files.walk(ckpt).filter(Files.isRegularFile(_)).count()
     assert(written == 0, s"splitTextFile wrote $written file(s) under the checkpoint dir")
   }

@@ -171,7 +171,7 @@ class PlanHygieneSpec extends SparkSpec {
     // contract (work ∝ batch), not by plan structure; both scaladocs
     // document the SMJ degradation path when a batch outgrows broadcast.
     "q68_incremental_dedup" -> "the ingest batch (sigs/band keys/texts), work-in-batch contract",
-    "q87_bucketed_incremental_dedup" -> "batch band keys + O(batch x bucket multiplicity) candidates + <=|batch| matched texts",
+    "q87_bucketed_incremental_dedup" -> "batch band keys (|batch| x Bands rows) + batch payload (|batch| rows) + O(batch x bucket multiplicity) candidate pairs + <=|candidates| match keys",
     "q178_containment_ingest" -> "the ingest batch shingle sets",
     "q233_incremental_ingest" -> "batch canon/digest/band/prefix probes + batch-bounded survivor sets (IngestSpec plan-asserts the corpus side)",
     // --- fixed probe/query frames: a literal id predicate bounds them

@@ -84,6 +84,28 @@ class TableDriftSpec extends SparkSpec {
     }
   }
 
+  test("a table rewritten at the same path is read with its new schema") {
+    // Tables reuses an inferred schema per file state; a rewrite in the
+    // same session must not be read through the old one
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val base = java.nio.file.Files.createTempDirectory("graft-drift-same").toString
+    val docs = java.nio.file.Paths.get(base, "documents.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sfDir, "documents.parquet"), docs)
+    val q = SparkEntry.queries("q124_exact_stratified_sample")
+    val ref = q(spark, base).collect().map(_.toString).sorted.toSeq
+    assert(Tables.documents(spark, base).schema("doc_id").dataType == LongType)
+    val staged = s"$base/staged"
+    spark.read.parquet(docs.toString)
+      .withColumn("doc_id", col("doc_id").cast("int"))
+      .coalesce(1).write.parquet(staged)
+    java.nio.file.Files.delete(docs)
+    java.nio.file.Files.move(java.nio.file.Paths.get(staged), docs)
+    assert(Tables.documents(spark, base).schema("doc_id").dataType == IntegerType,
+      "the rewritten file must be read with its new physical type")
+    val got = q(spark, base).collect().map(_.toString).sorted.toSeq
+    assert(ref.nonEmpty && got == ref, "q124 differs over the rewritten table")
+  }
+
   test("similarity queries survive a float→double embedding re-encode") {
     // every embedding kernel quantizes via an element-wise cast-to-double
     // (llm/Similarity.quantize), so array<double> embeddings must be

@@ -192,6 +192,28 @@ class LayoutSpec extends SparkSpec {
     spark.sql(s"DROP TABLE $table")
   }
 
+  test("ensureBucketed re-lands when the build changes over the same source files") {
+    import spark.implicits._
+    val src = java.nio.file.Files.createTempDirectory("graft-build-src").toString
+    val table = "graft_build_guard_spec"
+    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
+      .write.mode("overwrite").parquet(src)
+    def land(build: => org.apache.spark.sql.DataFrame): Unit =
+      Layout.ensureBucketed(spark, table, "k", numBuckets = 2)(build)
+    land(spark.read.parquet(src).select(col("k"), col("v")))
+    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ('spec.marker' = '1')")
+    def hasMarker: Boolean = spark.sql(s"SHOW TBLPROPERTIES $table")
+      .filter(col("key") === "spec.marker").count() == 1
+    land(spark.read.parquet(src).select(col("k"), col("v")))
+    assert(hasMarker, "the same build over unchanged files must not re-land")
+    // same files, a new column: the landed table would miss it
+    land(spark.read.parquet(src).select(col("k"), col("v"), upper(col("v")).as("u")))
+    assert(!hasMarker, "a changed build schema must trigger a rebuild")
+    assert(spark.table(table).columns.toSeq == Seq("k", "v", "u"),
+      "the re-landed table must have the new build's columns")
+    spark.sql(s"DROP TABLE $table")
+  }
+
   test("ErrorIfExists refuses a second write (reference K6 precondition)") {
     val out = Files.createTempDirectory("graft-layout2").resolve("docs").toString
     val docs = graft.Tables.documents(spark, sfDir).limit(10)

@@ -99,4 +99,30 @@ class LangSegmentationSpec extends SparkSpec {
     assert(got.toSeq.sorted == Seq((1L, "la", 1L, 5L), (2L, "la", 1L, 5L),
       (3L, "la", 1L, 5L)), s"degenerate census wrong: ${got.toSeq.sorted}")
   }
+
+  test("q238 scores above its doc_id exchange, with the exchange count of its one-task plan") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plan = executedPlanOf(CorpusStats.spanLangCensus(spark, sfDir))
+    val shuffles = allPlanNodes(plan).collect { case s: ShuffleExchangeExec => s }
+    // the doc_id partitioning (it replaced the segment window's own), the
+    // census aggregate and the single-partition sort: the count the plan
+    // had when scoring ran in the scan's one task
+    assert(shuffles.size == 3, s"q238 plans ${shuffles.size} shuffle exchanges")
+    def byDocId(p: SparkPlan): Boolean = p match {
+      case s: ShuffleExchangeExec => s.outputPartitioning match {
+        case h: HashPartitioning => h.references.map(_.name).toSet == Set("doc_id")
+        case _ => false
+      }
+      case _ => false
+    }
+    // the scoring kernel runs in the stage that reads the doc_id exchange,
+    // not in the scan's stage below it
+    val scoring = allPlanNodes(plan).filter(_.expressions.exists(_.exists(
+      _.isInstanceOf[graft.functions.CtDistances])))
+    assert(scoring.nonEmpty, "no CtDistances in the plan")
+    assert(scoring.forall(n => allPlanNodes(n).exists(byDocId)),
+      "the window scoring runs below the doc_id exchange")
+  }
 }

@@ -71,14 +71,15 @@ class TextOpsSpec extends SparkSpec {
     assert((1 to 10).map(chunkOf) == Seq(0, 0, 1, 1, 2, 2, 3, 3, 4, 4))
   }
 
-  test("linesWithIds: exact per-file order, trailing newline, blank interior lines") {
+  test("fileLines: exact per-file order, trailing newline, blank interior lines") {
     val dir = Files.createTempDirectory("graft-lines")
     Files.write(dir.resolve("a.txt"), "l1\n\nl3\n".getBytes(StandardCharsets.UTF_8))
     Files.write(dir.resolve("b.txt"), "x".getBytes(StandardCharsets.UTF_8)) // no trailing \n
     Files.write(dir.resolve("c.txt"), "a\n\n".getBytes(StandardCharsets.UTF_8)) // blank last line
-    val rows = TextOps.linesWithIds(spark, dir.toString + "/*.txt")
-      .orderBy("file", "line_id").collect()
-      .map(r => (r.getString(0).split('/').last, r.getLong(1), r.getString(2))).toSeq
+    val rows = spark.read.option("wholetext", "true").text(dir.toString + "/*.txt")
+      .select(input_file_name().as("file"), posexplode(TextOps.fileLines(col("value"))))
+      .orderBy("file", "pos").collect()
+      .map(r => (r.getString(0).split('/').last, r.getInt(1).toLong, r.getString(2))).toSeq
     assert(rows == Seq(
       ("a.txt", 0L, "l1"), ("a.txt", 1L, ""), ("a.txt", 2L, "l3"),
       ("b.txt", 0L, "x"),
