@@ -139,21 +139,31 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }
 
-/** Distributed equivalents of inherently-sequential operations. */
+/** Distributed equivalents of inherently-sequential operations.
+  *
+  * The global row numbers and running sums ([[Dist.globalRowNumber]],
+  * [[Dist.globalRowNumberWithin]], [[Dist.globalCumSum]],
+  * [[Dist.globalCumSum2]]) are four calls of one core, `rangeRunning`,
+  * which holds the one rule they depend on: the data branch and the
+  * offsets branch must read ONE checkpointed range partitioning. Both
+  * branches contain the range exchange; if the planner re-executed it
+  * instead of reusing the stage, RangePartitioner would re-sample its
+  * boundaries with a fresh RDD-id-derived seed, the branches would
+  * disagree on which keys live in which `__pid`, and the offsets join
+  * would corrupt the result (overlapping q115 buckets, before the
+  * checkpoint). */
 object Dist {
   import org.apache.spark.sql.expressions.Window
 
-  /** Post-hoc diagnosability for the range-partitioned utilities: when
-    * enabled (the `graft.dist.digest=true` system property, which Verify sets),
-    * every [[globalRowNumber]]/[[globalCumSum]] call records one line —
+  /** Post-hoc diagnosability for the range-partitioned helpers: when
+    * enabled (the `graft.dist.digest=true` system property, which Verify
+    * sets), every helper call records one line —
     * `tag pid:rows:minKey:maxKey|…` over the MATERIALIZED range
-    * partitioning — into a bounded in-memory log that Verify drains per
-    * query and dumps as `dist_digest.json`. A driver-side hash mismatch
-    * on a Dist-based query is then diagnosable against the exact
-    * partitioner boundaries that run sampled, instead of being
-    * unreproducible after the fact. Off by default: recording costs one
-    * extra numParts-row action per call (the checkpoint makes it cheap,
-    * but bench runs must not pay it). */
+    * partitioning — into an in-memory log that Verify drains per query
+    * and dumps as `dist_digest.json`. A hash mismatch on a Dist-based
+    * query is then diagnosable against the exact partitioner boundaries
+    * that run sampled. Off by default: recording costs one
+    * extra numParts-row action per call. */
   private val digests = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   private def digestOn: Boolean = sys.props.get("graft.dist.digest").contains("true")
   def drainDigests(): Seq[String] = {
@@ -172,41 +182,57 @@ object Dist {
         .mkString(s"$tag ", "|", ""))
     }
 
-  /** Global 1-based row number ordered by a unique `key`, WITHOUT the
-    * single-partition window (`Window.orderBy(key)` moves every row to one
-    * task — Spark's own WindowExec warning; fatal at 100 TB).
+  /** The range-partitioned running-total core. Adds one column per entry
+    * of `runs`: the inclusive running total, in `key` order, within each
+    * `partCol` value (or over the whole frame) — a row count where the
+    * weight is None (a count is never null, so neither is a row number),
+    * else the sum of the weight cast to long.
     *
-    * Shape: range-repartition on the key (partition i holds keys < partition
-    * i+1's), per-partition `row_number` over the local sort, then add each
-    * partition's cumulative predecessor count via a tiny (numPartitions-row)
-    * broadcast join. Result column: `rn`.
-    *
-    * The range exchange samples the child to pick boundaries — same cost
-    * model as a global orderBy, but the window itself stays parallel. */
-  def globalRowNumber(df: DataFrame, key: Column, numParts: Int = 32): DataFrame = {
-    // The partitioned frame MUST be checkpointed: the data branch and the
-    // offsets branch both contain the range exchange, and if the planner
-    // re-executes it instead of reusing the stage, RangePartitioner
-    // re-SAMPLES boundaries with a fresh RDD-id-derived seed — the two
-    // branches then disagree on which keys live in which __pid and the
-    // offsets join corrupts the numbering (observed as overlapping
-    // buckets in q115 before the fix). One materialized RDD makes the
-    // pid→range mapping consistent by construction.
-    val parted = df.repartitionByRange(numParts, key)
+    * Range-repartition on (`partCol`, `key`) into `numParts` (the rows of
+    * one part value occupy a contiguous run of partitions, sorted by key
+    * across them), tag `__pid` and checkpoint. Each (pid[, part]) cell
+    * takes local running totals in a partitioned window, plus the summed
+    * totals of the same part's cells in earlier pids (with no `partCol`,
+    * the frame is one part). A cell has a nonzero offset only where its
+    * part crosses a partition boundary, and at most numParts−1 boundaries
+    * exist, so the broadcast offsets frame holds ≤ numParts−1 rows
+    * whatever |parts| or the skew; cells absent from it coalesce to 0.
+    * The range exchange samples the child to pick boundaries (a global
+    * orderBy's cost), but no data window ever runs in a single partition. */
+  private def rangeRunning(tag: String, df: DataFrame, partCol: Option[String],
+      key: Column, numParts: Int, runs: (String, Option[Column])*): DataFrame = {
+    val ix = runs.indices
+    val weighted = ix.foldLeft(df) { (d, i) =>
+      runs(i)._2.fold(d)(w => d.withColumn(s"__w$i", w.cast("long")))
+    }
+    val part = partCol.map(col).toSeq
+    val parted = weighted.repartitionByRange(numParts, part :+ key: _*)
       .withColumn("__pid", spark_partition_id())
       .transform(durableCkpt)
-    recordDigest("rowNumber", parted, key)
-    val local = parted.withColumn("__local_rn",
-      row_number().over(Window.partitionBy(col("__pid")).orderBy(key)))
-    val offsets = parted.groupBy(col("__pid")).agg(count(lit(1)).as("__cnt"))
-      .withColumn("__offset",
-        coalesce(sum(col("__cnt")).over(
-          Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__offset"))
-    local.join(broadcast(offsets), Seq("__pid"))
-      .withColumn("rn", col("__offset") + col("__local_rn"))
-      .drop("__pid", "__local_rn", "__offset")
+    recordDigest(tag, parted, partCol.fold(key)(p => struct(col(p), key)))
+    val total = ix.map(i => runs(i)._2.fold(count(lit(1)))(_ => sum(col(s"__w$i"))))
+    val cell = col("__pid") +: part
+    val upToRow = Window.partitionBy(cell: _*).orderBy(key)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val local = ix.foldLeft(parted)((d, i) => d.withColumn(s"__l$i", total(i).over(upToRow)))
+    val earlierPids = Window.partitionBy(part: _*).orderBy(col("__pid"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val cellTotals = ix.map(i => total(i).as(s"__t$i"))
+    val offsets = parted.groupBy(cell: _*).agg(cellTotals.head, cellTotals.tail: _*)
+      .select(cell ++ ix.map(i =>
+        coalesce(sum(col(s"__t$i")).over(earlierPids), lit(0L)).as(s"__o$i")): _*)
+      .filter(ix.map(i => col(s"__o$i") =!= 0).reduce(_ || _))
+    val joined = local.join(broadcast(offsets), "__pid" +: partCol.toSeq, "left")
+    ix.foldLeft(joined) { (d, i) =>
+      d.withColumn(runs(i)._1, coalesce(col(s"__o$i"), lit(0L)) + col(s"__l$i"))
+    }.drop("__pid" +: ix.flatMap(i => Seq(s"__w$i", s"__l$i", s"__o$i")): _*)
   }
+
+  /** Global 1-based row number `rn` ordered by a unique `key`, without the
+    * single-partition window (`Window.orderBy(key)` moves every row to one
+    * task — Spark's own WindowExec warning; fatal at 100 TB). */
+  def globalRowNumber(df: DataFrame, key: Column, numParts: Int = 32): DataFrame =
+    rangeRunning("rowNumber", df, None, key, numParts, "rn" -> None)
 
   /** numParts resolution shared by the range-partitioned helpers:
     * positive = caller's explicit choice; ≤ 0 = derive from the data as
@@ -216,126 +242,35 @@ object Dist {
     else math.max(df.sparkSession.sparkContext.defaultParallelism,
       df.rdd.getNumPartitions)
 
-  /** 1-based row number WITHIN a partition column, ordered by a unique
-    * `key`, without ever materializing one partition value on one task —
+  /** 1-based row number `rn` WITHIN `partCol`, ordered by a unique `key` —
     * the hot-key-safe form of `row_number().over(Window.partitionBy(part)
-    * .orderBy(key))`. A plain window ships EVERY row of a partition value
-    * to a single task: fine when values are small (q212's five fixture
-    * hosts), fatal when one is hot (at web scale a single hot domain's
-    * fetch queue would serialize its schedule into one task — the q212
-    * SURVEY caveat this closes).
-    *
-    * Shape: range-repartition on (part, key) — rows of one part value
-    * occupy a CONTIGUOUS run of partitions, sorted by key across them —
-    * then a (\_\_pid, part) local row_number, plus each (pid, part)'s
-    * predecessor count within its part. The offsets attach stays a tiny
-    * broadcast by a boundedness argument one step beyond
-    * [[globalRowNumber]]'s: a (pid, part) cell needs a NONZERO offset only
-    * when an earlier pid also holds that part — i.e. the part SPANS a
-    * partition boundary — and ≤ numParts−1 boundaries exist, so ≤
-    * numParts−1 rows carry a nonzero offset regardless of |parts| or
-    * skew. Cells absent from the broadcast coalesce to 0. Result column:
-    * `rn` (1-based within `part`).
-    *
-    * `numParts` ≤ 0 (the default) derives the count from the DATA:
-    * max(session default parallelism, the child's planned partitions) —
-    * a fixed 32 would under-parallelize a 256-core cluster and
-    * over-partition a tiny frame (r11 verdict task 7). The result is
-    * partitioning-invariant (rn is defined by the key ordering alone),
-    * so the choice moves only cost, never hashes. The boundary-spill
-    * bound scales with it: ≤ numParts−1 rows broadcast either way. */
+    * .orderBy(key))`. A plain window ships every row of a part value to
+    * one task: fine for q212's five fixture hosts, fatal when one domain
+    * is hot at web scale. `numParts` ≤ 0 (the default) derives the count
+    * from the data ([[autoParts]]), so a fixed 32 neither
+    * under-parallelizes a big cluster nor over-partitions a tiny frame;
+    * rn is defined by the key ordering alone, so the choice moves only
+    * cost, never hashes. */
   def globalRowNumberWithin(df: DataFrame, partCol: String, key: Column,
-      numParts: Int = 0): DataFrame = {
-    val nParts = autoParts(df, numParts)
-    // checkpointed for globalRowNumber's reason: both branches must read
-    // ONE materialized range partitioning or re-sampled boundaries
-    // corrupt the offsets join
-    val parted = df.repartitionByRange(nParts, col(partCol), key)
-      .withColumn("__pid", spark_partition_id())
-      .transform(durableCkpt)
-    recordDigest("rowNumberWithin", parted, struct(col(partCol), key))
-    val local = parted.withColumn("__local_rn",
-      row_number().over(
-        Window.partitionBy(col("__pid"), col(partCol)).orderBy(key)))
-    val spill = parted.groupBy(col("__pid"), col(partCol))
-      .agg(count(lit(1)).as("__cnt"))
-      .withColumn("__offset",
-        coalesce(sum(col("__cnt")).over(
-          Window.partitionBy(col(partCol)).orderBy(col("__pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .filter(col("__offset") > 0) // ≤ numParts−1 rows by construction
-      .select(col("__pid"), col(partCol), col("__offset"))
-    local.join(broadcast(spill), Seq("__pid", partCol), "left")
-      .withColumn("rn", coalesce(col("__offset"), lit(0L)) + col("__local_rn"))
-      .drop("__pid", "__local_rn", "__offset")
-  }
+      numParts: Int = 0): DataFrame =
+    rangeRunning("rowNumberWithin", df, Some(partCol), key, autoParts(df, numParts),
+      "rn" -> None)
 
-  /** Global weighted running sum ordered by a unique `key` — the weighted
-    * sibling of [[globalRowNumber]], same shape, same reason: a
-    * `Window.orderBy(key)` cumsum moves every row to one task. Range
-    * partition on the key, per-partition local cumsum, then add each
-    * partition's total-weight predecessor sum via the tiny broadcast
-    * offsets join. The partitioned frame is checkpointed for the same
-    * reason as [[globalRowNumber]] — both branches must read ONE
-    * materialized range partitioning, or a re-sampled exchange corrupts
-    * the offsets. Result column: `cum` (inclusive of the current row's
-    * weight). */
+  /** Global running sum `cum` of `weight` (cast to long, inclusive of the
+    * current row) ordered by a unique `key` — the weighted sibling of
+    * [[globalRowNumber]]. */
   def globalCumSum(df: DataFrame, key: Column, weight: Column,
-      numParts: Int = 32): DataFrame = {
-    val parted = df.withColumn("__w", weight.cast("long"))
-      .repartitionByRange(numParts, key)
-      .withColumn("__pid", spark_partition_id())
-      .transform(durableCkpt)
-    recordDigest("cumSum", parted, key)
-    val local = parted.withColumn("__local_cum",
-      sum(col("__w")).over(Window.partitionBy(col("__pid")).orderBy(key)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val offsets = parted.groupBy(col("__pid")).agg(sum(col("__w")).as("__tot"))
-      .withColumn("__offset",
-        coalesce(sum(col("__tot")).over(
-          Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__offset"))
-    local.join(broadcast(offsets), Seq("__pid"))
-      .withColumn("cum", col("__offset") + col("__local_cum"))
-      .drop("__pid", "__local_cum", "__offset", "__w")
-  }
+      numParts: Int = 32): DataFrame =
+    rangeRunning("cumSum", df, None, key, numParts, "cum" -> Some(weight))
 
-  /** TWO global running sums over the SAME key ordering in one pass —
-    * for consumers that need a pair of cumulative series (q166's
-    * cum_types/cum_tokens): chaining [[globalCumSum]] twice pays two
-    * range exchanges, two checkpoints and two window passes over the
-    * identical partitioning; the sums are independent per row, so one
-    * partitioning serves both (guide §2.4 — operations keyed the same
-    * way share one exchange). Result columns: `cum1`, `cum2`
-    * (inclusive). Equivalence to the chained form is spec-locked
-    * (DistSpec). */
+  /** TWO running sums `cum1`, `cum2` over the same key ordering from one
+    * range partitioning, for consumers that need a pair of cumulative
+    * series (q166's cum_types/cum_tokens): chaining [[globalCumSum]]
+    * twice pays two range exchanges, two checkpoints and two window
+    * passes. Equivalence to the chained form is spec-locked (DistSpec). */
   def globalCumSum2(df: DataFrame, key: Column, w1: Column, w2: Column,
-      numParts: Int = 32): DataFrame = {
-    val parted = df.withColumn("__w1", w1.cast("long"))
-      .withColumn("__w2", w2.cast("long"))
-      .repartitionByRange(numParts, key)
-      .withColumn("__pid", spark_partition_id())
-      .transform(durableCkpt)
-    recordDigest("cumSum2", parted, key)
-    val w = Window.partitionBy(col("__pid")).orderBy(key)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = parted
-      .withColumn("__lc1", sum(col("__w1")).over(w))
-      .withColumn("__lc2", sum(col("__w2")).over(w))
-    val offsets = parted.groupBy(col("__pid"))
-      .agg(sum(col("__w1")).as("__t1"), sum(col("__w2")).as("__t2"))
-      .withColumn("__o1",
-        coalesce(sum(col("__t1")).over(
-          Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__o2",
-        coalesce(sum(col("__t2")).over(
-          Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__o1"), col("__o2"))
-    local.join(broadcast(offsets), Seq("__pid"))
-      .withColumn("cum1", col("__o1") + col("__lc1"))
-      .withColumn("cum2", col("__o2") + col("__lc2"))
-      .drop("__pid", "__lc1", "__lc2", "__o1", "__o2", "__w1", "__w2")
-  }
+      numParts: Int = 32): DataFrame =
+    rangeRunning("cumSum2", df, None, key, numParts, "cum1" -> Some(w1), "cum2" -> Some(w2))
 
   /** Unlock multi-core compute above an UNSPLITTABLE scan: repartition to
     * the session's default parallelism IFF the frame currently plans fewer

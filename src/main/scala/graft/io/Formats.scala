@@ -21,7 +21,9 @@ import org.apache.spark.sql.types.StructType
   * Both sources are splittable at scale (JSONL by line; CSV only when
   * multiLine=false — the spec documents that trade: lossless CSV with
   * embedded newlines costs per-file parallelism, which is why JSONL is
-  * the recommended corpus format). */
+  * the recommended corpus format). q232's round trip lands its five
+  * layouts once per application as one warehouse folder, through
+  * [[Layout.landOnce]]. */
 object Formats {
 
   def writeJsonl(df: DataFrame, outDir: String): Unit =
@@ -125,64 +127,6 @@ object Formats {
   private[io] val RtSuffix =
     " \"quoted\" back\\slash\nline2\ttab \u00fcn\u00efc\u00f6d\u00e9 \u2603"
 
-  private val landed =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Write the suffixed corpus once per (JVM, dir) in all five
-    * interchange layouts (plain JSONL, gzip/zstd JSONL shards, CSV,
-    * ORC); returns the root. The root hashes the DATA
-    * DIR only (deliberately NOT the applicationId, unlike the
-    * fixture-scale FileWorkflowStats roots): q232 lands five full
-    * corpus copies, so the path must be STABLE across JVMs for the
-    * delete-before-write to reclaim a prior run's output instead of
-    * accumulating ~3x corpus per run in tmp. The suffix is the FULL
-    * md5 of the canonical dir path (a 32-bit hash could collide two
-    * data dirs onto one root, and delete-before-write would then
-    * clobber the other dir's landed corpus), and the root lives under
-    * a per-user subdirectory so another user pre-creating a
-    * predictable bare-tmp path on a shared machine can't plant or
-    * clobber it. Cache key is the DIR (what callers identify by), not
-    * the derived root. Concurrent JVMs over the same dir would race
-    * here — the sequential-run contract of the verify/bench harness;
-    * errorifexists makes a violation loud. */
-  private def ensureLanded(spark: SparkSession, dir: String): String = {
-    // CANONICAL path (r11 ADVICE): getAbsolutePath leaves './..'/symlink
-    // spellings of one dir distinct, which would land two full corpus
-    // copies — the exact tmp accumulation delete-before-write reclaims.
-    val abs = new java.io.File(dir).getCanonicalPath
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val user = sys.props.getOrElse("user.name", "anon")
-    val userDir = new java.io.File(s"${sys.props("java.io.tmpdir")}/graft-$user")
-    // Owner-only perms on create, and VERIFIED ownership either way (r11
-    // ADVICE): mkdir alone doesn't stop another local user pre-creating
-    // the predictable path — if they did, fail loudly rather than
-    // delete-before-write inside a directory they control.
-    try java.nio.file.Files.createDirectories(userDir.toPath,
-      java.nio.file.attribute.PosixFilePermissions.asFileAttribute(
-        java.nio.file.attribute.PosixFilePermissions.fromString("rwx------")))
-    catch { case _: UnsupportedOperationException => // non-POSIX FS
-      java.nio.file.Files.createDirectories(userDir.toPath)
-    }
-    val owner = java.nio.file.Files.getOwner(userDir.toPath).getName
-    require(owner == user,
-      s"$userDir is owned by '$owner', not '$user' — refusing to land " +
-        "interchange copies under a directory another principal controls")
-    val root = s"$userDir/fmt_$suffix"
-    landed.computeIfAbsent(abs, { _ =>
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(rootPath)) fs.delete(rootPath, true)
-      val df = planted(spark, dir)
-      writeJsonl(df, s"$root/jsonl")
-      writeJsonlCompressed(df, s"$root/jsonl_gz", "gzip")
-      writeJsonlCompressed(df, s"$root/jsonl_zst", ZstdCodecClass)
-      writeCsv(df, s"$root/csv")
-      writeOrc(df, s"$root/orc")
-      root
-    })
-  }
-
   /** Non-null text only, on BOTH engines: a NULL would round-trip
     * faithfully through JSONL/ORC but null-compare to 0 in n_ok (and
     * CSV reads a written NULL back as "" by the emptyValue trade), so
@@ -218,7 +162,14 @@ object Formats {
   def interchangeRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     ensureZstdReadable(spark) // .zst shards resolve by extension on read
-    val root = ensureLanded(spark, dir)
+    val root = Layout.landOnce(spark, "interchange", dir) { p =>
+      val df = planted(spark, dir)
+      writeJsonl(df, s"$p/jsonl")
+      writeJsonlCompressed(df, s"$p/jsonl_gz", "gzip")
+      writeJsonlCompressed(df, s"$p/jsonl_zst", ZstdCodecClass)
+      writeCsv(df, s"$p/csv")
+      writeOrc(df, s"$p/orc")
+    }
     val base = planted(spark, dir)
     // materialized once: three census branches join against it, and
     // without the checkpoint each branch would re-scan the corpus
@@ -231,8 +182,8 @@ object Formats {
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("ok"), 1L).otherwise(0L)).as("n_ok"),
           sum(length(col("text"))).cast("long").as("chars"),
-          pmod(sum(pmod(conv(substring(md5(col("text")), 1, 15), 16, 10)
-            .cast("long"), lit(P))), lit(P)).as("fp_sum"))
+          pmod(sum(pmod(graft.llm.Similarity.hash60(col("text")), lit(P))), lit(P))
+            .as("fp_sum"))
         .select(lit(format).as("format"), col("n_docs"), col("n_ok"),
           col("chars"), col("fp_sum"))
     census("csv", readCsv(spark, s"$root/csv", schema))

@@ -42,15 +42,13 @@ object Similarity {
   /** 60-bit base hash: first 15 hex chars of md5, identical in DuckDB via
     * CAST(concat('0x', substr(md5(s),1,15)) AS BIGINT). Computed by the
     * compiled kernel (digest bytes → top 60 bits; r13) — the expression
-    * chain below allocated a MessageDigest, a 32-char hex string, a
-    * 15-char substring and a base-16 parse PER CALL, and hash60 runs on
-    * every census fingerprint and text-sized manifest key in the suite.
-    * Bit-identity vs [[hash60Hof]] is spec-locked (SketchKernelsSpec). */
+    * chain `conv(substring(md5(c), 1, 15), 16, 10)` allocates a
+    * MessageDigest, a 32-char hex string, a 15-char substring and a
+    * base-16 parse PER CALL, and hash60 runs on every census fingerprint
+    * and text-sized manifest key in the suite. Bit-identity with that
+    * chain over the corpus and edge strings is spec-locked
+    * (SketchKernelsSpec). */
   def hash60(c: Column): Column = graft.functions.SketchKernels.hash60(c)
-
-  /** The pre-kernel expression form — the semantic definition the kernel
-    * must match; kept for the bit-identity regression spec. */
-  def hash60Hof(c: Column): Column = conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   val P: Long = 2147483647L // 2^31-1, prime; minhash value domain
 

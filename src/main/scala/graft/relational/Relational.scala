@@ -1376,20 +1376,26 @@ object Relational {
     *
     * Shape: edges from q110's basket generator, SYMMETRIZED by one
     * `explode(array(struct(a,b), struct(b,a)))` generator (not a
-    * UNION — union re-executes the edge subtree per branch); the edge
-    * frame and degree table are lazily checkpointed because every round
-    * references both. Per round: one edge-keyed broadcast-or-shuffle
+    * UNION — union re-executes the edge subtree per branch), ranked by
+    * [[pagerankTop20]]. Per round: one edge-keyed broadcast-or-shuffle
     * join to attach source scores/degrees, one map-combined sum per
     * destination. At 100 TB rounds would iterate under
     * [[graft.Dist.durableCkpt]] exactly like q55's loop. */
   def pagerankTwoRounds(spark: SparkSession, dir: String): DataFrame = {
     val pairs = copurchaseCounts(spark, dir).filter(col("n") >= 2)
-    val edges = pairs
+    pagerankTop20(pairs
       .select(explode(array(
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-      .select(col("e.src"), col("e.dst"))
-      .transform(graft.Dist.durableCkpt)
+      .select(col("e.src"), col("e.dst")))
+  }
+
+  /** Two unrolled rounds of q114's damped integer PageRank over a
+    * `(src, dst)` edge frame, top 20 by (score desc, v); q114 and q219
+    * both rank with it. The edge frame and degree table are lazily
+    * checkpointed because every round references both. */
+  private[graft] def pagerankTop20(edgeFrame: DataFrame): DataFrame = {
+    val edges = edgeFrame.transform(graft.Dist.durableCkpt)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("out_d"))
       .transform(graft.Dist.durableCkpt)
     def round(scores: DataFrame): DataFrame = {
@@ -1409,14 +1415,9 @@ object Relational {
     r2.orderBy(col("score").desc, col("v")).limit(20)
   }
 
-  val pagerankTwoRoundsSql: String =
-    """WITH i AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-      |e0 AS (SELECT a.l_partkey a, b.l_partkey b FROM i a JOIN i b
-      |       ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      |       GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-      |e AS MATERIALIZED (SELECT a AS src, b AS dst FROM e0
-      |                   UNION ALL SELECT b, a FROM e0),
-      |deg AS MATERIALIZED (SELECT src AS v, COUNT(*) AS out_d FROM e GROUP BY 1),
+  /** The oracle of [[pagerankTop20]], to follow a CTE `e(src, dst)`. */
+  private[graft] val pagerankTop20Sql: String =
+    """deg AS MATERIALIZED (SELECT src AS v, COUNT(*) AS out_d FROM e GROUP BY 1),
       |r0 AS (SELECT v, 1000000 AS score FROM deg),
       |r1 AS MATERIALIZED (
       |  SELECT d.v, 150000 + (85 * COALESCE(SUM(r0.score // src.out_d), 0)) // 100 AS score
@@ -1435,6 +1436,15 @@ object Relational {
       |)
       |SELECT v, CAST(score AS BIGINT) AS score FROM r2
       |ORDER BY score DESC, v LIMIT 20""".stripMargin
+
+  val pagerankTwoRoundsSql: String =
+    """WITH i AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+      |e0 AS (SELECT a.l_partkey a, b.l_partkey b FROM i a JOIN i b
+      |       ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+      |       GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+      |e AS MATERIALIZED (SELECT a AS src, b AS dst FROM e0
+      |                   UNION ALL SELECT b, a FROM e0),
+      |""".stripMargin + pagerankTop20Sql
 
   // --------------------------------------- q169 k-core onion decomposition
 

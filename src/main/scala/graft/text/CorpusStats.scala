@@ -2825,11 +2825,13 @@ object CorpusStats {
   def langSegmentsScored(mixed: DataFrame, langs: Seq[String],
       profiles: Map[String, Map[String, Int]],
       carry: Seq[String]): DataFrame = {
+    // one index per full window: a short or null-text doc gets an empty
+    // or null array, never a size filter (Catalyst would push one below
+    // the projection that computes toks and tokenize every text twice)
     val wins = mixed
-      .filter(size(col("toks")) >= SegWinTokens) // sequence bound guard
       .select(col("*"), posexplode(expr(
-        s"transform(sequence(0, CAST(size(toks) div $SegWinTokens AS INT) - 1), " +
-          s"w -> concat_ws(' ', slice(toks, w * $SegWinTokens + 1, $SegWinTokens)))")))
+        s"transform(array_repeat(0, CAST(size(toks) div $SegWinTokens AS INT)), " +
+          s"(x, w) -> concat_ws(' ', slice(toks, w * $SegWinTokens + 1, $SegWinTokens)))")))
       .withColumnRenamed("pos", "win_id")
       .withColumnRenamed("col", "wtext")
       .drop("toks")

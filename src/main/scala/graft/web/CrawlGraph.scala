@@ -64,32 +64,14 @@ object CrawlGraph {
       lit("</body></html>"))
     // the real chain: anchor extraction → resolution → canonicalization;
     // page URLs are canonical by construction (src side needs no kernel)
-    val edges = docs
+    graft.relational.Relational.pagerankTop20(docs
       .select(pageUrl.as("src"), explode(resolveEdges(pageUrl, html)).as("dst"))
-      .distinct()
-      .transform(graft.Dist.durableCkpt)
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("out_d"))
-      .transform(graft.Dist.durableCkpt)
-    def round(scores: DataFrame): DataFrame = {
-      val contrib = edges
-        .join(scores.withColumnRenamed("v", "src"), Seq("src"))
-        .join(deg, Seq("src"))
-        .select(col("dst").as("v"), expr("score div out_d").as("c"))
-        .groupBy(col("v")).agg(sum(col("c")).as("cs"))
-      deg.select(col("src").as("v"))
-        .join(contrib, Seq("v"), "left")
-        .select(col("v"),
-          expr("150000 + (85 * coalesce(cs, CAST(0 AS BIGINT))) div 100")
-            .cast("long").as("score"))
-    }
-    val r0 = deg.select(col("src").as("v"), lit(1000000L).as("score"))
-    val r2 = round(round(r0).transform(graft.Dist.durableCkpt))
-    r2.orderBy(col("score").desc, col("v")).limit(20)
+      .distinct())
   }
 
   /** Oracle: canonical edges straight from doc_id arithmetic (no HTML,
     * no URL kernels), then the identical two unrolled integer PageRank
-    * rounds (q114's SQL shape, CTEs materialized). */
+    * rounds (q114's SQL tail, CTEs materialized). */
   val crawlPagerankSql: String =
     """WITH d AS (
       |  SELECT doc_id, doc_id // 16 AS g FROM documents
@@ -114,25 +96,7 @@ object CrawlGraph {
       |    base || (g * 16 + (doc_id % 16) // 2)::VARCHAR
       |  FROM pages
       |), e AS MATERIALIZED (SELECT DISTINCT src, dst FROM e0),
-      |deg AS MATERIALIZED (SELECT src AS v, COUNT(*) AS out_d FROM e GROUP BY 1),
-      |r0 AS (SELECT v, 1000000 AS score FROM deg),
-      |r1 AS MATERIALIZED (
-      |  SELECT d.v, 150000 + (85 * COALESCE(SUM(r0.score // src.out_d), 0)) // 100 AS score
-      |  FROM deg d
-      |  LEFT JOIN e ON e.dst = d.v
-      |  LEFT JOIN r0 ON r0.v = e.src
-      |  LEFT JOIN deg src ON src.v = e.src
-      |  GROUP BY d.v
-      |), r2 AS (
-      |  SELECT d.v, 150000 + (85 * COALESCE(SUM(r1.score // src.out_d), 0)) // 100 AS score
-      |  FROM deg d
-      |  LEFT JOIN e ON e.dst = d.v
-      |  LEFT JOIN r1 ON r1.v = e.src
-      |  LEFT JOIN deg src ON src.v = e.src
-      |  GROUP BY d.v
-      |)
-      |SELECT v, CAST(score AS BIGINT) AS score FROM r2
-      |ORDER BY score DESC, v LIMIT 20""".stripMargin
+      |""".stripMargin + graft.relational.Relational.pagerankTop20Sql
 
   // ------------------------------------------------ q230 anchor text
 

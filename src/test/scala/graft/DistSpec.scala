@@ -368,4 +368,54 @@ class DistSpec extends SparkSpec {
           org.apache.spark.sql.catalyst.plans.physical.RangePartitioning] => e }
     assert(ranges.size <= 1, s"fused cumsum must not pay a second range exchange")
   }
+
+  private def digestFrame = {
+    import spark.implicits._
+    (1 to 200).map(i => (i.toLong, s"g${i % 3}", i % 5)).toDF("k", "g", "w").repartition(3)
+  }
+
+  test("each helper keeps its output columns, types and nullability") {
+    val df = digestFrame
+    def shape(out: org.apache.spark.sql.DataFrame): Seq[(String, String, Boolean)] =
+      out.schema.map(f => (f.name, f.dataType.simpleString, f.nullable))
+    val in = Seq(("k", "bigint", false), ("g", "string", true), ("w", "int", false))
+    assert(shape(Dist.globalRowNumber(df, col("k"), numParts = 4)) ==
+      in :+ (("rn", "bigint", false)))
+    // the partition column leads, as the using-join on it places it
+    assert(shape(Dist.globalRowNumberWithin(df, "g", col("k"), numParts = 4)) ==
+      Seq(in(1), in(0), in(2), ("rn", "bigint", false)))
+    assert(shape(Dist.globalCumSum(df, col("k"), col("w"), numParts = 4)) ==
+      in :+ (("cum", "bigint", true)))
+    assert(shape(Dist.globalCumSum2(df, col("k"), col("w"), col("k"), numParts = 4)) ==
+      in ++ Seq(("cum1", "bigint", true), ("cum2", "bigint", true)))
+  }
+
+  test("digest mode records one tagged line per helper call, covering every input row") {
+    val df = digestFrame
+    val prev = sys.props.get("graft.dist.digest")
+    Dist.drainDigests()
+    sys.props("graft.dist.digest") = "true"
+    try {
+      val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "rowNumber" -> (() => Dist.globalRowNumber(df, col("k"), numParts = 4)),
+        "rowNumberWithin" -> (() => Dist.globalRowNumberWithin(df, "g", col("k"), numParts = 4)),
+        "cumSum" -> (() => Dist.globalCumSum(df, col("k"), col("w"), numParts = 4)),
+        "cumSum2" -> (() => Dist.globalCumSum2(df, col("k"), col("w"), col("w"), numParts = 4)))
+      calls.foreach { case (tag, call) =>
+        call()
+        val lines = Dist.drainDigests()
+        assert(lines.size == 1 && lines.head.startsWith(s"$tag "),
+          s"$tag recorded ${lines.mkString("; ")}")
+        // `tag pid:rows:lo:hi|...`
+        val rows = lines.head.stripPrefix(s"$tag ").split('|').map(_.split(':')(1).toLong)
+        assert(rows.sum == 200, s"$tag per-pid rows ${rows.mkString(",")}")
+      }
+    } finally {
+      prev match {
+        case Some(v) => sys.props("graft.dist.digest") = v
+        case None => sys.props -= "graft.dist.digest"
+      }
+      Dist.drainDigests()
+    }
+  }
 }

@@ -8,7 +8,9 @@ import scala.jdk.CollectionConverters._
 /** Structural lock on the landing mechanism: warehouse folders are landed
   * through `Layout.landOnce`, and bucketed catalog tables through
   * `Layout.ensureBucketed`. No other main source may read the warehouse
-  * setting, so a hand-copied landing cannot grow back. */
+  * setting, so a hand-copied landing cannot grow back, and no main source
+  * but ScalingBench (its scaled corpus copies) lands data in the temp
+  * directory. */
 class WarehouseReadsSpec extends AnyFunSuite {
 
   private val WarehouseRead = """spark\.sql\.warehouse\.dir|WAREHOUSE_PATH""".r
@@ -30,5 +32,17 @@ class WarehouseReadsSpec extends AnyFunSuite {
     val allowed = Set("landOnce", "ensureBucketed").map("graft/io/Layout.scala" -> _)
     assert(reads.toSet == allowed,
       s"warehouse reads outside the landing helpers: ${reads.filterNot(allowed).mkString(", ")}")
+  }
+
+  private val TmpLanding = """java\.io\.tmpdir|createTempDirectory|createTempFile""".r
+
+  test("no main source but ScalingBench lands data under the temp directory") {
+    val root = Paths.get("src/main/scala")
+    val named = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(f => TmpLanding.findFirstIn(new String(Files.readAllBytes(f), "UTF-8")).nonEmpty)
+      .map(f => root.relativize(f).toString).toSet
+    assert(named == Set("graft/ScalingBench.scala"),
+      s"temp-directory landings outside ScalingBench: ${(named - "graft/ScalingBench.scala").mkString(", ")}")
   }
 }

@@ -125,4 +125,26 @@ class LangSegmentationSpec extends SparkSpec {
     assert(scoring.forall(n => allPlanNodes(n).exists(byDocId)),
       "the window scoring runs below the doc_id exchange")
   }
+
+  test("q238 tokenizes each document once; short and null-text docs yield no windows") {
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    // a size guard on the tokens would be pushed below the projection
+    // that computes them and split every text a second time
+    val splits = allPlanNodes(executedPlanOf(CorpusStats.spanLangCensus(spark, sfDir)))
+      .flatMap(_.expressions.flatMap(_.collect { case s: StringSplit => s }))
+    assert(splits.size == 1, s"q238 evaluates ${splits.size} tokenizer splits")
+
+    val spark0 = spark
+    import spark0.implicits._
+    val texts = (1 to 7).map(n => (n.toLong, Some(docText("abc", n, n)))) ++
+      Seq((8L, None), (9L, Some(docText("abc", 9, W))), (10L, Some(docText("abc", 10, 2 * W - 1))))
+    val mixed = texts.toDF("doc_id", "text")
+      .select(col("doc_id"), TextOps.tokens(lower(col("text"))).as("toks"))
+    val wins = CorpusStats.langSegmentsScored(mixed, Seq("la"),
+      Map("la" -> Map("abc" -> 1)), Seq.empty)
+      .groupBy(col("doc_id")).count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // trailing partial windows are dropped: W..2W-1 tokens make one window
+    assert(wins == Map(9L -> 1L, 10L -> 1L), s"windows per doc: $wins")
+  }
 }
