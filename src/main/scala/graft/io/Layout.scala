@@ -176,9 +176,10 @@ object Layout {
     * scan. A parquet rewrite always produces new file names/mtimes, so
     * harness regeneration and the LayoutSpec overwrite both still
     * trigger the re-land, and so does a changed build over the same
-    * files. Non-file sources fall back to the content aggregate (count +
-    * min/max of the bucket column). */
-  private def fingerprint(df: DataFrame, bucketCol: String): String = {
+    * files. Non-file sources (an in-memory frame) fall back to a content
+    * aggregate over every row: the count plus the sum of `xxhash64` over
+    * all columns. */
+  private def fingerprint(df: DataFrame): String = {
     val files = inputFiles(df)
     val source = if (files.nonEmpty) {
       val conf = df.sparkSession.sparkContext.hadoopConfiguration
@@ -188,9 +189,12 @@ object Layout {
         s"$f:${st.getLen}:${st.getModificationTime}"
       }.mkString("\u0000")
     } else {
-      val r = df.agg(count(lit(1)), min(col(bucketCol)).cast("string"),
-        max(col(bucketCol)).cast("string")).head()
-      s"${r.get(0)}:${r.get(1)}:${r.get(2)}"
+      // every row counts: DECIMAL(38,0) so the sum cannot overflow under
+      // ANSI mode, and a sum, not an xor, so duplicate rows do not cancel
+      val r = df.agg(count(lit(1)),
+        sum(xxhash64(df.columns.map(df.col): _*).cast("decimal(38,0)"))
+          .cast("string")).head()
+      s"rows:${r.get(0)}:${r.get(1)}"
     }
     // full md5, not a 32-bit hash: a collision here serves STALE ROWS
     // (the guard would accept an old table for a changed source) — the
@@ -234,7 +238,7 @@ object Layout {
                      numBuckets: Int)(build: => DataFrame): Unit = {
     landing.compute((spark, table), { (_, _) =>
       val df = build
-      val fp = fingerprint(df, bucketCol)
+      val fp = fingerprint(df)
       val catalog = spark.sessionState.catalog
       val id = org.apache.spark.sql.catalyst.TableIdentifier(table)
       val stored =

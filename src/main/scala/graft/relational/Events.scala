@@ -56,13 +56,11 @@ object Events {
       |  CAST(SUM(CAST(value AS DECIMAL(14,4))) AS DOUBLE) AS total_value
       |FROM x GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Sessionization with a 30-minute inactivity gap, expressed with
-    * analytic windows (lag + cumulative session counter) so it is
-    * oracle-checkable. Semantically identical to
-    * `session_window(ts, "30 minutes")`, which the streaming module uses.
-    * Gap comparison is in exact epoch microseconds. */
-  def sessionize(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
+  /** q17's sessionizer, shared by q17, q101 and q167: per user in
+    * (ts, event_id) order, `prev_us` is the previous event's epoch
+    * micros, `new_sess` flags a first event or a gap over 30 minutes,
+    * and `sess_id` is the running sum of the flags. */
+  private def withSessId(e: DataFrame): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val running = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     e.withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byUser))
@@ -71,6 +69,15 @@ object Events {
              unix_micros(col("ts")) - col("prev_us") > 30L * 60 * 1000000, 1)
           .otherwise(0))
       .withColumn("sess_id", sum(col("new_sess")).over(running))
+  }
+
+  /** Sessionization with a 30-minute inactivity gap, expressed with
+    * analytic windows (lag + cumulative session counter) so it is
+    * oracle-checkable. Semantically identical to
+    * `session_window(ts, "30 minutes")`, which the streaming module uses.
+    * Gap comparison is in exact epoch microseconds. */
+  def sessionize(spark: SparkSession, dir: String): DataFrame = {
+    withSessId(Tables.events(spark, dir))
       .groupBy(col("user_id"), col("sess_id"))
       .agg(count(lit(1)).as("n_events"),
         min(col("ts")).as("sess_start"),
@@ -691,16 +698,7 @@ object Events {
     * The grid comes from an exploded `sequence` over the one-row bounds
     * aggregate, not a cross join. */
   def concurrencySweep(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val running = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sess = e
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-             unix_micros(col("ts")) - col("prev_us") > 30L * 60 * 1000000, 1)
-          .otherwise(0))
-      .withColumn("sess_id", sum(col("new_sess")).over(running))
+    val sess = withSessId(Tables.events(spark, dir))
       .groupBy(col("user_id"), col("sess_id"))
       .agg(min(col("ts")).as("sess_start"), max(col("ts")).as("sess_end"))
     // first hour boundary AFTER the instant: active(h) = starts ≤ h minus
@@ -1262,15 +1260,7 @@ object Events {
     * census and the broadcast one-row total (hygiene-whitelisted scalar
     * shape). Depth classes are a fixed CASE on both engines. */
   def sessionDepthCensus(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val running = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sess = Tables.events(spark, dir)
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-             unix_micros(col("ts")) - col("prev_us") > 30L * 60 * 1000000, 1)
-          .otherwise(0))
-      .withColumn("sess_id", sum(col("new_sess")).over(running))
+    val sess = withSessId(Tables.events(spark, dir))
       .groupBy(col("user_id"), col("sess_id"))
       .agg(count(lit(1)).as("depth"))
     val census = sess.groupBy(

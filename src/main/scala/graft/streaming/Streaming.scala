@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Exact._
@@ -36,18 +36,8 @@ object Streaming {
     * Inner joins emit on match (Append mode); both inputs shuffle on
     * user_id exactly like the batch SMJ. */
   def attributionJoin(events: DataFrame, windowMinutes: Int = 30): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"), col("value"))
-      .withWatermark("purchase_ts", "1 hour")
-    purchases.join(clicks,
-        col("user_id") === col("c_user") &&
-          col("purchase_ts") >= col("click_ts") &&
-          col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $windowMinutes MINUTES"))
+    val (clicks, purchases, within) = attributionSides(events, windowMinutes)
+    purchases.join(clicks, within)
       .select(col("user_id"), col("purchase_id"), col("purchase_ts"),
         col("click_id"), col("click_ts"), col("value"))
   }
@@ -62,6 +52,17 @@ object Streaming {
     * watermark + time-range condition encode. State bounds are the inner
     * join's; the null row emission is deferred, not stored longer. */
   def attributionJoinOuter(events: DataFrame, windowMinutes: Int = 30): DataFrame = {
+    val (clicks, purchases, within) = attributionSides(events, windowMinutes)
+    clicks.join(purchases, within, "left_outer")
+      .select(col("c_user").as("user_id"), col("click_id"), col("click_ts"),
+        col("purchase_id"), col("purchase_ts"), col("value"))
+  }
+
+  /** The two attribution joins' watermarked click and purchase sides and
+    * their interval condition: same user, purchase within `windowMinutes`
+    * at-or-after the click. */
+  private def attributionSides(events: DataFrame, windowMinutes: Int)
+  : (DataFrame, DataFrame, Column) = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
         col("ts").as("click_ts"))
@@ -70,13 +71,10 @@ object Streaming {
       .select(col("user_id"), col("event_id").as("purchase_id"),
         col("ts").as("purchase_ts"), col("value"))
       .withWatermark("purchase_ts", "1 hour")
-    clicks.join(purchases,
-        col("user_id") === col("c_user") &&
-          col("purchase_ts") >= col("click_ts") &&
-          col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $windowMinutes MINUTES"),
-        "left_outer")
-      .select(col("c_user").as("user_id"), col("click_id"), col("click_ts"),
-        col("purchase_id"), col("purchase_ts"), col("value"))
+    (clicks, purchases,
+      col("user_id") === col("c_user") &&
+        col("purchase_ts") >= col("click_ts") &&
+        col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $windowMinutes MINUTES"))
   }
 
   /** File-source stream over a directory of event parquet (each new file is
@@ -110,21 +108,33 @@ object Streaming {
       .select(col("user_id"), col("session_window.start").as("sess_start"),
         col("session_window.end").as("sess_end"), col("n_events"), col("total_value"))
 
-  /** Per-user running totals as explicit keyed state —
-    * mapGroupsWithState with an event-time timeout, the custom-state
-    * escape hatch for logic windows can't express. */
+  /** One event as the keyed-state operators read it ([[eventRows]]). */
   final case class EventRow(event_id: Long, ts: java.sql.Timestamp,
-                            user_id: Long, event_type: String, value: Double)
+                            user_id: Long, event_type: String, value: Double) {
+    /** `ts` in epoch MICROseconds: event timestamps carry micros, which
+      * `Timestamp.getTime` alone would drop. */
+    def us: Long = ts.getTime * 1000 + (ts.getNanos / 1000) % 1000
+  }
   final case class UserState(n_events: Long, total_value: Double, last_seen: Long)
   final case class UserSnapshot(user_id: Long, n_events: Long,
                                 total_value: Double, last_seen: java.sql.Timestamp)
 
-  def runningUserState(events: DataFrame): DataFrame = {
+  /** The typed event view every keyed-state operator reads. */
+  private def eventRows(events: DataFrame): Dataset[EventRow] = {
     val spark = events.sparkSession
     import spark.implicits._
     events.select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .as[EventRow]
+  }
+
+  /** Per-user running totals as explicit keyed state —
+    * mapGroupsWithState without a timeout, the custom-state escape hatch
+    * for logic windows can't express. */
+  def runningUserState(events: DataFrame): DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    eventRows(events)
       .groupByKey(_.user_id)
       .mapGroupsWithState[UserState, UserSnapshot](GroupStateTimeout.NoTimeout) {
         (uid: Long, rows: Iterator[EventRow], state: GroupState[UserState]) =>
@@ -177,11 +187,9 @@ object Streaming {
   def sessionCloseEvents(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    // state arithmetic runs in epoch MICROseconds: the event timestamps
-    // carry micros (nanos truncated at ingestion) and Timestamp.getTime
-    // alone would drop them, making sess_end diverge from session_window
+    // state arithmetic runs in epoch MICROseconds (EventRow.us), or
+    // sess_end would diverge from session_window
     val gapUs = gapMinutes * 60000000L
-    def toUs(t: java.sql.Timestamp): Long = t.getTime * 1000 + (t.getNanos / 1000) % 1000
     def toTs(us: Long): java.sql.Timestamp = {
       val t = new java.sql.Timestamp(us / 1000)
       t.setNanos((us % 1000000L).toInt * 1000)
@@ -213,9 +221,7 @@ object Streaming {
       }
       expired.sortBy(_.start).iterator.map(close(uid, _))
     }
-    events.withWatermark("ts", "1 hour")
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[EventRow]
+    eventRows(events.withWatermark("ts", "1 hour"))
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[OpenSessions, ClosedSession](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
@@ -225,7 +231,7 @@ object Streaming {
           } else {
             var open = state.getOption.map(_.sessions).getOrElse(Nil)
             for (e <- rows) {
-              val t = toUs(e.ts)
+              val t = e.us
               // merge with every session whose envelope the event touches
               // (0, 1, or 2 of them — 2 when the event bridges a pair);
               // arrival order within the batch is irrelevant to the result
@@ -380,10 +386,7 @@ object Streaming {
     val spark = events.sparkSession
     import spark.implicits._
     val U = graft.relational.Events.BurstBucketUs
-    events.withWatermark("ts", "1 hour")
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[EventRow]
+    eventRows(events.withWatermark("ts", "1 hour"))
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[BurstBuf, BurstAlert](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
@@ -393,8 +396,7 @@ object Streaming {
           val s0 = state.getOption.getOrElse(BurstBuf(Map.empty, -1L))
           var counts = s0.counts
           rows.foreach { e =>
-            val us = e.ts.getTime * 1000 + (e.ts.getNanos / 1000) % 1000
-            val b = us / U
+            val b = e.us / U
             counts = counts.updated(b, counts.getOrElse(b, 0L) + 1)
           }
           val sweep = counts.keys.filter(b => b <= finalMax && b > s0.emittedUpTo)
@@ -514,18 +516,13 @@ object Streaming {
     val spark = events.sparkSession
     import spark.implicits._
     val spanUs = spanMinutes * 60L * 1000000L
-    events.withWatermark("ts", "1 hour")
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[EventRow]
+    eventRows(events.withWatermark("ts", "1 hour"))
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[IslandBuf, Island](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
         (uid: Long, rows: Iterator[EventRow], state: GroupState[IslandBuf]) =>
           val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val incoming = rows.map { e =>
-            (e.ts.getTime * 1000 + (e.ts.getNanos / 1000) % 1000, e.event_id)
-          }.toList
+          val incoming = rows.map(e => (e.us, e.event_id)).toList
           val all = (state.getOption.map(_.starts).getOrElse(Nil) ++ incoming)
             .sortBy(identity)
           // rebuild islands from the sorted starts (merge on touch:
@@ -581,19 +578,13 @@ object Streaming {
     val spark = events.sparkSession
     import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
-    events.withWatermark("ts", "1 hour")
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[EventRow]
+    eventRows(events.withWatermark("ts", "1 hour"))
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[PathBuf, PathTriple](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
         (uid: Long, rows: Iterator[EventRow], state: GroupState[PathBuf]) =>
           val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val incoming = rows.map { e =>
-            val us = e.ts.getTime * 1000 + (e.ts.getNanos / 1000) % 1000
-            PathEvent(us, e.event_id, e.event_type)
-          }.toList
+          val incoming = rows.map(e => PathEvent(e.us, e.event_id, e.event_type)).toList
           val all = (state.getOption.map(_.events).getOrElse(Nil) ++ incoming)
             .sortBy(e => (e.us, e.event_id))
           val out = all.sliding(3).filter(_.lengthCompare(3) == 0).collect {
@@ -824,17 +815,21 @@ object Streaming {
       sigsT: String, bandsT: String, gramT: String, gpostT: String)
 
   /** Land (once per corpus refresh) the corpus-side tables the streaming
-    * ingest doors probe, and return their handle. Each table goes through
+    * ingest doors probe, and return their handle. The ONLY place the
+    * corpus side is derived: every door reads these tables, so neither a
+    * stream (re)start nor a micro-batch (stream-static sides re-execute
+    * per trigger) re-hashes the corpus. Each table goes through
     * [[graft.io.Layout.ensureBucketed]]'s fingerprint lock (source file
     * metadata — the q87 mtime idiom), so the recurring call at every
     * stream (re)start costs a few `getFileStatus` calls when the corpus
     * is unchanged and rebuilds ONLY when it actually changed: at 100 TB a
-    * stream restart must never re-hash the corpus (r12 judge task 2).
+    * stream restart must never re-hash the corpus.
     * Derived tables chain their staleness through their parents' files
     * (bands reads the landed sigs table, gram postings read the landed
     * gram table — a corpus change re-fingerprints the whole chain).
     * `name` is the corpus's stable identity (a canonical dir path, a
-    * dataset name); two corpora must not share one. */
+    * dataset name); two corpora must not share one. Expects a
+    * `(doc_id, url, text)`-shaped corpus. */
   def ensureIngestCatalog(spark: SparkSession, name: String,
       corpus: DataFrame): IngestCatalog = {
     import graft.llm.Similarity
@@ -868,99 +863,42 @@ object Streaming {
     cat
   }
 
-  // ------------------------------------ streaming near-dup ingest gate
-
-  /** Streaming twin of q68's NEAR-DUP leg: each arriving document is
-    * probed against the LANDED corpus's LSH band postings and — when a
-    * band collision VERIFIES at the q41 cut (integer bp ≥ 9000 ⟺
-    * jaccard ≥ 0.9) — emitted exactly once with its best corpus match,
-    * so near-duplicate re-crawls are rejected AT INGEST rather than by
-    * a later batch sweep. [[ingestDedup]] is the exact-hash gate; this
-    * is the similarity gate beside it, completing the streaming ingest
-    * tier (exact / near-dup / the q178-class containment gate stays
-    * batch).
-    *
-    * Dataflow: signature + band keys are ROW-LOCAL on the stream side
-    * (the q40 codegen kernels — no state), with `ts` and the
+  /** Near-dup screen over the catalog: `(doc_id, ts, cor_id, score)`, one
+    * row per band collision that verifies at the q41 cut (integer
+    * jaccard bp `score` ≥ 9000). The band keys are ROW-LOCAL on the
+    * stream side (the q40 codegen kernels), with `ts` and the
     * hashed-shingle array carried THROUGH the band expansion
-    * ([[graft.llm.Similarity.bandKeysKeepingFor]]) so EVERY join below
-    * is stream-static: the probe is a stateless equi-join against the
-    * corpus postings (landed small here; at 100 TB a bucketed table the
-    * planner shuffles against), and the corpus shingle-set attach joins
-    * only the CANDIDATE rows (never the corpus). No stream-stream join
-    * exists, so NO join state exists — a slim band expansion re-joined
-    * to the probe stream to recover ts/hs_i would be a self-join whose
-    * buffers the watermark never evicts, and a redelivered doc_id could
-    * pair with stale buffered band rows. The payload replication
-    * (×Bands, micro-batch-local) is the price of that boundedness.
-    * Verification is the shared q41 contract — size-ratio prefilter
-    * (lossless at 0.9) + exact merge-intersect kernel +
-    * cross-multiplied integer cut. Best match per doc = one min(struct)
-    * aggregate under the watermark window (one event time per doc → one
-    * final emission, append mode). Only flagged docs carry state — the
-    * aggregation's, the job's ONLY state — and each group evicts at
-    * watermark + 1 hour.
-    *
-    * Expects `(doc_id, ts, source, text)` streaming and `(doc_id,
-    * text)`-shaped landed corpus; emits `(doc_id, best_match, bp)`. */
-  def nearDupIngestStream(docs: DataFrame, corpus: DataFrame): DataFrame = {
+    * ([[graft.llm.Similarity.bandKeysKeepingFor]]) so both joins are
+    * stream-static: the probe against the landed band postings, then the
+    * shingle-set attach for the CANDIDATE rows only. A slim band
+    * expansion re-joined to the probe stream for ts/hs would be a
+    * stream-stream self-join whose buffers the watermark never evicts;
+    * the payload replication (×Bands, micro-batch-local) is the price of
+    * holding no join state. Verification is the shared q41 contract —
+    * size-ratio prefilter (lossless at 0.9), exact merge-intersect
+    * kernel, cross-multiplied integer cut. */
+  private def nearDupMatches(docs: DataFrame, cat: IngestCatalog): DataFrame = {
     import graft.llm.Similarity
-    val corpusSets = corpus
-      .select(col("doc_id").as("cor_id"), Similarity.hashedShingles(col("text")).as("hs_c"))
-      .filter(size(col("hs_c")) > 0)
-    val postings = Similarity.bandKeysFor(
-      corpusSets.select(col("cor_id").as("id"), col("hs_c").as("hs")), "id")
-      .select(col("id").as("cor_id"), col("bkey"))
-    nearDupCore(docs, corpusSets, postings)
-  }
-
-  /** [[nearDupIngestStream]] over the LANDED catalog ([[ensureIngestCatalog]]):
-    * the corpus-side shingle sets and band postings are bucketed catalog
-    * tables, so a stream (re)start — and every MICRO-BATCH, since
-    * stream-static sides re-execute per trigger — reads parquet instead
-    * of re-hashing the corpus (r12 judge task 2: at 100 TB a restart
-    * must not re-mint corpus signatures). Verdicts are identical by
-    * construction: the tables hold exactly the frames the inline door
-    * derives. */
-  def nearDupIngestStreamLanded(spark: SparkSession, docs: DataFrame,
-      cat: IngestCatalog): DataFrame =
-    nearDupCore(docs, spark.table(cat.sigsT), spark.table(cat.bandsT))
-
-  private def nearDupCore(docs: DataFrame, corpusSets: DataFrame,
-      postings: DataFrame): DataFrame = {
-    import graft.llm.Similarity
+    val spark = docs.sparkSession
     val probes = docs
-      .withWatermark("ts", "1 hour")
-      .select(col("doc_id"), col("ts"), Similarity.hashedShingles(col("text")).as("hs"))
+      .select(col("doc_id").as("id"), col("ts"),
+        Similarity.hashedShingles(col("text")).as("hs"))
       .filter(size(col("hs")) > 0)
-    Similarity.bandKeysKeepingFor(
-        probes.select(col("doc_id").as("id"), col("ts"), col("hs")),
-        "id", Seq("ts", "hs"))
+    Similarity.bandKeysKeepingFor(probes, "id", Seq("ts", "hs"))
       .select(col("id").as("doc_id"), col("ts"), col("hs").as("hs_i"), col("bkey"))
-      .join(postings, Seq("bkey"))
-      .join(corpusSets, Seq("cor_id"))
+      .join(spark.table(cat.bandsT), Seq("bkey"))
+      .join(spark.table(cat.sigsT), Seq("cor_id"))
       .withColumn("sz_i", size(col("hs_i"))).withColumn("sz_c", size(col("hs_c")))
       .filter(least(col("sz_i"), col("sz_c")) * 10 >= greatest(col("sz_i"), col("sz_c")) * 9)
       .withColumn("n", graft.functions.ArrayKernels.sortedIntersectCount(col("hs_i"), col("hs_c")))
-      .withColumn("bp", expr(
-        "(10000 * n) div CAST(sz_i + sz_c - n AS BIGINT)"))
-      .filter(col("bp") >= 9000)
-      .groupBy(window(col("ts"), "1 hour"), col("doc_id"))
-      .agg(min(struct((-col("bp")).as("nbp"), col("cor_id"))).as("best"))
-      .select(col("doc_id"), col("best.cor_id").as("best_match"),
-        (-col("best.nbp")).as("bp"))
+      .withColumn("score", expr("(10000 * n) div CAST(sz_i + sz_c - n AS BIGINT)"))
+      .filter(col("score") >= 9000)
+      .select(col("doc_id"), col("ts"), col("cor_id"), col("score"))
   }
 
-  // ------------------------------------ streaming containment ingest gate
-
-  /** Streaming twin of q178's CONTAINMENT leg — the third door of the
-    * ingest tier beside exact hash ([[ingestDedup]]) and near-dup
-    * ([[nearDupIngestStream]]): each arriving document is probed against
-    * the LANDED corpus's trigram postings, and when ≥ 90 % of its
-    * trigram-shingle set verifies inside some corpus doc it is emitted
-    * exactly once with its best container — truncated re-crawls and
-    * quote-wrapper pages rejected AT INGEST, the redundancy class exact
-    * and Jaccard gates both miss.
+  /** Containment screen over the catalog: `(doc_id, ts, cor_id, score)`,
+    * one row per corpus doc holding ≥ 90 % of the arriving doc's
+    * trigram-shingle set (`score` = containment bp).
     *
     * EXACTNESS: if ≥ 0.9·|A| of A's shingles are in B, any
     * (⌊0.1·|A|⌋+1)-subset of A's shingles hits B (pigeonhole) — the
@@ -971,66 +909,76 @@ object Streaming {
     * FIRST k of the (sorted) shingle set, a ROW-LOCAL slice. Same
     * verdicts (the verify is the arbiter either way); the only cost is
     * more candidates per probe, still ∝ batch × posting multiplicity,
-    * never ∝ corpus. At 100 TB the postings table is landed and bucketed
-    * on `h` (the q87 deployment) and this plan reads it unchanged.
-    *
-    * Dataflow discipline is [[nearDupIngestStream]]'s: ts and the full
-    * shingle array are carried THROUGH the row-local prefix explode, so
-    * every join is stream-static and the job's ONLY state is the final
-    * watermark-evicted best-match aggregation (one event time per doc →
-    * one final emission, append mode; only contained docs carry state).
-    *
-    * Expects `(doc_id, ts, source, text)` streaming and `(doc_id, text)`
-    * landed corpus; emits `(doc_id, best_match, containment_bp)`. */
-  def containmentIngestStream(docs: DataFrame, corpus: DataFrame): DataFrame = {
+    * never ∝ corpus. As in [[nearDupMatches]], ts and the full shingle
+    * array ride THROUGH the row-local prefix explode, so both joins are
+    * stream-static. */
+  private def containmentMatches(docs: DataFrame, cat: IngestCatalog): DataFrame = {
     import graft.llm.Similarity
-    val corpusSets = corpus
-      .select(col("doc_id").as("cor_id"), Similarity.tokens(col("text")).as("t"))
-      .select(col("cor_id"), Similarity.gram3Hashed(col("t")).as("hs_c"))
-      .select(col("cor_id"), col("hs_c"), size(col("hs_c")).cast("long").as("sz_c"))
-      .filter(col("sz_c") > 0)
-    val postings = corpusSets.select(col("cor_id"), explode(col("hs_c")).as("h"))
-    containmentCore(docs, corpusSets, postings)
-  }
-
-  /** [[containmentIngestStream]] over the LANDED catalog: trigram-gram
-    * arrays AND their exploded postings are bucketed tables, so neither a
-    * restart nor a micro-batch re-hashes (or re-explodes) the corpus —
-    * the gram-postings build was the system's largest single landing cost
-    * (255 s at sf1 pre-kernel), exactly what must never run per trigger. */
-  def containmentIngestStreamLanded(spark: SparkSession, docs: DataFrame,
-      cat: IngestCatalog): DataFrame =
-    containmentCore(docs,
-      spark.table(cat.gramT)
-        .select(col("cor_id"), col("g_c").as("hs_c"), col("sz_c")),
-      spark.table(cat.gpostT))
-
-  private def containmentCore(docs: DataFrame, corpusSets: DataFrame,
-      postings: DataFrame): DataFrame = {
-    import graft.llm.Similarity
+    val spark = docs.sparkSession
     docs
-      .withWatermark("ts", "1 hour")
-      .select(col("doc_id"), col("ts"), Similarity.tokens(col("text")).as("t"))
-      .select(col("doc_id"), col("ts"), Similarity.gram3Hashed(col("t")).as("hs_i"))
+      .select(col("doc_id"), col("ts"),
+        Similarity.gram3Hashed(Similarity.tokens(col("text"))).as("hs_i"))
       .withColumn("sz_i", size(col("hs_i")).cast("long"))
       .filter(col("sz_i") > 0)
       // k = sz − ⌈0.9(sz+1)⌉ + 1 = ⌊0.1·sz⌋ + 1, q178's exact formula
       .select(col("doc_id"), col("ts"), col("hs_i"), col("sz_i"),
         explode(slice(col("hs_i"), lit(1),
           col("sz_i") - expr("(9 * sz_i + 9) div 10") + 1)).as("h"))
-      .join(postings, Seq("h"))
-      .join(corpusSets, Seq("cor_id"))
+      .join(spark.table(cat.gpostT), Seq("h"))
+      .join(spark.table(cat.gramT), Seq("cor_id"))
       .filter(lit(10) * col("sz_c") >= lit(9) * col("sz_i"))
-      .withColumn("n_shared", graft.functions.ArrayKernels
-        .sortedIntersectCount(col("hs_i"), col("hs_c")).cast("long"))
-      .filter(lit(10) * col("n_shared") >= lit(9) * col("sz_i"))
-      .withColumn("cont_bp", expr("10000 * n_shared div sz_i"))
-      .groupBy(window(col("ts"), "1 hour"), col("doc_id"))
-      .agg(min(struct((lit(10000L) - col("cont_bp")).as("neg"),
-        col("cor_id"), col("cont_bp"))).as("b"))
-      .select(col("doc_id"), col("b.cor_id").as("best_match"),
-        col("b.cont_bp").as("containment_bp"))
+      .withColumn("n", graft.functions.ArrayKernels
+        .sortedIntersectCount(col("hs_i"), col("g_c")).cast("long"))
+      .filter(lit(10) * col("n") >= lit(9) * col("sz_i"))
+      .select(col("doc_id"), col("ts"), col("cor_id"),
+        expr("10000 * n div sz_i").as("score"))
   }
+
+  /** Fold a screen's matches to each doc's best one — highest score, then
+    * lowest `cor_id` — as `(doc_id, best_match, <scoreName>)`. One
+    * min(struct) aggregate under a watermark window: each doc has one
+    * event time, so its group emits once in append mode, and this
+    * aggregation is the door's ONLY state (only flagged docs carry any;
+    * each group evicts at watermark + 1 hour). */
+  private def bestMatch(matches: DataFrame, scoreName: String): DataFrame =
+    matches.groupBy(window(col("ts"), "1 hour"), col("doc_id"))
+      .agg(min(struct((-col("score")).as("neg"), col("cor_id"))).as("b"))
+      .select(col("doc_id"), col("b.cor_id").as("best_match"),
+        (-col("b.neg")).as(scoreName))
+
+  // ------------------------------------ streaming near-dup ingest gate
+
+  /** Streaming twin of q68's NEAR-DUP leg: each arriving document is
+    * probed against the landed corpus's LSH band postings and — when a
+    * band collision VERIFIES at jaccard ≥ 0.9 ([[nearDupMatches]]) —
+    * emitted exactly once with its best corpus match, so near-duplicate
+    * re-crawls are rejected AT INGEST rather than by a later batch sweep.
+    * [[ingestDedup]] is the exact-hash gate; this is the similarity gate
+    * beside it. No stream-stream join exists, so no join state exists.
+    *
+    * Expects `(doc_id, ts, text)` streaming and the corpus's
+    * [[ensureIngestCatalog]]; emits `(doc_id, best_match, bp)`. */
+  def nearDupIngestStream(docs: DataFrame, cat: IngestCatalog): DataFrame =
+    bestMatch(nearDupMatches(docs.withWatermark("ts", "1 hour"), cat), "bp")
+
+  // ------------------------------------ streaming containment ingest gate
+
+  /** Streaming twin of q178's CONTAINMENT leg — the third door of the
+    * ingest tier beside exact hash ([[ingestDedup]]) and near-dup
+    * ([[nearDupIngestStream]]): when ≥ 90 % of an arriving document's
+    * trigram-shingle set verifies inside some corpus doc
+    * ([[containmentMatches]]) it is emitted exactly once with its best
+    * container — truncated re-crawls and quote-wrapper pages rejected AT
+    * INGEST, the redundancy class exact and Jaccard gates both miss. The
+    * gram postings are landed, so no trigger re-explodes the corpus (the
+    * gram-postings build was the system's largest single landing cost,
+    * 255 s at sf1 pre-kernel).
+    *
+    * Expects `(doc_id, ts, text)` streaming and the corpus's
+    * [[ensureIngestCatalog]]; emits `(doc_id, best_match, containment_bp)`. */
+  def containmentIngestStream(docs: DataFrame, cat: IngestCatalog): DataFrame =
+    bestMatch(containmentMatches(docs.withWatermark("ts", "1 hour"), cat),
+      "containment_bp")
 
   // ------------------------------ streaming ingest precedence census
 
@@ -1043,117 +991,42 @@ object Streaming {
     * four individually-proven doors cannot witness alone: an exact dup is
     * also a near dup and usually also contained, and the classification a
     * dataset card reports depends on the ORDER the screens claim a doc
-    * (dup_url ≻ exact_dup ≻ near_dup ≻ contained ≻ ingested). Before
-    * this, the ordering was only batch-gated (q233); a streaming ingest
-    * that ran the doors independently could double-classify or
+    * (dup_url ≻ exact_dup ≻ near_dup ≻ contained ≻ ingested). A streaming
+    * ingest that ran the doors independently could double-classify or
     * mis-attribute without any door's own spec noticing.
     *
-    * Shape — `flatMapGroupsWithState`-free, by construction from the
-    * doors' own discipline: ONE probe projection per arriving doc
-    * (canonical URL, content digest, word-shingle set, trigram set, all
-    * row-local), three branches over it —
-    *  - BASE: stream-static left joins against the landed canonical and
-    *    digest sets → per-doc u/e flags (stateless; one row per doc, so
-    *    every doc is classified even with zero matches);
-    *  - NEAR: [[nearDupIngestStream]]'s band-probe + exact verify,
-    *    reduced to an existence flag;
-    *  - CONTAINED: [[containmentIngestStream]]'s pigeonhole prefix probe
-    *    + verify, reduced to an existence flag —
+    * Shape — `flatMapGroupsWithState`-free, three branches over the
+    * watermarked docs:
+    *  - BASE: stream-static left joins of each doc's canonical URL and
+    *    content digest against the landed canonical and digest sets →
+    *    per-doc u/e flags (stateless; one row per doc, so every doc is
+    *    classified even with zero matches);
+    *  - NEAR: the near-dup door's screen ([[nearDupMatches]]) as a flag;
+    *  - CONTAINED: the containment door's screen ([[containmentMatches]])
+    *    as a flag —
     * unioned and folded by ONE watermark-evicted (window, doc_id) max
     * aggregation; the precedence is a row-local CASE over the folded
-    * flags. Every join is stream-static (corpus side landed, never a
-    * build side that grows within the stream), so the job's ONLY state
-    * is the final aggregation — spec-asserted, like every door. Each doc
-    * has one event time → one final emission in append mode.
+    * flags. Every join is stream-static, so the job's ONLY state is the
+    * final aggregation — spec-asserted, like every door. Each doc has one
+    * event time → one final emission in append mode. Runs unchanged on
+    * batch frames (the watermark no-ops).
     *
-    * Runs UNCHANGED on batch frames (watermark no-ops, the window
-    * aggregation is ordinary) — PrecedenceStreamSpec feeds the same rows
-    * both ways and requires identical per-doc statuses, closing the last
-    * batch/stream asymmetry of the ingest tier. Expects
-    * `(doc_id, ts, url, text)` streaming and `(doc_id, url, text)` landed
-    * corpus; emits `(doc_id, status)`. */
-  def ingestPrecedenceStream(docs: DataFrame, corpus: DataFrame): DataFrame = {
-    import graft.llm.Similarity
-    val corCanon = corpus.select(canonUdf(col("url")).as("canon"))
-      .filter(col("canon").isNotNull).distinct()
-    val corDigest = corpus.select(md5(col("text")).as("th")).distinct()
-    val corpusSets = corpus
-      .select(col("doc_id").as("cor_id"),
-        Similarity.hashedShingles(col("text")).as("hs_c"))
-      .filter(size(col("hs_c")) > 0)
-    val postings = Similarity.bandKeysFor(
-        corpusSets.select(col("cor_id").as("id"), col("hs_c").as("hs")), "id")
-      .select(col("id").as("cor_id"), col("bkey"))
-    val corGram = corpus
-      .select(col("doc_id").as("cor_id"),
-        Similarity.gram3Hashed(Similarity.tokens(col("text"))).as("g_c"))
-      .select(col("cor_id"), col("g_c"), size(col("g_c")).cast("long").as("sz_c"))
-      .filter(col("sz_c") > 0)
-    val gramPost = corGram.select(col("cor_id"), explode(col("g_c")).as("h"))
-    precedenceCore(docs, corCanon, corDigest, corpusSets, postings, corGram,
-      gramPost)
-  }
-
-  /** [[ingestPrecedenceStream]] over the LANDED catalog: all five
-    * corpus-side frames (canonical URLs, content digests, shingle sets,
-    * band postings, gram arrays) plus the exploded gram postings are
-    * bucketed catalog tables landed ONCE per corpus refresh
-    * ([[ensureIngestCatalog]] — fingerprint-locked, so a stream restart
-    * re-validates file metadata and reuses; r12 judge task 2). The
-    * inline door re-derived every one of these from the corpus frame —
-    * and stream-static sides re-execute per MICRO-BATCH, so it re-hashed
-    * the corpus per trigger, not just per restart. Statuses identical by
-    * construction (the tables hold exactly the inline frames);
-    * PrecedenceStreamSpec proves landed-stream ≡ inline-batch doc-by-doc
-    * and that a restart re-lands nothing. */
-  def ingestPrecedenceStreamLanded(spark: SparkSession, docs: DataFrame,
-      cat: IngestCatalog): DataFrame =
-    precedenceCore(docs,
-      spark.table(cat.canonT), spark.table(cat.digestT),
-      spark.table(cat.sigsT), spark.table(cat.bandsT),
-      spark.table(cat.gramT), spark.table(cat.gpostT))
-
-  private def precedenceCore(docs: DataFrame, corCanon: DataFrame,
-      corDigest: DataFrame, corpusSets: DataFrame, postings: DataFrame,
-      corGram: DataFrame, gramPost: DataFrame): DataFrame = {
-    import graft.llm.Similarity
-    val marked = if (docs.isStreaming) docs.withWatermark("ts", "1 hour") else docs
-    val probes = marked.select(col("doc_id"), col("ts"),
-      canonUdf(col("url")).as("canon"), md5(col("text")).as("th"),
-      Similarity.hashedShingles(col("text")).as("hs"),
-      Similarity.gram3Hashed(Similarity.tokens(col("text"))).as("g3"))
-    def flags(u: Int, e: Int, n: Int, c: Int) = Seq(
+    * Expects `(doc_id, ts, url, text)` streaming and the corpus's
+    * [[ensureIngestCatalog]]; emits `(doc_id, status)`. */
+  def ingestPrecedenceStream(docs: DataFrame, cat: IngestCatalog): DataFrame = {
+    val spark = docs.sparkSession
+    val marked = docs.withWatermark("ts", "1 hour")
+    def flags(u: Int, e: Int, n: Int, c: Int) = Seq(col("doc_id"), col("ts"),
       lit(u).as("u"), lit(e).as("e"), lit(n).as("n"), lit(c).as("c"))
-    val base = probes
-      .join(corCanon.withColumn("cu", lit(1)), Seq("canon"), "left")
-      .join(corDigest.withColumn("ce", lit(1)), Seq("th"), "left")
-      .select(Seq(col("doc_id"), col("ts"), coalesce(col("cu"), lit(0)).as("u"),
-        coalesce(col("ce"), lit(0)).as("e"), lit(0).as("n"), lit(0).as("c")): _*)
-    val near = Similarity.bandKeysKeepingFor(
-        probes.filter(size(col("hs")) > 0)
-          .select(col("doc_id").as("id"), col("ts"), col("hs")), "id", Seq("ts", "hs"))
-      .select(col("id").as("doc_id"), col("ts"), col("hs").as("hs_i"), col("bkey"))
-      .join(postings, Seq("bkey"))
-      .join(corpusSets, Seq("cor_id"))
-      .withColumn("sz_i", size(col("hs_i"))).withColumn("szc", size(col("hs_c")))
-      .filter(least(col("sz_i"), col("szc")) * 10 >=
-        greatest(col("sz_i"), col("szc")) * 9)
-      .withColumn("nsh", graft.functions.ArrayKernels
-        .sortedIntersectCount(col("hs_i"), col("hs_c")))
-      .filter(expr("(10000 * nsh) div CAST(sz_i + szc - nsh AS BIGINT)") >= 9000)
-      .select(Seq(col("doc_id"), col("ts")) ++ flags(0, 0, 1, 0): _*)
-    val cont = probes.withColumn("sz_i", size(col("g3")).cast("long"))
-      .filter(col("sz_i") > 0)
-      .select(col("doc_id"), col("ts"), col("g3"), col("sz_i"),
-        explode(slice(col("g3"), lit(1),
-          col("sz_i") - expr("(9 * sz_i + 9) div 10") + 1)).as("h"))
-      .join(gramPost, Seq("h"))
-      .join(corGram, Seq("cor_id"))
-      .filter(lit(10) * col("sz_c") >= lit(9) * col("sz_i"))
-      .withColumn("nsh", graft.functions.ArrayKernels
-        .sortedIntersectCount(col("g3"), col("g_c")).cast("long"))
-      .filter(lit(10) * col("nsh") >= lit(9) * col("sz_i"))
-      .select(Seq(col("doc_id"), col("ts")) ++ flags(0, 0, 0, 1): _*)
+    val base = marked
+      .select(col("doc_id"), col("ts"), canonUdf(col("url")).as("canon"),
+        md5(col("text")).as("th"))
+      .join(spark.table(cat.canonT).withColumn("cu", lit(1)), Seq("canon"), "left")
+      .join(spark.table(cat.digestT).withColumn("ce", lit(1)), Seq("th"), "left")
+      .select(col("doc_id"), col("ts"), coalesce(col("cu"), lit(0)).as("u"),
+        coalesce(col("ce"), lit(0)).as("e"), lit(0).as("n"), lit(0).as("c"))
+    val near = nearDupMatches(marked, cat).select(flags(0, 0, 1, 0): _*)
+    val cont = containmentMatches(marked, cat).select(flags(0, 0, 0, 1): _*)
     base.unionByName(near).unionByName(cont)
       .groupBy(window(col("ts"), "1 hour"), col("doc_id"))
       .agg(max(col("u")).as("u"), max(col("e")).as("e"),
@@ -1197,10 +1070,7 @@ object Streaming {
     val spark = events.sparkSession
     import spark.implicits._
     val dayMs = 24L * 3600 * 1000
-    events.withWatermark("ts", "1 hour")
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[EventRow]
+    eventRows(events.withWatermark("ts", "1 hour"))
       .groupByKey(e => Math.floorDiv(e.ts.getTime, dayMs))
       .flatMapGroupsWithState[DaySketchState, DaySketchRow](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {

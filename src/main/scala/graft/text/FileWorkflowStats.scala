@@ -96,7 +96,8 @@ object FileWorkflowStats {
     * listing, byte length and md5 of the merged file's exact bytes. */
   def mergeStats(spark: SparkSession, dir: String): DataFrame = {
     val root = ensureRuns(spark, dir)
-    val ins = spark.read.format("binaryFile").load(s"$root/merge_in/*.txt")
+    val ins = spark.read.format("binaryFile").option("pathGlobFilter", "*.txt")
+      .load(s"$root/merge_in")
       .agg(count(lit(1)).as("n_files"))
     val out = spark.read.format("binaryFile")
       .load(s"$root/merge_out/merged_output.txt")
@@ -168,7 +169,8 @@ object FileWorkflowStats {
     val listed = fs.listStatus(outPath).filter(_.isFile)
       .map(st => (st.getPath.getName, st.getLen)).toSeq
       .toDF("name", "n_bytes")
-    val contents = spark.read.format("binaryFile").load(s"$root/split_out/*.txt")
+    val contents = spark.read.format("binaryFile").option("pathGlobFilter", "*.txt")
+      .load(s"$root/split_out")
       .select(element_at(split(col("path"), "/"), -1).as("name"),
         md5(col("content")).as("content_md5"))
     listed.join(contents, Seq("name"), "left")

@@ -214,6 +214,24 @@ class LayoutSpec extends SparkSpec {
     spark.sql(s"DROP TABLE $table")
   }
 
+  test("ensureBucketed re-lands an in-memory build whose middle row changed") {
+    import spark.implicits._
+    val table = "graft_inmem_guard_spec"
+    def land(rows: Seq[(Long, String)]): Unit =
+      Layout.ensureBucketed(spark, table, "k", numBuckets = 2)(rows.toDF("k", "v"))
+    def served: Set[(Long, String)] =
+      spark.table(table).collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    // no input files, and equal count, min(k) and max(k): only a row
+    // other than the extremes tells the two builds apart
+    val before = Seq((1L, "a"), (2L, "b"), (3L, "c"))
+    val after = Seq((1L, "a"), (2L, "changed"), (3L, "c"))
+    land(before)
+    assert(served == before.toSet)
+    land(after)
+    assert(served == after.toSet, "a changed middle row must re-land the table")
+    spark.sql(s"DROP TABLE $table")
+  }
+
   test("ErrorIfExists refuses a second write (reference K6 precondition)") {
     val out = Files.createTempDirectory("graft-layout2").resolve("docs").toString
     val docs = graft.Tables.documents(spark, sfDir).limit(10)

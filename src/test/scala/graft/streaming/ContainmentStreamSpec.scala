@@ -30,14 +30,17 @@ class ContainmentStreamSpec extends SparkSpec {
       .select(col("doc_id"), col("source"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     val corpusDf = docs.filter(_._1 % 10 != 7).toSeq
-      .toDF("doc_id", "source", "text").select(col("doc_id"), col("text"))
+      .toDF("doc_id", "source", "text")
+      .select(col("doc_id"),
+        concat(lit("https://corpus.example/"), col("doc_id")).as("url"), col("text"))
+    val cat = Streaming.ensureIngestCatalog(spark, "containment_stream_spec", corpusDf)
     val base = 1700000000000L
     val rows = docs.filter(_._1 % 10 == 7).zipWithIndex.map { case ((id, s, t), i) =>
       Streaming.DocIngestRow(id, new java.sql.Timestamp(base + i * 20000L), s, t)
     }
 
     val stream = MemoryStream[Streaming.DocIngestRow]
-    val q = Streaming.containmentIngestStream(stream.toDF(), corpusDf)
+    val q = Streaming.containmentIngestStream(stream.toDF(), cat)
       .writeStream.format("memory").queryName("containment_stream")
       .outputMode("append").start()
     try {
@@ -81,12 +84,14 @@ class ContainmentStreamSpec extends SparkSpec {
       // 20-token prefix (18 trigrams, all inside) → containment 10000 bp
       val corpusText = (1 to 30).map(i => s"w$i").mkString(" ")
       val containedText = (1 to 20).map(i => s"w$i").mkString(" ")
-      val corpus = Seq((100L, corpusText)).toDF("doc_id", "text")
+      val corpus = Seq((100L, "https://corpus.example/100", corpusText))
+        .toDF("doc_id", "url", "text")
+      val cat = Streaming.ensureIngestCatalog(spark, "containment_restart_spec", corpus)
       val schema = StructType.fromDDL(
         "doc_id BIGINT, ts TIMESTAMP, source STRING, text STRING")
       def ts(h: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 $h%02d:30:00")
       def start() = Streaming.containmentIngestStream(
-          spark.readStream.schema(schema).parquet(in), corpus)
+          spark.readStream.schema(schema).parquet(in), cat)
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .outputMode("append").start()

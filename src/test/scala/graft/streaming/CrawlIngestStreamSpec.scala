@@ -32,7 +32,9 @@ class CrawlIngestStreamSpec extends SparkSpec {
     val bToks = (1 to 40).map(i => f"btok$i%02d")
     val textB = bToks.mkString(" ")
     val textC = (1 to 20).map(i => f"ctok$i%02d").mkString(" ")
-    val corpus = Seq((100L, textB), (101L, textC)).toDF("doc_id", "text")
+    val corpus = Seq((100L, "https://corpus.example/100", textB),
+      (101L, "https://corpus.example/101", textC)).toDF("doc_id", "url", "text")
+    val cat = Streaming.ensureIngestCatalog(spark, "crawl_ingest_stream_spec", corpus)
     val landedFrontier = Seq("https://seen.com/old?id=1").toDF("url")
 
     val uniq1 = "unique first document with its own words"
@@ -127,10 +129,10 @@ class CrawlIngestStreamSpec extends SparkSpec {
       Streaming.ingestDedup(ndRename(exStream.toDF()), corpusDf)
         .writeStream.format("memory").queryName("ci_exact")
         .outputMode("append").start(),
-      Streaming.nearDupIngestStream(ndStream.toDF(), corpusDf)
+      Streaming.nearDupIngestStream(ndStream.toDF(), cat)
         .writeStream.format("memory").queryName("ci_neardup")
         .outputMode("append").start(),
-      Streaming.containmentIngestStream(ctStream.toDF(), corpusDf)
+      Streaming.containmentIngestStream(ctStream.toDF(), cat)
         .writeStream.format("memory").queryName("ci_contain")
         .outputMode("append").start())
     try {

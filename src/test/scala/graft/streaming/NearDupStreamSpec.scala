@@ -72,9 +72,11 @@ class NearDupStreamSpec extends SparkSpec {
       Streaming.DocIngestRow(id, new java.sql.Timestamp(base + i * 20000L), s, t)
     }
     val corpusDf = corpusRows.toSeq.toDF("doc_id", "source", "text")
-      .select(col("doc_id"), col("text"))
+      .select(col("doc_id"),
+        concat(lit("https://corpus.example/"), col("doc_id")).as("url"), col("text"))
+    val cat = Streaming.ensureIngestCatalog(spark, "neardup_stream_spec", corpusDf)
     val stream = MemoryStream[Streaming.DocIngestRow]
-    val q = Streaming.nearDupIngestStream(stream.toDF(), corpusDf)
+    val q = Streaming.nearDupIngestStream(stream.toDF(), cat)
       .writeStream.format("memory").queryName("neardup_stream")
       .outputMode("append").start()
     try {
@@ -117,14 +119,16 @@ class NearDupStreamSpec extends SparkSpec {
     try {
       val corpusText = (1 to 20).map(i => s"w$i").mkString(" ")
       val nearText = (1 to 20).map(i => s"w$i").mkString(" ") + " extra"
-      val corpus = Seq((100L, corpusText)).toDF("doc_id", "text")
+      val corpus = Seq((100L, "https://corpus.example/100", corpusText))
+        .toDF("doc_id", "url", "text")
+      val cat = Streaming.ensureIngestCatalog(spark, "neardup_restart_spec", corpus)
       // sanity: the planted pair must clear the 0.9 cut (20 shared of 21)
       assert(10000L * 20 / 21 >= 9000)
       val schema = StructType.fromDDL(
         "doc_id BIGINT, ts TIMESTAMP, source STRING, text STRING")
       def ts(h: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 $h%02d:30:00")
       def start() = Streaming.nearDupIngestStream(
-          spark.readStream.schema(schema).parquet(in), corpus)
+          spark.readStream.schema(schema).parquet(in), cat)
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .outputMode("append").start()

@@ -32,6 +32,7 @@ class PrecedenceStreamSpec extends SparkSpec {
       (3L, "https://x.example/p3", textC),
       (4L, "https://x.example/p4", textD)
     ).toDF("doc_id", "url", "text")
+    val cat = Streaming.ensureIngestCatalog(spark, "precedence_stream_spec", corpus)
 
     val mutatedC = (textC.split(" ").dropRight(1) :+ "zzplanted").mkString(" ")
     // one-token mutation: |∩| = 29 of |∪| = 31 → jaccard ≈ 0.935 ≥ 0.9
@@ -54,7 +55,7 @@ class PrecedenceStreamSpec extends SparkSpec {
     val batchRows = incoming.map { case (id, u, t, _) =>
       (id, new java.sql.Timestamp(1700000000000L), u, t)
     }.toDF("doc_id", "ts", "url", "text")
-    val batchGot = Streaming.ingestPrecedenceStream(batchRows, corpus)
+    val batchGot = Streaming.ingestPrecedenceStream(batchRows, cat)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
     assert(batchGot == expected, s"batch census wrong: $batchGot")
 
@@ -63,7 +64,7 @@ class PrecedenceStreamSpec extends SparkSpec {
       Streaming.UrlDocIngestRow(id, new java.sql.Timestamp(base + i * 20000L), u, t)
     }
     val stream = MemoryStream[Streaming.UrlDocIngestRow]
-    val q = Streaming.ingestPrecedenceStream(stream.toDF(), corpus)
+    val q = Streaming.ingestPrecedenceStream(stream.toDF(), cat)
       .writeStream.format("memory").queryName("precedence_stream")
       .outputMode("append").start()
     try {
@@ -130,19 +131,15 @@ class PrecedenceStreamSpec extends SparkSpec {
     assert(landed1.exists(_.startsWith("graft_ingate_")),
       "first ensure must actually land the catalog")
 
-    // landed door ≡ inline door on the batch frame (same core, landed sides)
-    val inlineGot = Streaming.ingestPrecedenceStream(batchRows, corpus)
+    val landedGot = Streaming.ingestPrecedenceStream(batchRows, cat)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
-    val landedGot = Streaming.ingestPrecedenceStreamLanded(spark, batchRows, cat)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
-    assert(inlineGot == expected, s"inline census wrong: $inlineGot")
     assert(landedGot == expected, s"landed census diverged: $landedGot")
 
     // the near-dup and containment doors over the same catalog
-    val nearGot = Streaming.nearDupIngestStreamLanded(spark, batchRows, cat)
+    val nearGot = Streaming.nearDupIngestStream(batchRows, cat)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(nearGot == Set(201L, 202L, 203L), s"landed near door: $nearGot")
-    val contGot = Streaming.containmentIngestStreamLanded(spark, batchRows, cat)
+    val contGot = Streaming.containmentIngestStream(batchRows, cat)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(contGot == Set(201L, 202L, 203L, 204L), s"landed containment door: $contGot")
 
@@ -159,7 +156,7 @@ class PrecedenceStreamSpec extends SparkSpec {
       Streaming.UrlDocIngestRow(id, new java.sql.Timestamp(base + i * 20000L), u, t)
     }
     val stream = MemoryStream[Streaming.UrlDocIngestRow]
-    val q = Streaming.ingestPrecedenceStreamLanded(spark, stream.toDF(), cat2)
+    val q = Streaming.ingestPrecedenceStream(stream.toDF(), cat2)
       .writeStream.format("memory").queryName("precedence_landed")
       .outputMode("append").start()
     try {
