@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftops.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ByteType, DataType, LongType}
 
 /** Native Catalyst expressions (with codegen) for the two array kernels on
   * the similarity hot paths (SURVEY.md §4.2: upgrade UDF-ish array exprs to
@@ -19,8 +19,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *  - `aggregate(zip_with(a, b, _*_), 0, _+_)` builds an intermediate array
   *    and evaluates interpreted lambda closures per element; a fused loop is
   *    one codegen'd multiply-add per element.
-  * Both generate straight-line Java inside whole-stage codegen (and provide
-  * an equivalent interpreted eval for fallback contexts).
+  * Each kernel's loop is written once, as `compute` on its companion
+  * object: `nullSafeEval` calls it when Spark evaluates without generated
+  * code, and `doGenCode` emits one call of it inside whole-stage codegen.
   */
 object ArrayKernels {
 
@@ -47,13 +48,24 @@ object ArrayKernels {
 case class SortedLongIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.longArrays(this)
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.arrays(this, LongType)
   override def dataType: DataType = LongType
   override def prettyName: String = "sorted_intersect_count"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedLongIntersectCount.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SortedLongIntersectCount.compute($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedLongIntersectCount =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedLongIntersectCount {
+  /** Merge walk over two sorted, duplicate-free arrays. */
+  def compute(x: ArrayData, y: ArrayData): Long = {
     var i = 0; var j = 0; var cnt = 0L
     val na = x.numElements(); val nb = y.numElements()
     while (i < na && j < nb) {
@@ -64,122 +76,58 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
     }
     cnt
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |int $i = 0; int $j = 0;
-         |final int $na = $a.numElements();
-         |final int $nb = $b.numElements();
-         |long ${ev.value}Acc = 0L;
-         |while ($i < $na && $j < $nb) {
-         |  final long $xv = $a.getLong($i);
-         |  final long $yv = $b.getLong($j);
-         |  if ($xv < $yv) { $i++; }
-         |  else if ($xv > $yv) { $j++; }
-         |  else { ${ev.value}Acc++; $i++; $j++; }
-         |}
-         |${ev.value} = ${ev.value}Acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedLongIntersectCount =
-    copy(left = newLeft, right = newRight)
 }
 
 case class DotProductLong(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.longArrays(this)
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.arrays(this, LongType)
   override def dataType: DataType = LongType
   override def prettyName: String = "dot_long"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var i = 0; var s = 0L
-    while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProductLong.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      s"""
-         |final int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long ${ev.value}Acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  ${ev.value}Acc += $a.getLong($i) * $b.getLong($i);
-         |}
-         |${ev.value} = ${ev.value}Acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.DotProductLong.compute($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductLong =
     copy(left = newLeft, right = newRight)
 }
 
+object DotProductLong {
+  def compute(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var i = 0; var s = 0L
+    while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
+    s
+  }
+}
+
 case class DotProductByte(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.byteArrays(this)
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.arrays(this, ByteType)
   override def dataType: DataType = LongType
   override def prettyName: String = "dot_int8"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var i = 0; var s = 0L
-    while (i < n) { s += x.getByte(i).toLong * y.getByte(i); i += 1 }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProductByte.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      s"""
-         |final int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long ${ev.value}Acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  ${ev.value}Acc += (long) $a.getByte($i) * $b.getByte($i);
-         |}
-         |${ev.value} = ${ev.value}Acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.DotProductByte.compute($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductByte =
     copy(left = newLeft, right = newRight)
 }
 
-/** Shared input-type validation (ExpectsInputTypes is private[sql]). */
-private[functions] object GraftTypeChecks {
-  def longArrays(e: BinaryExpression): TypeCheckResult = {
-    val ok = Seq(e.left, e.right).forall(c => c.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"${e.prettyName} requires two ARRAY<BIGINT> arguments, got " +
-        s"(${e.left.dataType.simpleString}, ${e.right.dataType.simpleString})")
-  }
-
-  def byteArrays(e: BinaryExpression): TypeCheckResult = {
-    val ok = Seq(e.left, e.right).forall(c => c.dataType match {
-      case ArrayType(org.apache.spark.sql.types.ByteType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"${e.prettyName} requires two ARRAY<TINYINT> arguments, got " +
-        s"(${e.left.dataType.simpleString}, ${e.right.dataType.simpleString})")
+object DotProductByte {
+  def compute(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var i = 0; var s = 0L
+    while (i < n) { s += x.getByte(i).toLong * y.getByte(i); i += 1 }
+    s
   }
 }

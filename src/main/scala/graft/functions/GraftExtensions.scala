@@ -65,8 +65,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(args.length == 2, "misra_gries(item, k) takes 2 arguments")
         MisraGriesAgg(args.head, litInt(args(1), "misra_gries"))
       }))
-    // graft's standard sketch configuration (the constants baked into the
-    // oracle SQL): 64 fixed-LCG permutations for MinHash, 32-bit SimHash.
     ext.injectFunction((
       new FunctionIdentifier("dot_int8"),
       new ExpressionInfo(classOf[DotProductByte].getName, "dot_int8"),
@@ -74,6 +72,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(args.length == 2, "dot_int8(a, b) takes 2 arguments")
         DotProductByte(args.head, args(1))
       }))
+    // graft's standard sketch configuration (the constants baked into the
+    // oracle SQL): 64 fixed-LCG permutations for MinHash, 60-bit SimHash.
     ext.injectFunction((
       new FunctionIdentifier("minhash_sig"),
       new ExpressionInfo(classOf[MinhashSignatureExpr].getName, "minhash_sig"),

@@ -73,11 +73,8 @@ case class LongGram(
   override def nullable: Boolean = false
   override def prettyName: String = "gram_long"
 
-  override def checkInputDataTypes(): TypeCheckResult = vecExpr.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<BIGINT>, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftTypeChecks.one(this, vecExpr, ArrayType(LongType))
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 

@@ -4,25 +4,28 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftops.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd signature kernels for the near-duplicate sketches.
   *
-  * The interpreted forms these replace (round-1 hot spots, 38.5s of the
-  * 125.5s bench across q41/q43/q53):
+  * The interpreted forms these replace:
   *  - MinHash: `aggregate(hs, array_repeat(P, 64), (acc, h) =>
   *    zip_with(acc, perms, ...))` — every shingle allocates a fresh 64-long
   *    accumulator array and evaluates 64 interpreted lambda closures;
-  *  - SimHash: the same fold shape with a 32-wide counter array per token.
+  *  - SimHash: the same fold shape with a counter array per token.
   *
   * Both are inherently straight-line integer loops over one input array, so
   * each becomes a single expression with local `long[]` state: one
-  * allocation per ROW (not per element), no closures, inlined into
-  * whole-stage codegen. Equivalent interpreted eval provided for
-  * non-codegen contexts; results are bit-identical to the HOF forms
-  * (verified by the unchanged q40/q41/q43/q53 oracle hashes).
+  * allocation per ROW (not per element), no closures. Every kernel's loop
+  * is written once, as a static `compute`: `nullSafeEval` calls it when
+  * Spark evaluates without generated code, and `doGenCode` emits one call
+  * of it inside whole-stage codegen, so both paths run the same body.
+  * Results are bit-identical to the HOF forms (SketchKernelsSpec, and the
+  * q40/q41/q43/q53 oracle hashes).
   */
 object SketchKernels {
 
@@ -84,7 +87,7 @@ object SketchKernels {
     * three consecutive tokens, hash the space-joined gram to the 60-bit
     * md5 prefix mod `mod`; return the DISTINCT values sorted ascending
     * (< 3 tokens → empty array). Drop-in for the HOF form
-    * [[graft.llm.Similarity.gram3HashedHof]] — `array_sort(array_distinct(
+    * in SketchKernelsSpec — `array_sort(array_distinct(
     * transform(sequence(1, n-2), i => pmod(hash60(concat_ws(" ", t[i],
     * t[i+1], t[i+2])), mod))))` — which pays an interpreted lambda, a
     * three-way string concat, an md5→hex→substr→base-16-parse chain PLUS
@@ -92,9 +95,8 @@ object SketchKernels {
     * tokens' bytes directly (each token's bytes extracted once per row,
     * not once per gram) in one compiled pass. Bit-identical
     * (spec-asserted over the corpus in SketchKernelsSpec), including
-    * concat_ws's null-element skipping. The r12 landings instrumentation
-    * put the trigram-postings build at 255 s/sf1 — almost entirely this
-    * chain — which is what the kernel exists to cut (r12 judge task 1). */
+    * concat_ws's null-element skipping. The trigram-postings landing
+    * runs this per document, so the per-gram cost is the landing's cost. */
   def wordGram3Hash60(toks: Column, mod: Long): Column =
     ColumnBridge.column(WordGram3Hash60Expr(ColumnBridge.expression(toks), mod))
 
@@ -146,17 +148,12 @@ object SketchKernels {
 }
 
 case class Hash60Expr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${other.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.one(this, child, StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "hash60"
 
   override def nullSafeEval(input: Any): Any =
-    TokensHash60.hash60(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes)
+    TokensHash60.hash60(input.asInstanceOf[UTF8String].getBytes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
@@ -166,38 +163,97 @@ case class Hash60Expr(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object SpanMd5s {
-  private val HexChars = "0123456789abcdef".getBytes
-  private val Space = Array(' '.toByte)
-
-  /** Static entry the generated code calls. */
-  def compute(arr: ArrayData, w: Int): ArrayData = {
-    val n = arr.numElements()
-    val m = n - w + 1
-    if (m < 1) return new GenericArrayData(Array.empty[Any])
-    val bytes = new Array[Array[Byte]](n)
+/** Loops shared by several kernels below. None takes a function argument:
+  * a callback shared by many kernels would see many receiver types at one
+  * call site and stop being inlined into the per-element loop. */
+private[functions] object GramLoops {
+  /** hash60 mod `mod` of every n-CODE-POINT gram of `s`, in position
+    * order; fewer than n code points → empty. Grams are cut by code point
+    * (Spark `substring` / DuckDB `substr` semantics, not UTF-16 units) and
+    * hashed as UTF-8 bytes, exactly what `md5(substring(t, i, n))` hashes. */
+  def gramHashes(s: String, n: Int, mod: Long): Array[Long] = {
+    val cpStart = new Array[Int](s.codePointCount(0, s.length) + 1)
+    var cps = 0
+    var ci = 0
+    while (ci < s.length) {
+      cpStart(cps) = ci
+      cps += 1
+      ci += Character.charCount(s.codePointAt(ci))
+    }
+    cpStart(cps) = s.length
+    val nGrams = cps - (n - 1)
+    if (nGrams <= 0) return Array.emptyLongArray
+    val out = new Array[Long](nGrams)
     var i = 0
-    while (i < n) {
+    while (i < nGrams) {
+      val bytes = s.substring(cpStart(i), cpStart(i + n))
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      out(i) = TokensHash60.hash60(bytes) % mod
+      i += 1
+    }
+    out
+  }
+
+  /** `a(0 until n)` sorted ascending with duplicates dropped (array_sort ∘
+    * array_distinct on non-null longs); `a` itself when nothing is cut. */
+  def sortedDistinct(a: Array[Long], n: Int): Array[Long] = {
+    java.util.Arrays.sort(a, 0, n)
+    var w = math.min(n, 1)
+    var r = 1
+    while (r < n) {
+      if (a(r) != a(w - 1)) { a(w) = a(r); w += 1 }
+      r += 1
+    }
+    if (w == a.length) a else java.util.Arrays.copyOf(a, w)
+  }
+
+  /** UTF-8 bytes of each element of a STRING array (null stays null),
+    * extracted once per row, not once per window. */
+  def elementBytes(arr: ArrayData): Array[Array[Byte]] = {
+    val bytes = new Array[Array[Byte]](arr.numElements())
+    var i = 0
+    while (i < bytes.length) {
       val u = arr.getUTF8String(i)
       bytes(i) = if (u == null) null else u.getBytes
       i += 1
     }
+    bytes
+  }
+
+  private val Space = Array(' '.toByte)
+
+  /** md5 digest of elements `from until from + w` joined by single spaces,
+    * nulls skipped together with their separator: the bytes both
+    * `array_join(slice(...), " ")` and `concat_ws(" ", ...)` produce. */
+  def joinedMd5(bytes: Array[Array[Byte]], from: Int, w: Int): Array[Byte] = {
+    val md = TokensHash60.freshMd5()
+    var first = true
+    var j = from
+    while (j < from + w) {
+      val b = bytes(j)
+      if (b != null) {
+        if (!first) md.update(Space)
+        md.update(b)
+        first = false
+      }
+      j += 1
+    }
+    md.digest()
+  }
+}
+
+object SpanMd5s {
+  private val HexChars = "0123456789abcdef".getBytes
+
+  /** Static entry the generated code calls. */
+  def compute(arr: ArrayData, w: Int): ArrayData = {
+    val m = arr.numElements() - w + 1
+    if (m < 1) return new GenericArrayData(Array.empty[Any])
+    val bytes = GramLoops.elementBytes(arr)
     val out = new Array[Any](m)
     var k = 0
     while (k < m) {
-      val md = TokensHash60.freshMd5()
-      var first = true
-      var j = k
-      while (j < k + w) {
-        val b = bytes(j)
-        if (b != null) { // array_join skips nulls AND their separator
-          if (!first) md.update(Space)
-          md.update(b)
-          first = false
-        }
-        j += 1
-      }
-      val d = md.digest()
+      val d = GramLoops.joinedMd5(bytes, k, w)
       val hex = new Array[Byte](32)
       var p = 0
       while (p < 16) {
@@ -205,7 +261,7 @@ object SpanMd5s {
         hex(2 * p + 1) = HexChars(d(p) & 0xf)
         p += 1
       }
-      out(k) = org.apache.spark.unsafe.types.UTF8String.fromBytes(hex)
+      out(k) = UTF8String.fromBytes(hex)
       k += 1
     }
     new GenericArrayData(out)
@@ -215,23 +271,17 @@ object SpanMd5s {
 case class SpanMd5sExpr(child: Expression, w: Int) extends UnaryExpression {
   require(w >= 1, "window must be positive")
 
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StringType, containsNull = false)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "span_md5s"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING>, got ${other.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftTypeChecks.one(this, child, ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     SpanMd5s.compute(input.asInstanceOf[ArrayData], w)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.SpanMd5s.compute($arr, $w);")
+    defineCodeGen(ctx, ev, arr => s"graft.functions.SpanMd5s.compute($arr, $w)")
 
   override protected def withNewChildInternal(newChild: Expression): SpanMd5sExpr =
     copy(child = newChild)
@@ -244,14 +294,26 @@ case class MinhashSignatureExpr(child: Expression, a: Array[Long], b: Array[Long
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_signature"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<BIGINT>, got ${other.simpleString}")
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftTypeChecks.one(this, child, ArrayType(LongType))
+
+  override def nullSafeEval(input: Any): Any =
+    MinhashSignatureExpr.compute(input.asInstanceOf[ArrayData], a, b, p)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val aRef = ctx.addReferenceObj("permA", a, "long[]")
+    val bRef = ctx.addReferenceObj("permB", b, "long[]")
+    defineCodeGen(ctx, ev, hs =>
+      s"graft.functions.MinhashSignatureExpr.compute($hs, $aRef, $bRef, ${p}L)")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
+  override protected def withNewChildInternal(newChild: Expression): MinhashSignatureExpr =
+    copy(child = newChild)
+}
+
+object MinhashSignatureExpr {
+  /** Static entry the generated code calls. */
+  def compute(hs: ArrayData, a: Array[Long], b: Array[Long], p: Long): ArrayData = {
     val k = a.length
     val acc = new Array[Long](k)
     java.util.Arrays.fill(acc, p)
@@ -267,38 +329,8 @@ case class MinhashSignatureExpr(child: Expression, a: Array[Long], b: Array[Long
       }
       i += 1
     }
-    new GenericArrayData(acc)
+    UnsafeArrayData.fromPrimitiveArray(acc)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, hs => {
-      val aRef = ctx.addReferenceObj("permA", a, "long[]")
-      val bRef = ctx.addReferenceObj("permB", b, "long[]")
-      val acc = ctx.freshName("acc")
-      val n = ctx.freshName("n")
-      val k = ctx.freshName("k")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      s"""
-         |final int $k = $aRef.length;
-         |final long[] $acc = new long[$k];
-         |java.util.Arrays.fill($acc, ${p}L);
-         |final int $n = $hs.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final long $h = $hs.getLong($i);
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    final long $v = ($aRef[$j] * $h + $bRef[$j]) % ${p}L;
-         |    if ($v < $acc[$j]) $acc[$j] = $v;
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($acc);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): MinhashSignatureExpr =
-    copy(child = newChild)
 }
 
 object TokensHash60 {
@@ -312,10 +344,9 @@ object TokensHash60 {
     * by piece: UTF8String.toLowerCase (same as the `lower` expression),
     * java.util.regex split on "\s+" with limit -1 (same as `split`),
     * empties dropped (same as the `filter` lambda). */
-  def compute(text: org.apache.spark.unsafe.types.UTF8String,
-              mod: Long, distinctSorted: Boolean): ArrayData = {
+  def compute(text: UTF8String, mod: Long, distinctSorted: Boolean): ArrayData = {
     val toks = splitPattern.split(text.toLowerCase.toString, -1)
-    var out = new Array[Long](toks.length)
+    val out = new Array[Long](toks.length)
     var n = 0
     var i = 0
     while (i < toks.length) {
@@ -327,18 +358,10 @@ object TokensHash60 {
       }
       i += 1
     }
-    if (distinctSorted && n > 0) {
-      java.util.Arrays.sort(out, 0, n)
-      var w = 1
-      var r = 1
-      while (r < n) {
-        if (out(r) != out(w - 1)) { out(w) = out(r); w += 1 }
-        r += 1
-      }
-      n = w
-    }
-    if (n != out.length) out = java.util.Arrays.copyOf(out, n)
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(
+      if (distinctSorted) GramLoops.sortedDistinct(out, n)
+      else if (n == out.length) out
+      else java.util.Arrays.copyOf(out, n))
   }
 
   private val splitPattern = java.util.regex.Pattern.compile("\\s+")
@@ -359,8 +382,6 @@ object TokensHash60 {
 }
 
 object WordGram3Hash60 {
-  private val Space = Array(' '.toByte)
-
   /** Static entry the generated code calls. Matches the HOF chain piece by
     * piece: md5 hashes exactly the UTF-8 bytes `concat_ws(" ", t[i],
     * t[i+1], t[i+2])` would produce (null elements skipped, separator
@@ -368,45 +389,16 @@ object WordGram3Hash60 {
     * distinct ascending (array_sort ∘ array_distinct on non-null longs). */
   def compute(arr: ArrayData, mod: Long): ArrayData = {
     val n = arr.numElements()
-    if (n < 3)
-      return org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(Array.emptyLongArray)
-    // each token's bytes once per row, not once per gram
-    val bytes = new Array[Array[Byte]](n)
-    var i = 0
-    while (i < n) {
-      val u = arr.getUTF8String(i)
-      bytes(i) = if (u == null) null else u.getBytes
-      i += 1
-    }
+    if (n < 3) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
+    val bytes = GramLoops.elementBytes(arr)
     val out = new Array[Long](n - 2)
     var j = 0
     while (j < n - 2) {
-      val md = TokensHash60.freshMd5()
-      var first = true
-      var k = j
-      while (k < j + 3) {
-        val b = bytes(k)
-        if (b != null) {
-          if (!first) md.update(Space)
-          md.update(b)
-          first = false
-        }
-        k += 1
-      }
-      val h = TokensHash60.top60(md.digest())
+      val h = TokensHash60.top60(GramLoops.joinedMd5(bytes, j, 3))
       out(j) = if (mod > 0) h % mod else h
       j += 1
     }
-    java.util.Arrays.sort(out)
-    var w = 1
-    var r = 1
-    while (r < out.length) {
-      if (out(r) != out(w - 1)) { out(w) = out(r); w += 1 }
-      r += 1
-    }
-    val res = if (w != out.length) java.util.Arrays.copyOf(out, w) else out
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(res)
+    UnsafeArrayData.fromPrimitiveArray(GramLoops.sortedDistinct(out, out.length))
   }
 }
 
@@ -417,19 +409,14 @@ case class WordGram3Hash60Expr(child: Expression, mod: Long)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "word_gram3_hash60"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING>, got ${other.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftTypeChecks.one(this, child, ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     WordGram3Hash60.compute(input.asInstanceOf[ArrayData], mod)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr =>
-      s"${ev.value} = graft.functions.WordGram3Hash60.compute($arr, ${mod}L);")
+    defineCodeGen(ctx, ev, arr => s"graft.functions.WordGram3Hash60.compute($arr, ${mod}L)")
 
   override protected def withNewChildInternal(newChild: Expression): WordGram3Hash60Expr =
     copy(child = newChild)
@@ -437,34 +424,10 @@ case class WordGram3Hash60Expr(child: Expression, mod: Long)
 
 object WinnowFps {
   /** Static entry the generated code calls. */
-  def compute(norm: org.apache.spark.unsafe.types.UTF8String,
-              k: Int, w: Int, mod: Long): ArrayData = {
-    val s = norm.toString
-    // char index of each codepoint start, so gram substrings are taken by
-    // CODE POINT (Spark/DuckDB substr semantics), not UTF-16 unit
-    val nChars = s.length
-    var cps = 0
-    val cpStart = new Array[Int](nChars + 1)
-    var ci = 0
-    while (ci < nChars) {
-      cpStart(cps) = ci
-      cps += 1
-      ci += Character.charCount(s.codePointAt(ci))
-    }
-    cpStart(cps) = nChars
-    val nGrams = cps - (k - 1)
-    val nWins = nGrams - (w - 1)
-    if (nWins <= 0)
-      return org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(Array.emptyLongArray)
-    val hs = new Array[Long](nGrams)
-    var i = 0
-    while (i < nGrams) {
-      val bytes = s.substring(cpStart(i), cpStart(i + k))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      hs(i) = TokensHash60.hash60(bytes) % mod
-      i += 1
-    }
+  def compute(norm: UTF8String, k: Int, w: Int, mod: Long): ArrayData = {
+    val hs = GramLoops.gramHashes(norm.toString, k, mod)
+    val nWins = hs.length - (w - 1)
+    if (nWins <= 0) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
     val mins = new Array[Long](nWins)
     var j = 0
     while (j < nWins) {
@@ -474,49 +437,14 @@ object WinnowFps {
       mins(j) = m
       j += 1
     }
-    java.util.Arrays.sort(mins)
-    var n = 1
-    var r = 1
-    while (r < nWins) {
-      if (mins(r) != mins(n - 1)) { mins(n) = mins(r); n += 1 }
-      r += 1
-    }
-    val out = if (n != nWins) java.util.Arrays.copyOf(mins, n) else mins
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(GramLoops.sortedDistinct(mins, nWins))
   }
 }
 
 object CharGramBuckets {
-  /** Static entry the generated code calls. Substrings are taken by CODE
-    * POINT (Spark `substring`/DuckDB `substr` semantics) and hashed as
-    * UTF-8 bytes — exactly what `md5(substring(t, i, n))` hashes. */
-  def compute(text: org.apache.spark.unsafe.types.UTF8String,
-              n: Int, mod: Long): ArrayData = {
-    val s = text.toString
-    val nChars = s.length
-    var cps = 0
-    val cpStart = new Array[Int](nChars + 1)
-    var ci = 0
-    while (ci < nChars) {
-      cpStart(cps) = ci
-      cps += 1
-      ci += Character.charCount(s.codePointAt(ci))
-    }
-    cpStart(cps) = nChars
-    val nGrams = cps - (n - 1)
-    if (nGrams <= 0)
-      return org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(Array.emptyLongArray)
-    val out = new Array[Long](nGrams)
-    var i = 0
-    while (i < nGrams) {
-      val bytes = s.substring(cpStart(i), cpStart(i + n))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      out(i) = TokensHash60.hash60(bytes) % mod
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  /** Static entry the generated code calls. */
+  def compute(text: UTF8String, n: Int, mod: Long): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(GramLoops.gramHashes(text.toString, n, mod))
 }
 
 case class CharGramBucketsExpr(child: Expression, n: Int, mod: Long)
@@ -526,19 +454,13 @@ case class CharGramBucketsExpr(child: Expression, n: Int, mod: Long)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "char_gram_buckets"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${other.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.one(this, child, StringType)
 
   override def nullSafeEval(input: Any): Any =
-    CharGramBuckets.compute(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, mod)
+    CharGramBuckets.compute(input.asInstanceOf[UTF8String], n, mod)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.CharGramBuckets.compute($s, $n, ${mod}L);")
+    defineCodeGen(ctx, ev, s => s"graft.functions.CharGramBuckets.compute($s, $n, ${mod}L)")
 
   override protected def withNewChildInternal(newChild: Expression): CharGramBucketsExpr =
     copy(child = newChild)
@@ -551,19 +473,13 @@ case class WinnowFpsExpr(child: Expression, k: Int, w: Int, mod: Long)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnow_fps"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${other.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.one(this, child, StringType)
 
   override def nullSafeEval(input: Any): Any =
-    WinnowFps.compute(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k, w, mod)
+    WinnowFps.compute(input.asInstanceOf[UTF8String], k, w, mod)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.WinnowFps.compute($s, $k, $w, ${mod}L);")
+    defineCodeGen(ctx, ev, s => s"graft.functions.WinnowFps.compute($s, $k, $w, ${mod}L)")
 
   override protected def withNewChildInternal(newChild: Expression): WinnowFpsExpr =
     copy(child = newChild)
@@ -575,19 +491,14 @@ case class TokensHash60Expr(child: Expression, mod: Long, distinctSorted: Boolea
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "tokens_hash60"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${other.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.one(this, child, StringType)
 
   override def nullSafeEval(input: Any): Any =
-    TokensHash60.compute(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], mod, distinctSorted)
+    TokensHash60.compute(input.asInstanceOf[UTF8String], mod, distinctSorted)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.TokensHash60.compute($s, ${mod}L, $distinctSorted);")
+    defineCodeGen(ctx, ev, s =>
+      s"graft.functions.TokensHash60.compute($s, ${mod}L, $distinctSorted)")
 
   override protected def withNewChildInternal(newChild: Expression): TokensHash60Expr =
     copy(child = newChild)
@@ -599,14 +510,22 @@ case class SimhashExpr(child: Expression, bits: Int) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<BIGINT>, got ${other.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftTypeChecks.one(this, child, ArrayType(LongType))
 
-  override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    SimhashExpr.compute(input.asInstanceOf[ArrayData], bits)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, hs => s"graft.functions.SimhashExpr.compute($hs, $bits)")
+
+  override protected def withNewChildInternal(newChild: Expression): SimhashExpr =
+    copy(child = newChild)
+}
+
+object SimhashExpr {
+  /** Static entry the generated code calls. */
+  def compute(hs: ArrayData, bits: Int): Long = {
     val counters = new Array[Long](bits)
     val n = hs.numElements()
     var i = 0
@@ -627,32 +546,4 @@ case class SimhashExpr(child: Expression, bits: Int) extends UnaryExpression {
     }
     sh
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, hs => {
-      val cnt = ctx.freshName("cnt")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val k = ctx.freshName("k")
-      val h = ctx.freshName("h")
-      val sh = ctx.freshName("sh")
-      s"""
-         |final long[] $cnt = new long[$bits];
-         |final int $n = $hs.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final long $h = $hs.getLong($i);
-         |  for (int $k = 0; $k < $bits; $k++) {
-         |    $cnt[$k] += ((($h >> $k) & 1L) != 0L) ? 1L : -1L;
-         |  }
-         |}
-         |long $sh = 0L;
-         |for (int $k = 0; $k < $bits; $k++) {
-         |  if ($cnt[$k] > 0) $sh |= 1L << $k;
-         |}
-         |${ev.value} = $sh;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimhashExpr =
-    copy(child = newChild)
 }

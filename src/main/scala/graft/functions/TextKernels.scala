@@ -11,15 +11,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Row-local text-statistics kernels (q174's digram self-information).
   *
-  * The first q174 shape exploded one row per digram into a
-  * (doc, digram) hash aggregate — ~10M shuffled rows at sf0.1 and the
-  * round-7 bench's slowest query (4.99 s). The statistic is row-LOCAL
-  * (each doc's score depends only on its own digram counts), so the
-  * explode+shuffle bought nothing: this kernel computes the same two
-  * integers in one compiled pass per document (code-point pairs keyed
-  * into an open-addressed long map), q174 dropped to a map-only plan
-  * (4.99 → 0.4 s, zero pre-output exchanges) and the oracle SQL is
-  * UNCHANGED — the hash gate pins kernel ≡ explode formulation.
+  * Each statistic depends only on the document's own code-point grams, so
+  * it is computed in one compiled pass per document (grams keyed into an
+  * open-addressed long map) and the query plans no per-gram explode and no
+  * (doc, gram) shuffle: q174 is map-only up to its output. The oracle SQL
+  * keeps the explode formulation, so its hash gate pins kernel ≡ explode.
   *
   * Digrams are CODE-POINT pairs, matching Spark `substring(t, i, 2)`
   * and DuckDB `substr` character semantics on the same text. */
@@ -47,7 +43,8 @@ object TextKernels {
     * aggregate∘transform folds whose `element_at` probed a LITERAL map
     * (a linear scan of all [[graft.text.CorpusStats.LangProfK]] entries
     * per gram: the q238 sf1 profile put ~6G such comparisons in one
-    * query). Bit-identical to the HOF form (`ctDistHof`), spec-locked. */
+    * query). Bit-identical to the HOF form `ctDistHof` in CorpusStatsSpec,
+    * spec-locked. */
   def ctDistances(prof: Column, langProfiles: Seq[Map[String, Int]],
       defaultDist: Int): Column =
     ColumnBridge.column(CtDistances(ColumnBridge.expression(prof),
@@ -68,7 +65,7 @@ object TextKernels {
     * replacing two whole-text `regexp_replace` passes (which BUILD the
     * replaced string just to measure its length), a `split` + `filter`
     * token materialization, and two interpreted per-token folds.
-    * Bit-identical to the HOF formulation (TextKernelsSpec locks it over
+    * Bit-identical to the HOF formulation (CorpusStatsSpec locks it over
     * the corpus + edge cases):
     *  - n_tokens  = size(filter(split(lower(text), "\\s+"), t -> t <> ''))
     *  - n_chars   = length(text)                      [code points]
@@ -93,8 +90,8 @@ object TextKernels {
     * byte-pass counts maximal non-\s runs instead — lowercasing cannot
     * move a token boundary (no case mapping produces or consumes an
     * ASCII whitespace char), so the count is computed on the raw bytes;
-    * bit-identity vs the HOF form is spec-locked (TextKernelsSpec link
-    * in CorpusStatsSpec) over the corpus + edge cases. */
+    * bit-identity vs the HOF form is spec-locked (CorpusStatsSpec) over
+    * the corpus + edge cases. */
   def tokenCount(c: Column): Column =
     ColumnBridge.column(TokenCount(ColumnBridge.expression(c)))
 
@@ -112,22 +109,25 @@ object TextKernels {
   def repetitionStats(c: Column): Column =
     ColumnBridge.column(RepetitionStats(ColumnBridge.expression(c)))
 
-  /** (packed keys, counts) of every distinct trigram, unsorted. */
-  private def triCountMap(s: UTF8String): (Array[Long], Array[Long]) = {
-    val cps = s.toString.codePoints().toArray
-    val n = cps.length - 2
-    if (n < 1) return (Array.emptyLongArray, Array.emptyLongArray)
-    // open-addressed map: key = (cp1<<42 | cp2<<21 | cp3) + 1 (code
-    // points <= 0x10FFFF < 2^21, so the pack is injective and < 2^63;
-    // +1 keeps 0 = empty). Numeric key order = (cp1, cp2, cp3)
-    // lexicographic = UTF-8 string order of the gram.
-    val cap = Integer.highestOneBit(math.max(4, n * 2) - 1) << 1
+  /** (packed keys, counts) of every distinct n-CODE-POINT gram of `cps`
+    * (n <= 3), unsorted, from an open-addressed map. Key = the gram's code
+    * points packed 21 bits each, first one highest, plus 1: code points
+    * are <= 0x10FFFF < 2^21, so the pack is injective and < 2^63, and +1
+    * keeps 0 = empty. Numeric key order = code-point lexicographic order =
+    * UTF-8 string order of the gram. */
+  private def gramCounts(cps: Array[Int], n: Int): (Array[Long], Array[Long]) = {
+    val grams = cps.length - (n - 1)
+    if (grams < 1) return (Array.emptyLongArray, Array.emptyLongArray)
+    val cap = Integer.highestOneBit(math.max(4, grams * 2) - 1) << 1
     val keys = new Array[Long](cap)
     val counts = new Array[Long](cap)
     val mask = cap - 1
     var i = 0
-    while (i < n) {
-      val key = (cps(i).toLong << 42 | cps(i + 1).toLong << 21 | cps(i + 2).toLong) + 1
+    while (i < grams) {
+      var key = 0L
+      var t = 0
+      while (t < n) { key = key << 21 | cps(i + t); t += 1 }
+      key += 1
       var slot = java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L) & mask
       while (keys(slot) != 0 && keys(slot) != key) slot = (slot + 1) & mask
       keys(slot) = key
@@ -158,7 +158,7 @@ object TextKernels {
   // static entry point referenced from generated code
   def triProfile(s: UTF8String, k: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val (ks, cs) = triCountMap(s)
+    val (ks, cs) = gramCounts(s.toString.codePoints().toArray, 3)
     val m = ks.length
     if (m == 0) return new GenericArrayData(Array.empty[Any])
     val idx = Array.range(0, m).sortWith { (a, b) =>
@@ -176,7 +176,7 @@ object TextKernels {
   // static entry point referenced from generated code
   def triCounts(s: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val (ks, cs) = triCountMap(s)
+    val (ks, cs) = gramCounts(s.toString.codePoints().toArray, 3)
     val m = ks.length
     if (m == 0) return new GenericArrayData(Array.empty[Any])
     val idx = Array.range(0, m).sortWith((a, b) => ks(a) < ks(b))
@@ -193,46 +193,23 @@ object TextKernels {
 
   // static entry point referenced from generated code
   def compute(s: UTF8String): InternalRow = {
-    val str = s.toString
     // code points, so a surrogate pair is ONE digram element (the same
     // unit Spark's substring and DuckDB's substr count by)
-    val cps = str.codePoints().toArray
+    val cps = s.toString.codePoints().toArray
     val n = cps.length - 1
     if (n < 1) return InternalRow(0L, 0L)
-    // open-addressed map: key = (cp1 << 21 | cp2) + 1 (code points are
-    // <= 0x10FFFF < 2^21, so the pack is injective; +1 keeps 0 = empty)
-    val cap = Integer.highestOneBit(math.max(4, n * 2) - 1) << 1
-    val keys = new Array[Long](cap)
-    val counts = new Array[Long](cap)
-    val mask = cap - 1
-    var i = 0
-    while (i < n) {
-      val key = (cps(i).toLong << 21 | cps(i + 1).toLong) + 1
-      var slot = (java.lang.Long.hashCode(key * 0x9e3779b97f4a7c15L)) & mask
-      while (keys(slot) != 0 && keys(slot) != key) slot = (slot + 1) & mask
-      keys(slot) = key
-      counts(slot) += 1
-      i += 1
-    }
+    val cs = gramCounts(cps, 2)._2
     val bn = bits(n.toLong)
     var ent = 0L
     var j = 0
-    while (j < cap) {
-      val c = counts(j)
-      if (c > 0) ent += c * (bn - bits(c))
-      j += 1
-    }
+    while (j < cs.length) { ent += cs(j) * (bn - bits(cs(j))); j += 1 }
     InternalRow(n.toLong, ent)
   }
 }
 
 case class TriCounts(child: Expression) extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.one(this, child, StringType)
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("gram", StringType, nullable = false),
     StructField("n", LongType, nullable = false))), containsNull = false)
@@ -250,11 +227,7 @@ case class TriCounts(child: Expression) extends UnaryExpression {
 
 case class TriProfile(child: Expression, k: Int) extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.one(this, child, StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "tri_profile"
 
@@ -297,11 +270,8 @@ object CtDistances {
 case class CtDistances(child: Expression, langProfiles: List[Map[String, Int]],
     defaultDist: Int) extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING>, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftTypeChecks.one(this, child, ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "ct_distances"
 
@@ -322,8 +292,8 @@ case class CtDistances(child: Expression, langProfiles: List[Map[String, Int]],
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val mapsRef = ctx.addReferenceObj("ctMaps", lookup,
       "java.util.HashMap[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CtDistances.compute($c, $mapsRef, $defaultDist);")
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.CtDistances.compute($c, $mapsRef, $defaultDist)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): CtDistances =
@@ -348,11 +318,7 @@ object TokenCount {
 }
 
 case class TokenCount(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.one(this, child, StringType)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "token_count"
 
@@ -421,11 +387,7 @@ object RepetitionStats {
 }
 
 case class RepetitionStats(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.one(this, child, StringType)
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),
     StructField("n_distinct", LongType, nullable = false),
@@ -495,11 +457,7 @@ object TextQualityStats {
 case class TextQualityStats(child: Expression, stop: List[String])
     extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.one(this, child, StringType)
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),
     StructField("n_chars", LongType, nullable = false),
@@ -524,8 +482,8 @@ case class TextQualityStats(child: Expression, stop: List[String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val setRef = ctx.addReferenceObj("stopSet", stopSet, "java.util.HashSet")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextQualityStats.compute($c, $setRef, $maxStopBytes);")
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.TextQualityStats.compute($c, $setRef, $maxStopBytes)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): TextQualityStats =
@@ -534,11 +492,7 @@ case class TextQualityStats(child: Expression, stop: List[String])
 
 case class DigramSelfInfo(child: Expression) extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.one(this, child, StringType)
   override def dataType: DataType = StructType(Seq(
     StructField("n_digrams", LongType, nullable = false),
     StructField("ent_units", LongType, nullable = false)))

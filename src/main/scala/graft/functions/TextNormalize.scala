@@ -33,11 +33,7 @@ object TextNormalize {
 
 case class NormalizeNfc(child: Expression) extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${t.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult = GraftTypeChecks.one(this, child, StringType)
   override def dataType: DataType = StringType
   override def prettyName: String = "nfc"
 

@@ -21,12 +21,12 @@ import org.apache.spark.sql.types._
   *
   * Implemented as a [[TypedImperativeAggregate]] over two primitive-ish
   * arrays (Decimal[] scores + long[] ids, insertion-sorted, fixed size k).
-  * The round-1 version was an `Aggregator[..., List[(BigDecimal, Long)], ...]`
-  * whose buffer round-tripped a Scala List + boxed BigDecimal through an
-  * ExpressionEncoder on every reduce/merge — 10× slower than its own
-  * window twin (q51 22.7s vs q07 2.2s at sf0.1). Here update/merge touch
-  * plain JVM arrays; (de)serialization happens only at the map/reduce
-  * boundary and writes k compact (unscaledBytes, id) entries.
+  * The buffer must stay plain JVM arrays: a typed `Aggregator` whose
+  * buffer is a Scala collection of boxed BigDecimals round-trips it
+  * through an ExpressionEncoder on every reduce/merge, which made q51 10×
+  * slower than its window twin q07. Update/merge touch only the arrays;
+  * (de)serialization happens only at the map/reduce boundary and writes k
+  * compact (unscaledBytes, id) entries.
   *
   * Scores are Decimal so ordering matches the exact-decimal revenue
   * aggregates (double collisions could permute near-equal ranks vs the

@@ -116,21 +116,6 @@ object Sinks {
       .write.mode("errorifexists").partitionBy(chunkCol).text(outDir)
   }
 
-  /** Training-shard sink: pack `(doc_id, source, text)` documents into
-    * token-budget shards (q63's contiguous-cumsum bin assignment — each
-    * source packs independently, in doc_id order), write ONE text file
-    * per shard (docs joined by "\n\n", the reference's record separator),
-    * and return the MANIFEST — the table a downstream trainer reads
-    * instead of listing directories: one row per shard with its file
-    * name, doc range and token count.
-    *
-    * Shard text is assembled with the bounded-group guarantee the token
-    * budget provides (a shard holds ≤ budget tokens plus the one doc that
-    * straddles the boundary — collect_list is safe by construction, no
-    * separate guard pass needed). The shard frame is checkpointed ONCE so
-    * the written files and the returned manifest come from the same
-    * materialization (at 100 TB, trade the cache for a recompute — the
-    * plan is deterministic either way). */
   /** q119's file sink: materialize a TRAINING-ORDER frame (doc_id,
     * shard_id, pos — `text.CorpusStats.trainingOrder`'s output joined
     * back to the doc text) as one file per shard, docs concatenated in
@@ -159,6 +144,21 @@ object Sinks {
       .orderBy(col("shard_id"))
   }
 
+  /** Training-shard sink: pack `(doc_id, source, text)` documents into
+    * token-budget shards (q63's contiguous-cumsum bin assignment — each
+    * source packs independently, in doc_id order), write ONE text file
+    * per shard (docs joined by "\n\n", the reference's record separator),
+    * and return the MANIFEST — the table a downstream trainer reads
+    * instead of listing directories: one row per shard with its file
+    * name, doc range and token count.
+    *
+    * Shard text is assembled with the bounded-group guarantee the token
+    * budget provides (a shard holds ≤ budget tokens plus the one doc that
+    * straddles the boundary — collect_list is safe by construction, no
+    * separate guard pass needed). The shard frame is checkpointed ONCE so
+    * the written files and the returned manifest come from the same
+    * materialization (at 100 TB, trade the cache for a recompute — the
+    * plan is deterministic either way). */
   def writePackedShards(docs: DataFrame, outDir: String,
                         tokensPerShard: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window

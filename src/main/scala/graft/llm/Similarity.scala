@@ -83,14 +83,9 @@ object Similarity {
     * `array_sort(array_distinct(transform(filter(split(...)), md5→hex→
     * substr→conv)))` chain, which paid four expression nodes per token
     * plus two intermediate arrays per row. Bit-identical (spec-asserted
-    * against [[hashedShinglesHof]] over the corpus). */
+    * against that HOF form over the corpus in SketchKernelsSpec). */
   def hashedShingles(c: Column): Column =
     graft.functions.SketchKernels.tokensHash60(c, P, distinctSorted = true)
-
-  /** The pre-kernel HOF formulation — the semantic definition the kernel
-    * must match; kept for the bit-identity regression spec. */
-  def hashedShinglesHof(c: Column): Column =
-    array_sort(array_distinct(transform(tokens(c), s => pmod(hash60(s), lit(P)))))
 
   /** MinHash signature: ARRAY<LONG> of NumPerms minima, computed by the
     * codegen'd kernel (graft.functions.SketchKernels.minhashSignature) —
@@ -2846,7 +2841,7 @@ object Similarity {
     * pass per row, each token's bytes md5-composed directly — replacing
     * the interpreted per-gram lambda∘concat∘md5→hex→conv chain that made
     * the trigram-postings landing the system's single largest cost
-    * (255 s at sf1, r12 `landings`). Bit-identical to [[gram3HashedHof]]
+    * (255 s at sf1). Bit-identical to the HOF form in SketchKernelsSpec
     * (spec-asserted), so every downstream oracle hash is unchanged; an
     * inline `tokens(...)` argument is now fine (the kernel evaluates its
     * child once per row — the nested-HOF re-evaluation trap was a
@@ -2859,17 +2854,6 @@ object Similarity {
     // NULL-propagating like every UnaryExpression
     coalesce(graft.functions.SketchKernels.wordGram3Hash60(t, P),
       array().cast("array<long>"))
-
-  /** The pre-kernel HOF formulation — the semantic definition the fused
-    * kernel must match; kept for the bit-identity regression spec
-    * (SketchKernelsSpec), the [[hashedShinglesHof]] pattern. */
-  def gram3HashedHof(t: Column): Column =
-    when(size(t) >= 3,
-      array_sort(array_distinct(transform(
-        sequence(lit(1), size(t) - 2),
-        i => pmod(hash60(concat_ws(" ",
-          element_at(t, i), element_at(t, i + 1), element_at(t, i + 2))), lit(P))))))
-      .otherwise(array().cast("array<long>"))
 
   /** q143: containment near-dup pairs — ordered pairs (A, B) where ≥ 90%
     * of A's trigram shingles appear in B. The ASYMMETRIC relation the

@@ -712,33 +712,16 @@ object CorpusStats {
   private[text] val QualityStop =
     Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
-  /** The pre-kernel HOF feature formulation — the semantic definition the
-    * fused kernel must match; kept for the bit-identity regression spec
-    * (TextKernelsSpec), the [[hashedShinglesHof]] discipline. */
-  private[text] def qualityFeaturesHof(docs: DataFrame): DataFrame = {
-    val toks = tokens(lower(col("text")))
-    docs.select(col("doc_id"), col("text"), toks.as("toks"))
-      .select(col("doc_id"),
-        size(col("toks")).cast("long").as("n_tokens"),
-        length(col("text")).cast("long").as("n_chars"),
-        length(regexp_replace(col("text"), "[a-zA-Z0-9\\s]", "")).cast("long").as("n_punct"),
-        length(regexp_replace(col("text"), "[^0-9]", "")).cast("long").as("n_digit"),
-        aggregate(transform(col("toks"), t => length(t).cast("long")),
-          lit(0L), (a, x) => a + x).as("tok_chars"),
-        size(filter(col("toks"), t => t.isin(QualityStop: _*))).cast("long").as("n_stop"))
-  }
-
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame = {
     // fanOut: heavy per-row feature kernel from a one-task scan
     // (sf1: q90 7.7 -> 4.4 s isolated min-of-3; q142 9.2 -> 4.9 s composing it)
     val docs = graft.Dist.fanOut(Tables.documents(spark, dir))
-    // ONE compiled pass for all six features (r13 optimization): the HOF
-    // form above paid two full-text regexp_replace passes (each BUILDING
-    // the replaced string just to take its length), a split+filter token
-    // materialization and two interpreted per-token folds per row —
-    // the q90 scan dominated q90/q142/q144/q235. Bit-identity vs
-    // [[qualityFeaturesHof]] is spec-locked over the corpus (TextKernelsSpec);
-    // oracle hashes unchanged (same integers in, same score chain out).
+    // ONE compiled pass for all six features: the HOF form pays two
+    // full-text regexp_replace passes (each BUILDING the replaced string
+    // just to take its length), a split+filter token materialization and
+    // two interpreted per-token folds per row, and the q90 scan feeds
+    // q90/q142/q144/q235. Kernel ≡ HOF form is spec-locked over the corpus
+    // (CorpusStatsSpec); the oracle sees the same integers either way.
     val base = docs.select(col("doc_id"),
         graft.functions.TextKernels.textQualityStats(col("text"), QualityStop).as("q"))
       .select(col("doc_id"), col("q.n_tokens").as("n_tokens"),
@@ -2685,7 +2668,7 @@ object CorpusStats {
     * whose `element_at` linear-scanned a 100-entry literal map per gram),
     * the argmin a row-local `array_min` over |langs| structs.
     * All-integer — no transcendental ever enters the plan (q90's
-    * discipline). Kernel ≡ HOF form ([[ctDistHof]]) is spec-locked; the
+    * discipline). Kernel ≡ HOF form (CorpusStatsSpec) is spec-locked; the
     * oracle hashes are the cross-engine gate. */
   def langIdScored(docs: DataFrame, langs: Seq[String],
                    profiles: Map[String, Map[String, Int]]): DataFrame = {
@@ -2701,21 +2684,6 @@ object CorpusStats {
       }: _*)))
       .select(col("doc_id"), col("lang"), col("source"),
         col("best.lang").as("pred_lang"), col("best.dist").as("dist"))
-  }
-
-  /** The pre-kernel HOF out-of-place distance for ONE language — the
-    * semantic definition [[graft.functions.TextKernels.ctDistances]]
-    * must match; kept for the bit-identity regression spec (the
-    * [[graft.llm.Similarity.gram3HashedHof]] pattern). */
-  def ctDistHof(prof: Column, m: Map[String, Int]): Column = {
-    val mapCol =
-      if (m.isEmpty) typedLit(Map.empty[String, Int])
-      else map(m.toSeq.sorted.flatMap { case (g, r) => Seq(lit(g), lit(r)) }: _*)
-    aggregate(
-      transform(prof, (g, j) =>
-        coalesce(abs(j + lit(1) - element_at(mapCol, g)), lit(LangProfK))
-          .cast("long")),
-      lit(0L), (a, x) => a + x)
   }
 
   /** q186: TRAINED LANGUAGE-ID AUDIT — the pipeline TRUSTS the corpus's
@@ -2852,7 +2820,7 @@ object CorpusStats {
       // first window's lag is NULL → sentinel no real lang equals → new
       // segment, so seg ids start at 1 (oracle: IS DISTINCT FROM lag)
       .withColumn("new_seg",
-        when(coalesce(lag(col("pred_lang"), 1).over(byDoc), lit(" "))
+        when(coalesce(lag(col("pred_lang"), 1).over(byDoc), lit("\u0000"))
           =!= col("pred_lang"), 1L).otherwise(0L))
       .withColumn("seg_id", sum(col("new_seg")).over(byDoc))
   }

@@ -37,6 +37,38 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     (p +: kids.flatMap(allPlanNodes)) ++ p.subqueries.flatMap(allPlanNodes)
   }
 
+  /** Runs `check` on both expression evaluation paths: first as the
+    * session stands, where the optimizer folds a projection over a
+    * `Seq.toDF` frame into a local relation evaluated on the driver
+    * without generated code; then with ConvertToLocalRelation excluded
+    * (the setting Spark's own test sessions use) and codegen fallback off,
+    * so the same projection runs as compiled whole-stage code or fails.
+    * `check` receives `true` on the generated-code run. The shared
+    * session's conf is restored afterwards. */
+  def onBothEvalPaths(check: Boolean => Unit): Unit = {
+    check(false)
+    val rule = "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+    val set = Seq("spark.sql.optimizer.excludedRules" -> rule,
+      "spark.sql.codegen.fallback" -> "false")
+    val prior = set.map { case (k, _) => k -> spark.conf.getOption(k) }
+    set.foreach { case (k, v) => spark.conf.set(k, v) }
+    try check(true)
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Asserts that each of `kernels` (expression prettyNames) is evaluated
+    * by a projection fused into a whole-stage codegen stage of `df`. */
+  def assertCodegenProject(df: org.apache.spark.sql.DataFrame, kernels: String*): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    kernels.foreach { k =>
+      assert(plan.linesIterator.exists(_.matches(raw"\s*\*\(\d+\) Project \[.*\b$k\(.*")),
+        s"$k not in a codegen Project:\n$plan")
+    }
+  }
+
   /** Shuffle exchanges in the executed plan of `df`. */
   def shuffleExchanges(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] =
     allPlanNodes(executedPlanOf(df)).filter(

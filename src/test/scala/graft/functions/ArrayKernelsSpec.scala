@@ -40,15 +40,20 @@ class ArrayKernelsSpec extends SparkSpec {
       (Seq.fill(n)((rnd.nextInt(255) - 127).toByte),
         Seq.fill(n)((rnd.nextInt(255) - 127).toByte))
     }
-    val df = cases.toDF("a", "b").select(
-      ArrayKernels.dotByte(col("a"), col("b")).as("k"),
-      ArrayKernels.dotLong(
-        transform(col("a"), _.cast("long")), transform(col("b"), _.cast("long"))).as("ref"))
-    df.collect().foreach(r => assert(r.getLong(0) == r.getLong(1)))
     val expected = cases.map { case (a, b) =>
       a.zip(b).map { case (x, y) => x.toLong * y }.sum }
-    val got = df.collect().map(_.getLong(0)).toSeq
-    assert(got == expected)
+    onBothEvalPaths { codegen =>
+      // a plain cast, not a transform lambda: a lambda is CodegenFallback
+      // and would keep the whole projection out of whole-stage codegen
+      val df = cases.toDF("a", "b").select(
+        ArrayKernels.dotByte(col("a"), col("b")).as("k"),
+        ArrayKernels.dotLong(
+          col("a").cast("array<bigint>"), col("b").cast("array<bigint>")).as("ref"))
+      if (codegen) assertCodegenProject(df, "dot_int8")
+      val rows = df.collect()
+      rows.foreach(r => assert(r.getLong(0) == r.getLong(1), s"codegen=$codegen"))
+      assert(rows.map(_.getLong(0)).toSeq == expected, s"codegen=$codegen")
+    }
   }
 
   test("null array input yields null") {

@@ -20,24 +20,26 @@ class KernelPropertySpec extends SparkSpec {
     import spark.implicits._
     val cases: Seq[Seq[Long]] = (Seq.empty[Long] +: Seq(0L) +: Seq(P - 1) +:
       Seq.fill(60)(Seq.fill(rnd.nextInt(50))(rnd.nextLong().abs % P))).map(_.toSeq)
-    val rows = cases.toDF("hs")
-      .select(
-        col("hs"),
-        SketchKernels.minhashSignature(col("hs"), permA, permB, P).as("sig"),
-        SketchKernels.simhash(col("hs"), SimhashBits).as("sh"))
-      .collect()
-    for (r <- rows) {
-      val hs = r.getSeq[Long](0)
-      val sig = r.getSeq[Long](1)
-      val modelSig = (0 until NumPerms).map { i =>
-        if (hs.isEmpty) P else hs.map(h => (permA(i) * h + permB(i)) % P).min
+    onBothEvalPaths { codegen =>
+      val df = cases.toDF("hs")
+        .select(
+          col("hs"),
+          SketchKernels.minhashSignature(col("hs"), permA, permB, P).as("sig"),
+          SketchKernels.simhash(col("hs"), SimhashBits).as("sh"))
+      if (codegen) assertCodegenProject(df, "minhash_signature", "simhash")
+      for (r <- df.collect()) {
+        val hs = r.getSeq[Long](0)
+        val sig = r.getSeq[Long](1)
+        val modelSig = (0 until NumPerms).map { i =>
+          if (hs.isEmpty) P else hs.map(h => (permA(i) * h + permB(i)) % P).min
+        }
+        assert(sig == modelSig, s"minhash mismatch for $hs (codegen=$codegen)")
+        val modelSh = (0 until SimhashBits).map { k =>
+          val s = hs.map(h => if (((h >> k) & 1L) != 0L) 1L else -1L).sum
+          if (s > 0) 1L << k else 0L
+        }.sum
+        assert(r.getLong(2) == modelSh, s"simhash mismatch for $hs (codegen=$codegen)")
       }
-      assert(sig == modelSig, s"minhash mismatch for $hs")
-      val modelSh = (0 until SimhashBits).map { k =>
-        val s = hs.map(h => if (((h >> k) & 1L) != 0L) 1L else -1L).sum
-        if (s > 0) 1L << k else 0L
-      }.sum
-      assert(r.getLong(2) == modelSh, s"simhash mismatch for $hs")
     }
   }
 
@@ -48,15 +50,17 @@ class KernelPropertySpec extends SparkSpec {
       val b = Seq.fill(rnd.nextInt(30))(rnd.nextInt(40).toLong).distinct.sorted
       (a, b)
     }
-    val rows = cases.toDF("a", "b")
-      .select(col("a"), col("b"),
-        ArrayKernels.sortedIntersectCount(col("a"), col("b")).as("n"),
-        ArrayKernels.dotLong(col("a"), col("b")).as("d"))
-      .collect()
-    for (r <- rows) {
-      val a = r.getSeq[Long](0); val b = r.getSeq[Long](1)
-      assert(r.getLong(2) == (a.toSet & b.toSet).size.toLong)
-      assert(r.getLong(3) == a.zip(b).map { case (x, y) => x * y }.sum)
+    onBothEvalPaths { codegen =>
+      val df = cases.toDF("a", "b")
+        .select(col("a"), col("b"),
+          ArrayKernels.sortedIntersectCount(col("a"), col("b")).as("n"),
+          ArrayKernels.dotLong(col("a"), col("b")).as("d"))
+      if (codegen) assertCodegenProject(df, "sorted_intersect_count", "dot_long")
+      for (r <- df.collect()) {
+        val a = r.getSeq[Long](0); val b = r.getSeq[Long](1)
+        assert(r.getLong(2) == (a.toSet & b.toSet).size.toLong, s"codegen=$codegen")
+        assert(r.getLong(3) == a.zip(b).map { case (x, y) => x * y }.sum, s"codegen=$codegen")
+      }
     }
   }
 

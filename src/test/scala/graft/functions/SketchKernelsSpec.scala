@@ -14,6 +14,21 @@ class SketchKernelsSpec extends SparkSpec {
 
   import Similarity.{NumPerms, P, SimhashBits, hash60, hashedShingles, permA, permB, tokens}
 
+  /** The pre-kernel HOF form of [[Similarity.hashedShingles]] — the
+    * semantic definition the fused tokensHash60 kernel must match. */
+  private def hashedShinglesHof(c: Column): Column =
+    array_sort(array_distinct(transform(tokens(c), s => pmod(hash60(s), lit(P)))))
+
+  /** The pre-kernel HOF form of [[Similarity.gram3Hashed]] — the semantic
+    * definition the fused wordGram3Hash60 kernel must match. */
+  private def gram3HashedHof(t: Column): Column =
+    when(size(t) >= 3,
+      array_sort(array_distinct(transform(
+        sequence(lit(1), size(t) - 2),
+        i => pmod(hash60(concat_ws(" ",
+          element_at(t, i), element_at(t, i + 1), element_at(t, i + 2))), lit(P))))))
+      .otherwise(array().cast("array<long>"))
+
   /** Round-1 interpreted MinHash fold (the shape the kernel replaced). */
   private def minhashFold(hs: Column): Column = {
     val perms = typedLit(permA.zip(permB).toSeq)
@@ -62,7 +77,7 @@ class SketchKernelsSpec extends SparkSpec {
         SketchKernels.tokensHash60(col("text"), P, distinctSorted = false).as("k_mod"),
         hofMod.as("h_mod"),
         Similarity.hashedShingles(col("text")).as("k_ds"),
-        Similarity.hashedShinglesHof(col("text")).as("h_ds"))
+        hashedShinglesHof(col("text")).as("h_ds"))
       .filter(col("k_raw") =!= col("h_raw") ||
         col("k_mod") =!= col("h_mod") || col("k_ds") =!= col("h_ds"))
     assert(diff.count() == 0)
@@ -73,7 +88,7 @@ class SketchKernelsSpec extends SparkSpec {
       .select(col("doc_id"), tokens(col("text")).as("t"))
       .select(
         Similarity.gram3Hashed(col("t")).as("kernel"),
-        Similarity.gram3HashedHof(col("t")).as("hof"))
+        gram3HashedHof(col("t")).as("hof"))
       .filter(col("kernel") =!= col("hof"))
     assert(diff.count() == 0)
   }
@@ -94,7 +109,7 @@ class SketchKernelsSpec extends SparkSpec {
     val rows = cases.toDF("t")
       .select(
         Similarity.gram3Hashed(col("t")).as("kernel"),
-        Similarity.gram3HashedHof(col("t")).as("hof"))
+        gram3HashedHof(col("t")).as("hof"))
       .collect()
     rows.zip(cases).foreach { case (r, c) =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"mismatch on $c")

@@ -370,7 +370,7 @@ class MultimodalSpec extends SparkSpec {
       chunk("strf", Array.fill[Byte](40)(0)))
     // an optional leading audio stream shifts the video stream to index
     // 01 — exercises the NN-prefix selection in the movi walk
-    val audStrl = list("strl", chunk("strh", strh("auds", "    ")),
+    val audStrl = list("strl", chunk("strh", strh("auds", "\u0000\u0000\u0000\u0000")),
       chunk("strf", Array.fill[Byte](16)(0)))
     val hdrl =
       if (audioFirst) list("hdrl", chunk("avih", avih), audStrl, vidStrl)

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -11,6 +12,35 @@ class CorpusStatsSpec extends SparkSpec {
 
   private def scalaTokens(s: String): Seq[String] =
     s.split("\\s+").filter(_.nonEmpty).toSeq
+
+  /** The pre-kernel HOF feature formulation — the semantic definition the
+    * fused TextKernels.textQualityStats kernel must match. */
+  private def qualityFeaturesHof(docs: DataFrame): DataFrame = {
+    val toks = TextOps.tokens(lower(col("text")))
+    docs.select(col("doc_id"), col("text"), toks.as("toks"))
+      .select(col("doc_id"),
+        size(col("toks")).cast("long").as("n_tokens"),
+        length(col("text")).cast("long").as("n_chars"),
+        length(regexp_replace(col("text"), "[a-zA-Z0-9\\s]", "")).cast("long").as("n_punct"),
+        length(regexp_replace(col("text"), "[^0-9]", "")).cast("long").as("n_digit"),
+        aggregate(transform(col("toks"), t => length(t).cast("long")),
+          lit(0L), (a, x) => a + x).as("tok_chars"),
+        size(filter(col("toks"), t => t.isin(CorpusStats.QualityStop: _*)))
+          .cast("long").as("n_stop"))
+  }
+
+  /** The pre-kernel HOF out-of-place distance for ONE language — the
+    * semantic definition TextKernels.ctDistances must match. */
+  private def ctDistHof(prof: Column, m: Map[String, Int]): Column = {
+    val mapCol =
+      if (m.isEmpty) typedLit(Map.empty[String, Int])
+      else map(m.toSeq.sorted.flatMap { case (g, r) => Seq(lit(g), lit(r)) }: _*)
+    aggregate(
+      transform(prof, (g, j) =>
+        coalesce(abs(j + lit(1) - element_at(mapCol, g)), lit(CorpusStats.LangProfK))
+          .cast("long")),
+      lit(0L), (a, x) => a + x)
+  }
 
   test("q137 BM25 equals an independent Scala model (exact integer scores, top-10 cut)") {
     // plain-Scala BM25 with the same exact-rational formula, computed with
@@ -1085,7 +1115,7 @@ class CorpusStatsSpec extends SparkSpec {
       .withColumn("kernel",
         graft.functions.TextKernels.ctDistances(col("prof"), maps, 100))
       .withColumn("hof", array(maps.map(m =>
-        CorpusStats.ctDistHof(col("prof"), m)): _*))
+        ctDistHof(col("prof"), m)): _*))
       .filter(col("kernel") =!= col("hof"))
     assert(diff.count() == 0)
     // edges: empty profile (all-zero distances), absent grams (default
@@ -1097,8 +1127,8 @@ class CorpusStatsSpec extends SparkSpec {
       .select(
         graft.functions.TextKernels.ctDistances(col("prof"), Seq(m, Map.empty), 100)
           .as("kernel"),
-        array(CorpusStats.ctDistHof(col("prof"), m),
-          CorpusStats.ctDistHof(col("prof"), Map.empty)).as("hof"))
+        array(ctDistHof(col("prof"), m),
+          ctDistHof(col("prof"), Map.empty)).as("hof"))
       .collect()
     got.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1),
       s"edge mismatch: ${r.getSeq[Long](0)} vs ${r.getSeq[Long](1)}"))
@@ -1453,7 +1483,7 @@ class CorpusStatsSpec extends SparkSpec {
         col("q.n_digit").as("n_digit"), col("q.tok_chars").as("tok_chars"),
         col("q.n_stop").as("n_stop"))
     val corpus = graft.Tables.documents(spark, sfDir).select("doc_id", "text")
-    val a = CorpusStats.qualityFeaturesHof(corpus)
+    val a = qualityFeaturesHof(corpus)
     val b = kernelOf(corpus)
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
       "kernel != HOF over the corpus")
@@ -1465,7 +1495,7 @@ class CorpusStatsSpec extends SparkSpec {
       (4L, "a1b2 33 ...!!"), (5L, "\u212A \u212Aelvin"), (6L, "\ud83d\ude00 x"),
       (7L, "the"), (8L, "  leading and trailing  "),
       (9L, "\u65e5\u672c\u8a9e 12 it")).toDF("doc_id", "text")
-    val ae = CorpusStats.qualityFeaturesHof(edges).orderBy("doc_id").collect()
+    val ae = qualityFeaturesHof(edges).orderBy("doc_id").collect()
     val be = kernelOf(edges).orderBy("doc_id").collect()
     ae.zip(be).foreach { case (x, y) => assert(x == y, s"edge divergence: $x vs $y") }
   }
