@@ -1,10 +1,20 @@
 package graft
 
-/** Session-landed frame memo — THE retention contract for every
-  * checkpointed front-end frame the engine lands once per (session, dir,
-  * durability regime): shingle groups and verified pairs
-  * (llm.Similarity), k-means state, cluster labels, co-purchase counts
-  * (relational.Relational), trained BPE merges (text.CorpusStats).
+import org.apache.spark.sql.SparkSession
+
+/** Session-landed frame memo — THE retention contract for every frame or
+  * value the engine lands once from a data dir (shingle groups, pairs,
+  * k-means state, labels, co-purchase counts, BPE merges, CT profiles,
+  * the WARC slice index) and for `io.Layout.landOnce`'s folders.
+  *
+  * Key: every landing is keyed on `io.Layout.landingKey` of its dir — the
+  * canonical path, the (path, length, mtime) state of its files and the
+  * checkpoint dir — so a table rewritten at the same path, or a
+  * checkpoint dir set after a local-checkpoint landing, lands again
+  * instead of serving the older build. Memos enter through [[getOrLand]],
+  * which adds the session and a `part` for any build parameter beyond the
+  * dir; `landOnce` adds the application id and the folder name instead,
+  * because its folder outlives a session.
   *
   * Contract:
   *  - entries are CACHES of deterministic builds — dropping one costs a
@@ -33,6 +43,12 @@ final class SessionMemo[K, V](name: String = "") {
   private val m = new java.util.concurrent.ConcurrentHashMap[K, V]()
   SessionMemos.register(this)
 
+  /** The dir-keyed door (see the class doc): one entry per (session,
+    * `io.Layout.landingKey(spark, dir)`, `part`). */
+  def getOrLand(spark: SparkSession, dir: String, part: Any = ())(build: => V)(
+      implicit asKey: SessionMemos.DirKey <:< K): V =
+    getOrCompute(asKey((spark, io.Layout.landingKey(spark, dir), part)))(_ => build)
+
   def getOrCompute(k: K)(build: K => V): V = {
     if (m.size >= SessionMemos.MaxEntries && !m.containsKey(k)) m.clear()
     m.computeIfAbsent(k, key => {
@@ -58,8 +74,11 @@ final class SessionMemo[K, V](name: String = "") {
 
 object SessionMemos {
   /** Max keys per memo before a wholesale clear — far above any
-    * single-host working set (one key per (session, dir, regime)). */
+    * single-host working set (one key per landed dir state). */
   val MaxEntries = 64
+
+  /** The key of the [[SessionMemo.getOrLand]] door. */
+  type DirKey = (SparkSession, io.Layout.LandingKey, Any)
 
   private val all =
     new java.util.concurrent.CopyOnWriteArrayList[SessionMemo[_, _]]()

@@ -63,10 +63,10 @@ object Tables {
 
   /** Inferred parquet schema per (session, path, file state). Inference
     * runs a Spark job that reads the footers, so a read with a known
-    * schema skips it. The file state is the sorted (name, length, mtime)
-    * listing of the path, and the key also holds the reader settings
-    * that change an inferred type, so a file rewritten at the same path
-    * (the harness regenerating a table) is inferred again. */
+    * schema skips it. The file state is `io.Layout.fileState` of the
+    * path, and the key also holds the reader settings that change an
+    * inferred type, so a file rewritten at the same path (the harness
+    * regenerating a table) is inferred again. */
   private val schemas = new SessionMemo[(SparkSession, String, String),
     org.apache.spark.sql.types.StructType]()
   private val inferenceSettings = Seq("spark.sql.legacy.parquet.nanosAsLong",
@@ -75,14 +75,9 @@ object Tables {
 
   /** The path's file state and reader settings, or None when the path
     * is missing (the reader then raises its own error). */
-  private def readState(spark: SparkSession, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try Some((fs.listStatus(p).map(s =>
-      s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}").sorted ++
+  private def readState(spark: SparkSession, path: String): Option[String] =
+    io.Layout.fileState(spark, path).map(files => (files ++
       inferenceSettings.map(k => s"$k=${spark.conf.getOption(k).orNull}")).mkString("|"))
-    catch { case _: java.io.FileNotFoundException => None }
-  }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"

@@ -105,7 +105,7 @@ object Perceptual {
     baos.toByteArray
   }
 
-  /** The 24-image fixture folder, landed once per (application, dir). */
+  /** The 24-image fixture folder, landed once. */
   def dhashFolder(spark: SparkSession, dir: String): String =
     graft.io.Layout.landFiles(spark, "dhash_fixtures", dir)(
       (0 until NumImages).map(i => f"img$i%02d.png" -> imageBytes(i)))
@@ -426,7 +426,7 @@ object Perceptual {
     * 28/29 byte twins of bases 6/7 (expected exact dup). */
   val ProbeIds: Range = 24 until 30
 
-  /** The probe batch folder, landed once per (application, dir). */
+  /** The probe batch folder, landed once. */
   def probeFolder(spark: SparkSession, dir: String): String =
     graft.io.Layout.landFiles(spark, "dhash_probe", dir)(
       ProbeIds.map(i => f"img$i%02d.png" -> imageBytes(i)))

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.StructType
   * multiLine=false — the spec documents that trade: lossless CSV with
   * embedded newlines costs per-file parallelism, which is why JSONL is
   * the recommended corpus format). q232's round trip lands its five
-  * layouts once per application as one warehouse folder, through
+  * layouts once as one warehouse folder, through
   * [[Layout.landOnce]]. */
 object Formats {
 

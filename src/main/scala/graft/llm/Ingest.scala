@@ -79,8 +79,6 @@ object Ingest {
 
   import Similarity.{hashedShingles, bandKeysFor, gram3Hashed, tokens, hash60, P}
 
-  private def landedSuffix(dir: String): String = graft.io.Layout.dirSuffix(dir)
-
   /** Fixture URL scheme: corpus docs carry their own per-doc URL; the
     * planted BATCH re-discovery class ((doc_id div 10) % 3 == 1) carries
     * the URL of corpus doc doc_id−4 instead — (doc_id−4) % 10 == 3, so
@@ -97,7 +95,7 @@ object Ingest {
   }
 
   def incrementalIngest(spark: SparkSession, dir: String): DataFrame = {
-    val suffix = landedSuffix(dir)
+    val suffix = graft.io.Layout.dirSuffix(dir)
     val sigsT = s"graft_corpus_sigs_$suffix"   // shared with q87
     val bandsT = s"graft_corpus_bands_$suffix" // shared with q87
     val postT = s"graft_corpus_post_$suffix"

@@ -242,16 +242,14 @@ object Similarity {
     * exactly one of those cases, so no final distinct is needed — the
     * 958k-row doc-pair set never passes through a dedup exchange. */
   private val groupsMemo =
-    new graft.SessionMemo[(SparkSession, String, Option[String]), DataFrame]("shingle_groups")
+    new graft.SessionMemo[graft.SessionMemos.DirKey, DataFrame]("shingle_groups")
 
-  /** [[shingleGroups]] landed ONCE per (session, dir, durability regime)
-    * — the d7258c8 front-end idiom (kmeans assignment, co-purchase
-    * counts): four query families (q41/q50 verified pairs, q85's
-    * near-dup membership, q147's tuning curve, plus every
-    * lshVerifiedPairs consumer) read the identical rep-space frame, and
+  /** [[shingleGroups]] landed ONCE — the front-end idiom of the k-means
+    * assignment and co-purchase counts: four query families (q41/q50
+    * verified pairs, q85's near-dup membership, q147's tuning curve, plus
+    * every lshVerifiedPairs consumer) read the identical rep-space frame, and
     * without the memo each registered query re-ran the corpus tokenize +
-    * shingle hash-aggregate from scratch. Same process-lifetime
-    * retention note as the co-purchase memo; at 100 TB this is a landed
+    * shingle hash-aggregate from scratch. At 100 TB this is a landed
     * bucketed catalog table with a content fingerprint, not a session
     * memo. Lineage is cut by the checkpoint (stats-less LogicalRDD), and
     * the frame grows with distinct corpus content — so consumers attach
@@ -261,18 +259,16 @@ object Similarity {
     * unconditional hint (the r10 judge finding; PlanHygieneSpec's
     * broadcast-bound rule reads the measurement registry). */
   private[llm] def landedShingleGroups(spark: SparkSession, dir: String): DataFrame =
-    groupsMemo.getOrCompute(memoKey(spark, dir))(
-      _ => shingleGroups(spark, dir).transform(Dist.durableCkpt))
+    groupsMemo.getOrLand(spark, dir)(shingleGroups(spark, dir).transform(Dist.durableCkpt))
 
   private val pairsMemo =
-    new graft.SessionMemo[(SparkSession, String, Option[String]), DataFrame]("verified_pairs")
+    new graft.SessionMemo[graft.SessionMemos.DirKey, DataFrame]("verified_pairs")
   private val scoredMemo =
-    new graft.SessionMemo[(SparkSession, String, Option[String]), DataFrame]("scored_pairs")
+    new graft.SessionMemo[graft.SessionMemos.DirKey, DataFrame]("scored_pairs")
 
   /** EVERY banded rep-pair candidate scored exactly — (gid_a, gid_b,
-    * sz_a, sz_b, n_shared), landed ONCE per (session, dir, durability
-    * regime). This is the ONE scoring pass the whole near-dup family
-    * shares (r11 judge task 3: q197 re-ran a private full-range scoring
+    * sz_a, sz_b, n_shared), landed ONCE. This is the ONE scoring pass
+    * the whole near-dup family shares (r11 judge task 3: q197 re-ran a private full-range scoring
     * pass per query while [[landedRepPairs]] ran the verified-only twin
     * of the same band self-join + kernel — two passes over identical
     * candidates): q197 needs the FULL bp range (its negatives are the
@@ -287,7 +283,7 @@ object Similarity {
     * runs. Payload attaches are runtime-size-decided
     * ([[graft.Dist.sizedBroadcast]]). */
   private[llm] def landedScoredPairs(spark: SparkSession, dir: String): DataFrame =
-    scoredMemo.getOrCompute(memoKey(spark, dir)) { _ =>
+    scoredMemo.getOrLand(spark, dir) {
       val sets = landedShingleGroups(spark, dir).filter(size(col("hs")) > 0)
         .select(col("gid"), col("hs"))
       val sized = Dist.sizedBroadcast(sets)
@@ -306,21 +302,19 @@ object Similarity {
     }
 
   /** The VERIFIED rep-space pair frame — the jaccard ≥ 0.9 slice of
-    * [[landedScoredPairs]], landed ONCE per (session, dir, durability
-    * regime). Before this memo every consumer (q41/q50/q55's edges,
-    * q85's membership, q197's positives-adjacent paths, q199's flow
+    * [[landedScoredPairs]], landed ONCE. Before this memo every consumer
+    * (q41/q50/q55's edges, q85's membership, q197's positives-adjacent paths, q199's flow
     * census) re-paid the band self-join + exact verify per query; since
     * r12 the scoring pass itself is shared with q197's full-range
     * consumer, so the suite runs it once. jaccard derives from the
     * landed integers exactly as the r11 verify computed it (same
     * int-division-to-double chain → bit-identical doubles, hashes
     * unchanged). The landed frame is slim — one row per verified rep
-    * pair, ∝ true duplicate density at scale. Same process-lifetime
-    * retention contract as [[groupsMemo]]; at 100 TB both land beside
+    * pair, ∝ true duplicate density at scale. At 100 TB both land beside
     * the groups table in the bucketed catalog. */
   private[llm] def landedRepPairs(spark: SparkSession, dir: String): DataFrame =
-    pairsMemo.getOrCompute(memoKey(spark, dir))(
-      _ => landedScoredPairs(spark, dir)
+    pairsMemo.getOrLand(spark, dir)(
+      landedScoredPairs(spark, dir)
         .withColumn("jaccard",
           col("n_shared") / (col("sz_a") + col("sz_b") - col("n_shared")))
         .filter(col("jaccard") >= 0.9)
@@ -981,23 +975,12 @@ object Similarity {
     * this is exactly MLlib's k-means dataflow, minus sampling-based init
     * (deterministic first-k init keeps the oracle exact).
     *
-    * The (assignment, centroids) pair is landed once per (session, dir)
-    * — q75 reports the trajectory summary, q118 consumes the assignment
-    * as its semantic-dedup partitioner — with the same serialized-memo
+    * The (assignment, centroids) pair is landed once — q75 reports the
+    * trajectory summary, q118 consumes the assignment as its
+    * semantic-dedup partitioner — with the same serialized-memo
     * shape as [[clusterGroupLabels]]. */
-  /** Session-memo key for landed frames. The checkpoint-dir state is part
-    * of the key: a frame landed WITHOUT a checkpoint dir holds
-    * `localCheckpoint` blocks (executor-memory only), and serving it
-    * after a dir is configured would silently downgrade the promised
-    * FS-durable path (the cluster analog: state landed under one
-    * durability regime serving another). Keying on
-    * `getCheckpointDir` makes the memo rebuild — under the new regime —
-    * the first time the configuration changes. */
-  private def memoKey(spark: SparkSession, dir: String): (SparkSession, String, Option[String]) =
-    (spark, dir, spark.sparkContext.getCheckpointDir)
-
   private val kmeansMemo =
-    new graft.SessionMemo[(SparkSession, String, Option[String]), (DataFrame, DataFrame)]("kmeans_state")
+    new graft.SessionMemo[graft.SessionMemos.DirKey, (DataFrame, DataFrame)]("kmeans_state")
 
   /** Final Lloyd-iteration state: (`a2` = (vec_id, cid) assignment,
     * `c2` = (cid, qc) centroids), both reading checkpointed frames.
@@ -1005,11 +988,11 @@ object Similarity {
     * scales k WITH the corpus (keeping per-cluster sizes bounded, so the
     * within-cluster quadratic step stays linear overall) — ScalingSpec
     * and ScalingBench measure exactly that via this parameter. The memo
-    * key carries k, so the landed q75/q118 frames (k = 8) are never
-    * mixed with a scaled-k measurement run. */
+    * key's part carries k, so the landed q75/q118 frames (k = 8) are
+    * never mixed with a scaled-k measurement run. */
   private[llm] def kmeansAssignment(spark: SparkSession, dir: String,
       k: Int = 8): (DataFrame, DataFrame) =
-    kmeansMemo.getOrCompute(memoKey(spark, s"$dir#k=$k"))({ _ =>
+    kmeansMemo.getOrLand(spark, dir, k) {
       val e = Tables.embeddings(spark, dir)
         .select(col("vec_id"), quantize(col("embedding")).as("q"))
         .transform(Dist.durableCkpt) // reused by every assign/update pass
@@ -1050,7 +1033,7 @@ object Similarity {
       val a2 = assign(c1).transform(Dist.durableCkpt) // read by q75 AND q118
       val c2 = update(a2)
       (a2, c2)
-    })
+    }
 
   def kmeans(spark: SparkSession, dir: String): DataFrame = {
     val (a2, c2) = kmeansAssignment(spark, dir)
@@ -1282,8 +1265,8 @@ object Similarity {
     * groups without ever expanding members) and q67 (expands members to
     * pick a per-cluster representative doc).
     *
-    * Landed ONCE per (session, dir), exactly like q87 lands its bucketed
-    * corpus tables: four registered queries (q55/q67/q93/q116) sit on
+    * Landed ONCE, exactly like q87 lands its bucketed corpus tables:
+    * four registered queries (q55/q67/q93/q116) sit on
     * this front-end, and before the memo each re-ran the whole
     * LSH + label-propagation pipeline — so each query's measured time
     * was mostly the shared front-end's, and the family absorbed most of
@@ -1293,26 +1276,24 @@ object Similarity {
     * eager actions, so publishing a half-built frame would be a real
     * hazard otherwise). The converged label frame gets one extra lazy
     * checkpoint so later queries read materialized blocks instead of
-    * re-executing the union/join assembly. Inputs are immutable session
-    * test data; at 100 TB the equivalent step is landing the verified
-    * pair graph / component labels as a table ([[graft.io.Layout
+    * re-executing the union/join assembly. At 100 TB the equivalent
+    * step is landing the verified pair graph / component labels as a table ([[graft.io.Layout
     * .ensureBucketed]] with its content fingerprint) rather than a
     * session memo. */
   private val cglMemo =
-    new graft.SessionMemo[(SparkSession, String, Option[String]), (DataFrame, DataFrame)]("cluster_labels")
+    new graft.SessionMemo[graft.SessionMemos.DirKey, (DataFrame, DataFrame)]("cluster_labels")
 
   private[llm] def clusterGroupLabels(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    cglMemo.getOrCompute(memoKey(spark, dir))({ _ =>
+    cglMemo.getOrLand(spark, dir) {
       val (grps, labels) = buildClusterGroupLabels(spark, dir)
       (grps, labels.transform(Dist.durableCkpt))
-    })
+    }
 
   private val docLabelsMemo =
-    new graft.SessionMemo[(SparkSession, String, Option[String]), DataFrame]("doc_labels")
+    new graft.SessionMemo[graft.SessionMemos.DirKey, DataFrame]("doc_labels")
 
-  /** The EXPANDED doc→label frame (lbl, doc_id), landed once per
-    * (session, dir, durability regime) and served RUNTIME-SIZE-DECIDED
-    * ([[graft.Dist.sizedBroadcast]]): four registered consumers
+  /** The EXPANDED doc→label frame (lbl, doc_id), landed once and served
+    * RUNTIME-SIZE-DECIDED ([[graft.Dist.sizedBroadcast]]): four registered consumers
     * (q67 reps, q93 split keys, q116 top terms, q136 licenses) each
     * re-derived the same groupLabels⋈grps explode per query, then
     * shuffle-joined it onto their corpus scan because the frame grows
@@ -1322,7 +1303,7 @@ object Similarity {
     * it the same code keeps the doc_id shuffle join. At 100 TB this
     * lands beside the label table in the bucketed catalog. */
   private[llm] def landedDocLabels(spark: SparkSession, dir: String): DataFrame =
-    docLabelsMemo.getOrCompute(memoKey(spark, dir)) { _ =>
+    docLabelsMemo.getOrLand(spark, dir) {
       val (grps, groupLabels) = clusterGroupLabels(spark, dir)
       Dist.sizedBroadcast(groupLabels
         .join(grps.select(col("gid").as("node"), col("members")), Seq("node"))
@@ -2525,7 +2506,7 @@ object Similarity {
     * transition census — the off-diagonal mass is exactly the
     * contamination a license-filtered training run must re-drop.
     *
-    * Shape: the memoized cluster labels (built once per session, shared
+    * Shape: the memoized cluster labels (built once, shared
     * with q55/q67/q93/q116) attach by doc_id shuffle join (the doc→label
     * frame grows with the corpus, so it may not broadcast); cluster
     * license is one

@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   * regression (wrong duration math, broken frame walk, lost quarantine)
   * now breaks the correctness gate, not just a spec.
   *
-  * The folder is landed once per (application, dir) by
-  * `io.Layout.landFiles`, and the fixtures are deliberately tiny: the
+  * The folder is landed once by `io.Layout.landFiles`, and the fixtures are deliberately tiny: the
   * query measures parser correctness, not I/O.
   */
 object Fixtures {
@@ -351,9 +350,8 @@ object Fixtures {
     // no parser recognizes it → quarantine row (all-null metadata)
     "junk_g.bin" -> "definitely not a media container, kept for quarantine".getBytes)
 
-  /** The fixture folder, landed once per (application, dir); returns its
-    * path. Files are KBs and written driver-side — this is test-corpus
-    * landing, not a data path. */
+  /** The fixture folder, landed once; returns its path. Files are KBs and
+    * written driver-side — this is test-corpus landing, not a data path. */
   def mediaFolder(spark: SparkSession, dir: String): String =
     graft.io.Layout.landFiles(spark, "media_fixtures", dir)(fixtureFiles())
 

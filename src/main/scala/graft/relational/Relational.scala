@@ -1055,10 +1055,8 @@ object Relational {
     * builder: one lineitem scan, no SortMergeJoin).
     *
     * Four registered queries consume this identical frame, so
-    * [[copurchaseCounts]] lands it ONCE per (session, dir,
-    * checkpoint-regime) — the d7258c8 idiom the LSH/k-means front-ends
-    * use, with the same durability-aware memo key (round-6 gotcha). At
-    * 100 TB the equivalent is landing the pair graph as a bucketed
+    * [[copurchaseCounts]] lands it ONCE, like the LSH/k-means front-ends.
+    * At 100 TB the equivalent is landing the pair graph as a bucketed
     * catalog table with a content fingerprint, not a session memo. */
   private[relational] def buildCopurchaseCounts(spark: SparkSession, dir: String): DataFrame =
     Tables.lineitem(spark, dir)
@@ -1073,17 +1071,12 @@ object Relational {
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(count(lit(1)).as("n"))
 
-  // Retention is the graft.SessionMemo contract: bounded at MaxEntries
-  // keys (wholesale clear at the cap — entries are caches of
-  // deterministic builds), and long-lived multi-session hosts call
-  // SessionMemos.clearAll() on session stop.
   private val copurchaseMemo =
-    new graft.SessionMemo[(SparkSession, String, Option[String]), DataFrame]("copurchase")
+    new graft.SessionMemo[graft.SessionMemos.DirKey, DataFrame]("copurchase")
 
   private def copurchaseCounts(spark: SparkSession, dir: String): DataFrame =
-    copurchaseMemo.getOrCompute(
-      (spark, dir, spark.sparkContext.getCheckpointDir))(
-      { _ => buildCopurchaseCounts(spark, dir).transform(graft.Dist.durableCkpt) })
+    copurchaseMemo.getOrLand(spark, dir)(
+      buildCopurchaseCounts(spark, dir).transform(graft.Dist.durableCkpt))
 
   def copurchasePairs(spark: SparkSession, dir: String): DataFrame =
     copurchaseCounts(spark, dir)

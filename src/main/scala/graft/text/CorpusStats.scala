@@ -1986,43 +1986,39 @@ object CorpusStats {
       s"THEN concat(acc, '$r') ELSE concat(acc, ' ', x) END)")
 
   // training is consumed by BOTH q185 (the merge list) and q187 (the
-  // apply/fertility report): land the K bounded-collect rounds once per
-  // session (the copurchaseMemo discipline; process-lifetime retention is
-  // intended for the one-session Verify/Bench/test hosts)
-  private val bpeMemo = new graft.SessionMemo[
-    (SparkSession, String, Option[String]), Seq[(String, String, Long)]]("bpe_merges")
+  // apply/fertility report): land the K bounded-collect rounds once
+  private val bpeMemo =
+    new graft.SessionMemo[graft.SessionMemos.DirKey, Seq[(String, String, Long)]]("bpe_merges")
 
   /** Run the K training rounds; returns the ordered merge list (l, r, n). */
   def bpeTrainMerges(spark: SparkSession, dir: String): Seq[(String, String, Long)] =
-    bpeMemo.getOrCompute(
-      (spark, dir, spark.sparkContext.getCheckpointDir))(
-      { _ =>
-        var segs = Tables.documents(spark, dir)
-          .select(explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
-            .as("w"))
-          .filter(length(col("w")) > 1)
-          .groupBy(col("w")).agg(count(lit(1)).as("wn"))
-          .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("seg"), col("wn"))
+    bpeMemo.getOrLand(spark, dir) {
+      var segs = Tables.documents(spark, dir)
+        .select(explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
+          .as("w"))
+        .filter(length(col("w")) > 1)
+        .groupBy(col("w")).agg(count(lit(1)).as("wn"))
+        .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("seg"), col("wn"))
+        .transform(graft.Dist.durableCkpt)
+      val merges = Seq.newBuilder[(String, String, Long)]
+      for (_ <- 1 to BpeRounds) {
+        val top = segs
+          .select(col("wn"), split(col("seg"), " ").as("ss"))
+          .select(col("wn"), explode(expr(
+            "transform(sequence(1, size(ss) - 1), i -> " +
+              "struct(element_at(ss, i) AS l, element_at(ss, i + 1) AS r))")).as("p"))
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(sum(col("wn")).as("n"))
+          .orderBy(col("n").desc, col("l"), col("r"))
+          .limit(1).collect()(0) // bounded 1-row action per round
+        val (l, r, n) = (top.getString(0), top.getString(1), top.getLong(2))
+        merges += ((l, r, n))
+        segs = segs
+          .select(bpeMergeExpr("seg", l, r).as("seg"), col("wn"))
           .transform(graft.Dist.durableCkpt)
-        val merges = Seq.newBuilder[(String, String, Long)]
-        for (_ <- 1 to BpeRounds) {
-          val top = segs
-            .select(col("wn"), split(col("seg"), " ").as("ss"))
-            .select(col("wn"), explode(expr(
-              "transform(sequence(1, size(ss) - 1), i -> " +
-                "struct(element_at(ss, i) AS l, element_at(ss, i + 1) AS r))")).as("p"))
-            .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-            .agg(sum(col("wn")).as("n"))
-            .orderBy(col("n").desc, col("l"), col("r"))
-            .limit(1).collect()(0) // bounded 1-row action per round
-          val (l, r, n) = (top.getString(0), top.getString(1), top.getLong(2))
-          merges += ((l, r, n))
-          segs = segs
-            .select(bpeMergeExpr("seg", l, r).as("seg"), col("wn"))
-            .transform(graft.Dist.durableCkpt)
-        }
-        merges.result()
-      })
+      }
+      merges.result()
+    }
 
   def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -2084,7 +2080,7 @@ object CorpusStats {
     * all K merge folds chain in ONE row-local projection per distinct
     * word, then piece counts join back to the (lang, word) occurrence
     * table — two vocab-sized frames, never the token stream. Training
-    * itself lands once per session ([[bpeTrainMerges]]'s memo), so q185
+    * itself lands once ([[bpeTrainMerges]]'s memo), so q185
     * and q187 share the K bounded collects.
     *
     * All-integer ratios (basis points, `div`): fertility_bp = pieces per
@@ -2706,18 +2702,16 @@ object CorpusStats {
   /** Session memo of the TRAINED category profiles per corpus dir: q186,
     * q237 and q238 all train the identical Cavnar-Trenkle profiles from
     * the identical corpus — at 100 TB that is three full corpus passes
-    * for one ≤ |langs|·[[LangProfK]]-entry artifact. Train once per
-    * (session, corpus); the `*On` spec cores keep training directly
-    * (their fixtures are arbitrary frames, not dir-identified corpora).
-    * Values are plain driver-side collections — no plan/RDD retention —
-    * and the memo is capped + `clearAll`-released like every session
-    * registry. */
-  private val profMemo = new graft.SessionMemo[(SparkSession, String),
+    * for one ≤ |langs|·[[LangProfK]]-entry artifact. Train once; the
+    * `*On` spec cores keep training directly (their fixtures are
+    * arbitrary frames, not dir-identified corpora). Values are plain
+    * driver-side collections — no plan/RDD retention. */
+  private val profMemo = new graft.SessionMemo[graft.SessionMemos.DirKey,
     (Seq[String], Map[String, Map[String, Int]])]("ct_profiles")
 
   private def trainedProfiles(spark: SparkSession, dir: String)
       : (Seq[String], Map[String, Map[String, Int]]) =
-    profMemo.getOrCompute((spark, new java.io.File(dir).getCanonicalPath)) { _ =>
+    profMemo.getOrLand(spark, dir) {
       val docs = Tables.documents(spark, dir)
       val langs = docs.select(col("lang")).distinct()
         .collect().map(_.getString(0)).sorted.toSeq // bounded: |langs|

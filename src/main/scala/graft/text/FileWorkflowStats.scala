@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   * (naming, separators, trailing newlines, the split's empty-trailing-file
   * quirk), not just a row count.
   *
-  * The fixture + workflow runs land once per (application, dir) through
-  * `io.Layout.landOnce`: the queries measure reading the produced files,
-  * and re-running a file workflow over a non-empty output dir is an error
-  * by contract (reference K6).
+  * The fixture + workflow runs land once through `io.Layout.landOnce`:
+  * the queries measure reading the produced files, and re-running a file
+  * workflow over a non-empty output dir is an error by contract
+  * (reference K6).
   *
   * Frame-combining note: the one-row stats frames attach via
   * `crossJoin(broadcast(...))` — the whitelisted scalar-subquery shape

@@ -35,7 +35,7 @@ object PdfExtract {
     try in.readAllBytes() finally in.close()
   }
 
-  /** The PDF fixture folder, landed once per (application, dir). */
+  /** The PDF fixture folder, landed once. */
   def pdfFolder(spark: SparkSession, dir: String): String =
     graft.io.Layout.landFiles(spark, "pdf_fixtures", dir)(
       FixtureNames.map(name => name -> resourceBytes(s"/pdf/$name")))

@@ -75,14 +75,13 @@ object WarcScan {
       spark.sparkContext.broadcast(kv)
     }
 
-  // Slice-index memo: the index of a landed folder is deterministic
-  // (crawl landings are immutable; the fixture folders are write-once
-  // per session), so the per-file streaming pass runs once per
-  // (session, folder, budget) — exactly the "sidecar index at landing"
-  // shape, held as a checkpointed frame (stays distributed: at 100 TB
-  // the index is ~corpusBytes/64Mi rows, never driver-collected).
+  // Slice-index memo: the index of a folder is a pure function of its
+  // files and the budget, so the per-file streaming pass runs once per
+  // folder state and budget — the "sidecar index at landing" shape, held
+  // as a checkpointed frame (stays distributed: at 100 TB the index is
+  // ~corpusBytes/64Mi rows, never driver-collected).
   private val idxMemo =
-    new graft.SessionMemo[(String, String, Long), DataFrame]("warc_index")
+    new graft.SessionMemo[graft.SessionMemos.DirKey, DataFrame]("warc_index")
 
   /** Index one file: stream member boundaries, coalesce into slices.
     * Non-gzip (or index-empty) input → one identity slice spanning the
@@ -115,8 +114,7 @@ object WarcScan {
     * slice, (path, slice_seq, offset, clen, ilen, identity). The
     * binaryFile listing reads only path+length (content pruned); the
     * resulting index (tiny: ~corpusBytes/budget rows) memoizes per
-    * (session, folder, budget) — folder contents are assumed immutable
-    * within a session, the landed-crawl contract. */
+    * folder state and budget. */
   def sliceIndex(spark: SparkSession, folder: String,
                  sliceBudget: Long = DefaultSliceBudget): DataFrame = {
     val bc = confBroadcast(spark)
@@ -129,13 +127,12 @@ object WarcScan {
         case ((off, cl, il, ident), i) => WarcSliceRow(path, i, off, cl, il, ident)
       }
     }
-    idxMemo.getOrCompute(
-      (spark.sparkContext.applicationId, folder, sliceBudget)) { _ =>
+    idxMemo.getOrLand(spark, folder, sliceBudget) {
       spark.read.format("binaryFile").load(folder)
         .select(col("path"), col("length"))
         .select(explode(indexUdf(col("path"), col("length"))).as("s"))
         .select(col("s.*"))
-        .localCheckpoint(false)
+        .transform(graft.Dist.durableCkpt)
     }
   }
 

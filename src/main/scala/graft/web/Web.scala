@@ -1,7 +1,7 @@
 package graft.web
 
 import graft.QueryDef
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Row shapes of the [[Web]] UDF kernels — top-level (not nested in the
@@ -144,7 +144,7 @@ object Web {
       Array[Byte](0x1f.toByte, 0x8b.toByte, 0x08, 0x1f, 0x55, 0x11, 0x22, 0x33)),
     "junk_w.warc" -> "this is not a warc file".getBytes(Iso))
 
-  /** The WARC fixture folder, landed once per (application, dir). */
+  /** The WARC fixture folder, landed once. */
   def warcFolder(spark: SparkSession, dir: String): String =
     graft.io.Layout.landFiles(spark, "warc_fixtures", dir)(fixtureFiles())
 
@@ -328,6 +328,32 @@ object Web {
 
   // ---------------------------------------------------- q208 url dedup
 
+  /** The messy spelling of doc `doc_id`'s URL that q208 and q212
+    * canonicalize: `doc_id div 8` picks the page and one of five hosts,
+    * `doc_id mod 8` one of eight spellings of it. */
+  private def messyUrl: Column = {
+    val base = expr("doc_id div 8")
+    val v = pmod(col("doc_id"), lit(8))
+    val hostIdx = pmod(base, lit(5))
+    val host0 = when(hostIdx === 0, "news.example.com")
+      .when(hostIdx === 1, "www.sample.co.uk")
+      .when(hostIdx === 2, "cdn.assets.example.com")
+      .when(hostIdx === 3, "shop.example.org")
+      .otherwise("data.gov.uk")
+    val item = concat(lit("/a/item"), base.cast("string"))
+    when(v === 0, concat(lit("https://"), host0, item))
+      .when(v === 1, concat(lit("HTTPS://"), upper(host0), item))
+      .when(v === 2, concat(lit("https://"), host0, lit(":443"), item))
+      .when(v === 3, concat(lit("https://"), host0, lit("/a/x/../item"),
+        base.cast("string")))
+      .when(v === 4, concat(lit("https://"), host0, item, lit("?utm_source=feed")))
+      .when(v === 5, concat(lit("https://"), host0, item, lit("#frag")))
+      .when(v === 6, concat(lit("https://"), host0,
+        regexp_replace(item, "item", "it%65m")))
+      .otherwise(concat(lit("https://"), host0, item,
+        lit("?id="), base.cast("string"), lit("&utm_medium=x")))
+  }
+
   /** q208: URL canonicalization at corpus scale — every `documents` row
     * synthesizes one messy-but-equivalent URL (eight documented
     * spelling variants by doc_id residue: host case, default port, dot
@@ -344,27 +370,7 @@ object Web {
     * hash. */
   def urlCanonical(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.documents(spark, dir)
-    val base = expr("doc_id div 8")
-    val v = pmod(col("doc_id"), lit(8))
-    val hostIdx = pmod(base, lit(5))
-    val host0 = when(hostIdx === 0, "news.example.com")
-      .when(hostIdx === 1, "www.sample.co.uk")
-      .when(hostIdx === 2, "cdn.assets.example.com")
-      .when(hostIdx === 3, "shop.example.org")
-      .otherwise("data.gov.uk")
-    val item = concat(lit("/a/item"), base.cast("string"))
-    val raw = when(v === 0, concat(lit("https://"), host0, item))
-      .when(v === 1, concat(lit("HTTPS://"), upper(host0), item))
-      .when(v === 2, concat(lit("https://"), host0, lit(":443"), item))
-      .when(v === 3, concat(lit("https://"), host0, lit("/a/x/../item"),
-        base.cast("string")))
-      .when(v === 4, concat(lit("https://"), host0, item, lit("?utm_source=feed")))
-      .when(v === 5, concat(lit("https://"), host0, item, lit("#frag")))
-      .when(v === 6, concat(lit("https://"), host0,
-        regexp_replace(item, "item", "it%65m")))
-      .otherwise(concat(lit("https://"), host0, item,
-        lit("?id="), base.cast("string"), lit("&utm_medium=x")))
-    docs.select(raw.as("raw"))
+    docs.select(messyUrl.as("raw"))
       .select(col("raw"), canonicalizeUdf(col("raw")).as("canon"),
         domainUdf(col("raw")).as("domain"))
       .groupBy(col("domain"))
@@ -529,7 +535,7 @@ object Web {
         w1252("<html><body><p>a’b…c</p></body></html>"))))
   }
 
-  /** The charset fixture folder, landed once per (application, dir). */
+  /** The charset fixture folder, landed once. */
   def charsetFolder(spark: SparkSession, dir: String): String =
     graft.io.Layout.landFiles(spark, "warc_charset", dir)(charsetFixtureFiles())
 
@@ -588,7 +594,7 @@ object Web {
     "<html><body><p>See <a href=\"/a/b\"><b>bold</b> link &amp; more</a> here.</p>" +
       "<a href='p3'>quoted single</a></body></html>"
 
-  /** The link-graph fixture folder, landed once per (application, dir).
+  /** The link-graph fixture folder, landed once.
     * It is kept apart from q206's folder, so q206's record census stays
     * untouched. */
   def linksFolder(spark: SparkSession, dir: String): String =
@@ -680,7 +686,7 @@ object Web {
       "junk_sm.xml" -> u8("this is not xml at all"))
   }
 
-  /** The sitemap fixture folder, landed once per (application, dir). */
+  /** The sitemap fixture folder, landed once. */
   def sitemapFolder(spark: SparkSession, dir: String): String =
     graft.io.Layout.landFiles(spark, "sitemap", dir)(sitemapFixtureFiles())
 
@@ -813,26 +819,7 @@ object Web {
     * offsets attach is the ≤ numParts−1-row boundary-spill frame. */
   def crawlFrontier(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.documents(spark, dir)
-    val base = expr("doc_id div 8")
-    val v = pmod(col("doc_id"), lit(8))
-    val hostIdx = pmod(base, lit(5))
-    val host0 = when(hostIdx === 0, "news.example.com")
-      .when(hostIdx === 1, "www.sample.co.uk")
-      .when(hostIdx === 2, "cdn.assets.example.com")
-      .when(hostIdx === 3, "shop.example.org")
-      .otherwise("data.gov.uk")
-    val item = concat(lit("/a/item"), base.cast("string"))
-    val raw = when(v === 0, concat(lit("https://"), host0, item))
-      .when(v === 1, concat(lit("HTTPS://"), upper(host0), item))
-      .when(v === 2, concat(lit("https://"), host0, lit(":443"), item))
-      .when(v === 3, concat(lit("https://"), host0, lit("/a/x/../item"),
-        base.cast("string")))
-      .when(v === 4, concat(lit("https://"), host0, item, lit("?utm_source=feed")))
-      .when(v === 5, concat(lit("https://"), host0, item, lit("#frag")))
-      .when(v === 6, concat(lit("https://"), host0,
-        regexp_replace(item, "item", "it%65m")))
-      .otherwise(concat(lit("https://"), host0, item,
-        lit("?id="), base.cast("string"), lit("&utm_medium=x")))
+    val raw = messyUrl
     val delay = when(col("domain") === "example.com", 2000L)
       .when(col("domain") === "sample.co.uk", 1000L)
       .when(col("domain") === "example.org", 5000L)

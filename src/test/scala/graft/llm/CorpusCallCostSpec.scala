@@ -34,6 +34,19 @@ class CorpusCallCostSpec extends SparkSpec {
     spark.sql(s"DROP TABLE $table")
   }
 
+  test("a warm landing hit on an unchanged dir starts no job and no SQL execution") {
+    def calls() = Seq(Similarity.landedRepPairs(spark, sfDir),
+      Layout.partitionedOrdersPath(spark, sfDir), graft.text.CorpusStats.bpeTrainMerges(spark, sfDir))
+    val cold = calls()
+    val f = footprint(calls())
+    assert(f.jobs == 0 && f.sqlExecutions == 0,
+      s"warm landing hits ran ${f.jobs} job(s) and ${f.sqlExecutions} SQL execution(s)")
+    val warm = calls()
+    assert(warm.head.asInstanceOf[AnyRef] eq cold.head.asInstanceOf[AnyRef],
+      "the memo built the pair frame again")
+    assert(warm.tail == cold.tail)
+  }
+
   test("a second q87 call runs at most 7 jobs, none before its query, and reads no checkpoint") {
     // a checkpoint dir makes a lineage cut a reliable checkpoint, as in
     // the benchmark's sessions
